@@ -34,7 +34,12 @@ object BitcoinEtl {
 
   /** Payload-shaped JSON directory → typed frames. The DSv2 source
     * already applies the reference's cleaning quirks (price-wins branch,
-    * hashrate server_ts := spider_ts, error rows for bad payloads). */
+    * hashrate server_ts := spider_ts, error rows for bad payloads).
+    *
+    * Both frames, and every action on them, see one file set: the
+    * directory is listed once, at the first action, and files landing
+    * after it are read only by a fresh ingest. A count followed by
+    * appendRaw of the same frame therefore agree. */
   def ingest(spark: SparkSession, payloadDir: String): RawTables = {
     val raw = spark.read.format("graft.sources.PayloadJsonSource")
       .option("path", payloadDir).load()

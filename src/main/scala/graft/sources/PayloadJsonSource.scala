@@ -6,6 +6,7 @@ import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -40,8 +41,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * newly-landed payload files and admits at most maxFilesPerTrigger of
   * them — the rate limit standing in for the reference's sleep cadence.
   *
-  * Scale: one input partition per chunk of files; each partition parses
-  * independently (no driver I/O beyond listing). Streaming offsets are
+  * Scale: a scan splits its sorted file list into contiguous input
+  * partitions, one per core — the leaf-node parallelism Spark's own file
+  * sources use (spark.sql.leafNodeDefaultParallelism, else the context's
+  * defaultParallelism) — and more only when a partition would exceed
+  * MaxFilesPerSplit files. Each partition parses independently (no driver
+  * I/O beyond listing), and a downstream write produces one file per
+  * partition. A loaded table lists its directory once, lazily, and every
+  * batch scan planned from it reuses that listing, so all frames derived
+  * from one load see one file set (as spark.read.parquet freezes its file
+  * index). Streaming offsets are
   * positions in the discovery order, so a batch replays identically from
   * its (start, end] offsets.
   */
@@ -64,8 +73,28 @@ object PayloadJsonSource {
     StructField("hashrate", LongType),
     StructField("difficulty", LongType)))
 
-  /** Files per input partition. */
-  val FilesPerSplit = 64
+  /** Most files one input partition reads. Bounds the task descriptor
+    * and what a retried task re-reads on a very large zone; below
+    * parallelism * MaxFilesPerSplit files the core count alone sets the
+    * split. */
+  private val MaxFilesPerSplit = 4096
+
+  /** Splits a sorted file list evenly into contiguous input partitions,
+    * in listing order with sizes differing by at most one:
+    * min(files, max(parallelism, ceil(files / MaxFilesPerSplit))) of them,
+    * where parallelism is the active session's leaf-node default, as
+    * Spark's file sources size their scans. */
+  private[sources] def split(files: Array[String]): Array[InputPartition] = {
+    val spark = SparkSession.active
+    val parallelism = spark.conf.getOption("spark.sql.leafNodeDefaultParallelism")
+      .map(_.toInt).getOrElse(spark.sparkContext.defaultParallelism)
+    val n = math.min(files.length,
+      math.max(parallelism, (files.length + MaxFilesPerSplit - 1) / MaxFilesPerSplit))
+    Array.tabulate[InputPartition](n) { i =>
+      PayloadPartition(files.slice(
+        (i.toLong * files.length / n).toInt, ((i + 1).toLong * files.length / n).toInt))
+    }
+  }
 
   /** Sorted listing of payload files under `path` (empty if absent). */
   private[sources] def listFiles(path: String): Array[String] = {
@@ -83,9 +112,14 @@ object PayloadJsonSource {
     }
 }
 
-private class PayloadTable(path: String)
+private class PayloadTable(val path: String)
     extends Table with SupportsRead {
   require(path != null, "PayloadJsonSource requires option 'path'")
+
+  /** The listing every batch scan of this table plans against, taken at
+    * the first one. */
+  lazy val files: Array[String] = PayloadJsonSource.listFiles(path)
+
   override def name(): String = s"payload_json($path)"
   override def schema(): StructType = PayloadJsonSource.schema
   override def capabilities(): java.util.Set[TableCapability] =
@@ -93,27 +127,25 @@ private class PayloadTable(path: String)
       TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder {
-      override def build(): Scan = new PayloadScan(path,
+      override def build(): Scan = new PayloadScan(PayloadTable.this,
         Option(options.get("maxFilesPerTrigger")).map(_.toInt))
     }
 }
 
-private class PayloadScan(path: String, maxFilesPerTrigger: Option[Int])
+private class PayloadScan(table: PayloadTable, maxFilesPerTrigger: Option[Int])
     extends Scan with Batch {
   override def readSchema(): StructType = PayloadJsonSource.schema
   override def toBatch: Batch = this
-  override def description(): String = s"PayloadJsonScan $path"
+  override def description(): String = s"PayloadJsonScan ${table.path}"
 
   override def planInputPartitions(): Array[InputPartition] =
-    PayloadJsonSource.listFiles(path)
-      .grouped(PayloadJsonSource.FilesPerSplit)
-      .map(fs => PayloadPartition(fs): InputPartition).toArray
+    PayloadJsonSource.split(table.files)
 
   override def createReaderFactory(): PartitionReaderFactory =
     PayloadJsonSource.readerFactory
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new PayloadMicroBatchStream(path, maxFilesPerTrigger)
+    new PayloadMicroBatchStream(table.path, maxFilesPerTrigger)
 }
 
 /** Offset = number of files admitted so far (position in discovery order)
@@ -244,12 +276,12 @@ private class PayloadMicroBatchStream(path: String, maxPerTrigger: Option[Int])
       start: Offset, end: Offset): Array[InputPartition] = synchronized {
     val so = start.asInstanceOf[PayloadOffset]
     val eo = end.asInstanceOf[PayloadOffset]
-    discover()
+    // latestOffset has just listed the zone; only a batch replayed after a
+    // restart ends beyond the names this instance knows
+    if (eo.n > names.length) discover()
     validate(so)
     validate(eo) // a replayed batch must map to the files it committed
-    val files = names.slice(so.n.toInt, eo.n.toInt).toArray
-    files.grouped(PayloadJsonSource.FilesPerSplit)
-      .map(fs => PayloadPartition(fs): InputPartition).toArray
+    PayloadJsonSource.split(names.slice(so.n.toInt, eo.n.toInt).toArray)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -259,7 +291,7 @@ private class PayloadMicroBatchStream(path: String, maxPerTrigger: Option[Int])
   override def stop(): Unit = ()
 }
 
-private case class PayloadPartition(files: Array[String]) extends InputPartition
+private[graft] case class PayloadPartition(files: Array[String]) extends InputPartition
 
 private class PayloadReader(files: Array[String])
     extends PartitionReader[InternalRow] {

@@ -168,6 +168,45 @@ class ApiSpec extends SparkTestBase {
     } finally q.stop()
   }
 
+  test("the frames of one ingest plan against one listing of the zone") {
+    val zone = Paths.get("target", "test-api-snapshot")
+    graft.Fs.deleteRecursively(zone)
+    Files.createDirectories(zone)
+    def price(name: String, usd: Long): Unit = Files.write(zone.resolve(name),
+      s"""{"spider_ts": $t0, "price_data": {"USD": $usd, "time": $t0}}"""
+        .getBytes(StandardCharsets.UTF_8))
+    price("p1.json", 50000L); price("p2.json", 50010L)
+    val t = BitcoinEtl.ingest(spark, zone.toString)
+    val n = t.price.count()
+    assert(n === 2L)
+    price("p3.json", 50020L) // lands after the first action of this ingest
+    assert(t.price.count() === n, "a later action of the same ingest sees the same files")
+    val out = "target/test-api-snapshot-out"
+    graft.Fs.deleteRecursively(Paths.get(out))
+    BitcoinEtl.appendRaw(t.price, out)
+    assert(spark.read.parquet(out).count() === n, "the append writes what was counted")
+    assert(BitcoinEtl.ingest(spark, zone.toString).price.count() === n + 1,
+      "a fresh ingest sees the new file")
+  }
+
+  test("appendRaw of a 300-payload zone writes at most one file per core per table") {
+    val zone = graft.sources.PayloadCorpus.ensure("test-api-smallfiles", 300)
+    val t = BitcoinEtl.ingest(spark, zone)
+    val out = Paths.get("target", "test-api-smallfiles-out")
+    graft.Fs.deleteRecursively(out)
+    for ((name, df) <- Seq("price" -> t.price, "hashrate" -> t.hashrate)) {
+      val n = df.count()
+      assert(n === 150L, name)
+      val dir = out.resolve(name).toString
+      BitcoinEtl.appendRaw(df, dir)
+      val parts = new java.io.File(dir).listFiles()
+        .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      assert(parts >= 1 && parts <= spark.sparkContext.defaultParallelism,
+        s"$name: $parts parquet files for $n rows")
+      assert(spark.read.parquet(dir).count() === n, name)
+    }
+  }
+
   test("raw and avg_info append sinks round-trip") {
     val t = BitcoinEtl.ingest(spark, dir)
     val out = "target/test-api-out"

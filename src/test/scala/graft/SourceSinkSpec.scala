@@ -19,6 +19,43 @@ class SourceSinkSpec extends SparkTestBase {
     assert(df.filter($"kind" === "price" && $"usd".isNull).count() === 0)
   }
 
+  test("payload batch scan plans one contiguous split per core over the sorted listing") {
+    import java.nio.file.{Files, Paths}
+    import java.nio.charset.StandardCharsets
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    def load(dir: String) = spark.read.format("graft.sources.PayloadJsonSource")
+      .option("path", dir).load()
+    def splits(dir: String): Seq[Seq[String]] =
+      load(dir).queryExecution.sparkPlan
+        .collectFirst { case b: BatchScanExec => b.inputPartitions }.get
+        .map(_.asInstanceOf[graft.sources.PayloadPartition].files.toSeq)
+    def listing(dir: String): Seq[String] = Files.list(Paths.get(dir))
+      .iterator().asScala.map(_.toString).filter(_.endsWith(".json")).toSeq.sorted
+
+    val zone = operators.SourceOps.materializePayloads(spark, sf)
+    val parts = splits(zone)
+    assert(listing(zone).size === 301)
+    assert(parts.size === 4, "one split per core of local[4]")
+    assert(parts.flatten === listing(zone),
+      "splits concatenated in partition order are the sorted listing, each file once")
+    assert(parts.map(_.size).max - parts.map(_.size).min <= 1, "even split")
+
+    val base = Paths.get("target", "test-split").toAbsolutePath
+    graft.Fs.deleteRecursively(base)
+    val small = base.resolve("small"); Files.createDirectories(small)
+    (0 until 3).foreach(i => Files.write(small.resolve(s"p_$i.json"),
+      s"""{"spider_ts": $i, "price_data": {"USD": 1, "time": $i}}"""
+        .getBytes(StandardCharsets.UTF_8)))
+    assert(splits(small.toString).map(_.size) === Seq(1, 1, 1),
+      "fewer files than cores: one file per split")
+    val empty = base.resolve("empty"); Files.createDirectories(empty)
+    for (dir <- Seq(empty, base.resolve("missing")).map(_.toString)) {
+      assert(splits(dir).isEmpty, dir)
+      assert(load(dir).count() === 0L, dir)
+    }
+  }
+
   test("payload MicroBatchStream equals the batch scan and rate-limits per trigger") {
     val stream = q("q_stream_source_payload")
       .select($"kind", $"spider_ts", $"usd", $"server_ts", $"hashrate", $"difficulty")
