@@ -2,13 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev harness: run ONE declared query (or a named stress extra) against
-  * an arbitrary fixture dir and print wall time, row count, and — with
-  * SPARK_GRAFT_EXPLAIN=1 — the formatted physical plan. The full Bench /
-  * BenchStress mains take minutes to reach a single hot query; this is
-  * the iteration loop for diagnosing one query's plan or straggler.
+/** Dev harness: run ONE declared query against an arbitrary fixture dir
+  * and print wall time, row count, and — with SPARK_GRAFT_EXPLAIN=1 —
+  * the formatted physical plan. Verify dumps every declared query and
+  * perfbench times whole workloads; this is the iteration loop for
+  * diagnosing one query's plan or straggler.
   *
-  *   sbt "runMain graft.RunOne q_dedup_ngram_jaccard target/stress/sf0.1x10"
+  *   sbt "runMain graft.RunOne q_dedup_ngram_jaccard path/to/sf0.1"
   */
 object RunOne {
   def main(args: Array[String]): Unit = {
@@ -23,14 +23,8 @@ object RunOne {
       .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val fn: (SparkSession, String) => org.apache.spark.sql.DataFrame =
-      SparkEntry.queries.getOrElse(name, name match {
-        case "x_ngram_direct" =>
-          (s, d) => operators.DedupOps.ngramJaccardPairs(s, d, prefixFilter = false)
-        case "x_ngram_prefix_filter" =>
-          (s, d) => operators.DedupOps.ngramJaccardPairs(s, d, prefixFilter = true)
-        case other => sys.error(s"unknown query: $other")
-      })
+    val fn = SparkEntry.queries.getOrElse(name,
+      sys.error(s"unknown query: $name"))
     val df = fn(spark, dir)
     val t0 = System.nanoTime()
     val n = df.count()

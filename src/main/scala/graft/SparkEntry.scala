@@ -32,51 +32,19 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     CoreOps.flagship(spark, "/root/testdata/sf0.001")
 
-  private val dirBytesMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private def dirBytes(d: String): Long =
-    dirBytesMemo.computeIfAbsent(d, p => {
-      val root = java.nio.file.Paths.get(p)
-      if (!java.nio.file.Files.isDirectory(root)) 0L
-      else {
-        val st = java.nio.file.Files.walk(root)
-        try {
-          import scala.jdk.CollectionConverters._
-          st.iterator().asScala
-            .filter(java.nio.file.Files.isRegularFile(_))
-            .map(java.nio.file.Files.size).sum
-        } finally st.close()
-      }
-    }).longValue
-
-  /** Scale-adaptive BATCH shuffle-partition default, derived from the
-    * corpus byte size exactly as the stream side's
-    * `streamPartitionsFor` derives it from its landing zone (r17,
-    * VERDICT r16 task 5; guide §2.2: size reduce partitions by data,
-    * not by a constant tuned for one machine): one partition per
-    * ~16 MB of corpus, floor 4, cap 512, `SPARK_GRAFT_SHUFFLE_PARTS`
-    * override. At sf0.1 (17.5 MB) this is 4 where the harness default
-    * was the core count — the 8-core driver bench beating the 32-core
-    * run on every query showed the sub-second tail was paying pure
-    * per-task scheduling overhead; at a TB-scale corpus the same rule
-    * yields hundreds of partitions. CPU-BOUND stage widths are NOT
-    * tied to this: the pair-verify kernels pin their width to
-    * max(this, defaultParallelism) (DedupOps/PairStreams), so compute
-    * stages keep machine-width parallelism at any corpus size.
-    * Declared results are partition-count invariant (every query's
-    * output is sorted/aggregated), re-proven by the full oracle run. */
-  private[graft] def batchShufflePartitions(d: String): Int =
-    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTS").map(_.toInt).getOrElse(
-      math.max(4L, math.min(512L,
-        (dirBytes(d) + (16L << 20) - 1) / (16L << 20))).toInt)
-
   /** One entry per implemented operator from SURVEY.md §2. Each call
     * applies the scale-adaptive shuffle-partition default for the
-    * query's corpus before building the plan. */
+    * query's corpus ([[Fs.partitionsFor]]) before building the plan. At
+    * sf0.1 (17.5 MB) this is 4 where the core count was the default:
+    * the sub-second tail paid pure per-task scheduling overhead. CPU-
+    * bound stage widths are NOT tied to it: the pair-verify kernels pin
+    * their width to max(this, defaultParallelism) (DedupOps/PairStreams).
+    * Declared results are partition-count invariant (every query's
+    * output is sorted/aggregated). */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> ((s: SparkSession, d: String) => {
       s.conf.set("spark.sql.shuffle.partitions",
-        batchShufflePartitions(d).toString)
+        Fs.partitionsFor(d).toString)
       q.fn(s, d)
     })).toMap
 

@@ -15,8 +15,8 @@ object Tables {
     * (r17, guide §6): `spark.read.parquet` without a schema runs a
     * footer-sampling schema-inference driver job on EVERY call — one
     * per base-table reference per query invocation across the whole
-    * declared surface (ProfJobs showed a 20–70 ms `parquet at
-    * Tables.scala` job in nearly every profile), and at a large
+    * declared surface (a per-job profile showed a 20–70 ms `parquet at
+    * Tables.scala` job in nearly every query), and at a large
     * multi-file table it is a full listing+footer pass. The mtime+size
     * key re-infers if the driver regenerates the corpus under a live
     * JVM; within a JVM the fixture files are immutable. */

@@ -24,7 +24,7 @@ import org.apache.spark.sql.types._
   * partition. For `q_simsearch_cosine` at the 10× stress scale that stream
   * is |queries| × |corpus| ≈ 400M rows; the sort (and its spill once the
   * partition outgrows execution memory) dominated the query's heavy-tail
-  * draws (5.7–160 s, BENCH_NOTES round 8). With this aggregate the same
+  * draws (5.7–160 s, round-8 bench notes). With this aggregate the same
   * query keeps exactly k candidates per (group, partition) in constant
   * memory — the scored stream is consumed on the fly by the map-side
   * partial aggregate, the exchange carries (groups × partitions × k) rows,

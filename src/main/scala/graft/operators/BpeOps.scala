@@ -403,44 +403,6 @@ object BpeOps extends QueryPack {
   private[graft] def subwordIdRows(s: SparkSession, d: String)
       : DataFrame = subwordIdsOf(s, d, Tables.documents(s, d))
 
-  /** The (tok, tid) subword-ID vocabulary rows, computed once per
-    * (application, corpus, fixture stamp) — r16 optimization. The
-    * previous form re-derived the vocab INSIDE every consumer plan
-    * (explode + aggregate + sort + limit + one-partition window over
-    * the dict relation, re-executed per tokenize call: the stream
-    * pipelines tokenize per MICRO-BATCH, the forgets per rewrite). The
-    * vocabulary is deterministic tokenizer state — rank by
-    * (corpus-weighted frequency DESC, tok); the tie-break DELIBERATELY
-    * executes as a Spark plan (UTF8String binary comparison — the
-    * UTF-8-byte order DuckDB shares; a driver-side Scala String sort
-    * would compare UTF-16 code units and diverge on supplementary
-    * characters), collected once (vocab-sized, the MaxDictWords class).
-    * Same memo class (driver-local, corpus-stamped) as [[learnBpe]].
-    * Since the r16 map composition, [[tidDictRows]] is the ONLY
-    * consumer — this memo exists solely as its ingredient (the (tok,
-    * tid) rows never re-enter a Spark plan); kept separate because the
-    * tie-break must still execute as a Spark plan (above). */
-  private val vocabMemo =
-    new graft.Memo.Bounded[(String, String, String), Seq[(String, Int)]](
-      cap = 4, onEvict = _ => ())
-  private def vocabRows(s: SparkSession, d: String): Seq[(String, Int)] = {
-    import s.implicits._
-    vocabMemo.getOrElseUpdate((s.sparkContext.applicationId, d,
-      graft.FixtureStamp.stamp("bpe1", d, "documents"))) {
-      val (_, dictTok) = learnBpe(s, d)
-      // subword vocab: corpus-weighted token frequency (Σ word-freq
-      // over occurrences), rank desc with lexicographic tie-break
-      dictTok
-        .select(explode($"toks").as("tok"), $"freq")
-        .groupBy($"tok").agg(sum($"freq").as("cnt"))
-        .orderBy($"cnt".desc, $"tok").limit(VocabSize)
-        .withColumn("tid", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .orderBy($"cnt".desc, $"tok")))
-        .select($"tok", $"tid").as[(String, Int)].collect().toSeq
-    }
-  }
-
   /** word → ordered subword-ID array, the two tokenizer maps (word →
     * toks, tok → tid) COMPOSED driver-side once per (application,
     * corpus, fixture stamp) — r16, guide §1.2 step 2 (per-task work):
@@ -452,7 +414,16 @@ object BpeOps extends QueryPack {
     * one vocab-sized pass at memo-fill time and removes the per-
     * subword-row probe (and one broadcast build) from every consumer
     * plan. OOV subwords map to id 0, exactly the left-join coalesce
-    * this replaces. */
+    * this replaces.
+    *
+    * The (tok → tid) vocabulary is derived inside the same fill: rank
+    * by (corpus-weighted frequency DESC, tok), top [[VocabSize]]. The
+    * tie-break DELIBERATELY executes as a Spark plan (UTF8String binary
+    * comparison — the UTF-8-byte order DuckDB shares; a driver-side
+    * Scala String sort would compare UTF-16 code units and diverge on
+    * supplementary characters), collected once (vocab-sized, the
+    * MaxDictWords class). It has no consumer but this composition, so
+    * it needs no memo of its own. */
   private val tidDictMemo =
     new graft.Memo.Bounded[(String, String, String), Seq[(String, Seq[Int])]](
       cap = 4, onEvict = _ => ())
@@ -461,7 +432,16 @@ object BpeOps extends QueryPack {
     tidDictMemo.getOrElseUpdate((s.sparkContext.applicationId, d,
       graft.FixtureStamp.stamp("bpe1", d, "documents"))) {
       val (_, dictTok) = learnBpe(s, d)
-      val vmap = vocabRows(s, d).toMap
+      // subword vocab: corpus-weighted token frequency (Σ word-freq
+      // over occurrences), rank desc with lexicographic tie-break
+      val vmap = dictTok
+        .select(explode($"toks").as("tok"), $"freq")
+        .groupBy($"tok").agg(sum($"freq").as("cnt"))
+        .orderBy($"cnt".desc, $"tok").limit(VocabSize)
+        .withColumn("tid", row_number().over(
+          org.apache.spark.sql.expressions.Window
+            .orderBy($"cnt".desc, $"tok")))
+        .select($"tok", $"tid").as[(String, Int)].collect().toMap
       dictTok.select($"word", $"toks").as[(String, Seq[String])]
         .collect().toSeq // vocab-sized LocalRelation — a driver-only job
         .map { case (w, toks) => (w, toks.map(vmap.getOrElse(_, 0))) }

@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   *
   * Everything is one Catalyst plan: the gates are pushed filters, the
   * dedups are shuffle-on-key joins/aggregations, and the final stats is
-  * a map-side-combined aggregation — the same shapes already audited in
-  * PLANS.md, composed.
+  * a map-side-combined aggregation — the same shapes the round-1
+  * physical-plan audit covered, composed.
   */
 object CleanPipelineOps extends QueryPack {
 

@@ -302,7 +302,7 @@ object DedupOps extends QueryPack {
         // one shuffle but forced a FULL SORT of the posting stream by
         // shingle, and a second full sort computed per-doc sizes — the
         // two biggest spill surfaces behind this stage's documented
-        // 10×-stress GC lottery (BENCH_NOTES r10/r11: 26–91 s band).
+        // 10×-stress GC lottery (r10/r11 bench notes: 26–91 s band).
         // The df table is vocabulary-sized; the back-join is hash-only
         // (no sort), and the SHUFFLE_HASH hint pins the df side as the
         // build side so the misestimable posting stream never builds —
@@ -474,8 +474,8 @@ object DedupOps extends QueryPack {
     // subset of the direct stream's, which is what survives real df skew
     // (see the strategy scaladoc — on the current kernel the 10×
     // head-to-head actually favors direct, 19.5 s vs 38.9 s, but the
-    // asymptotic argument owns the default; the stress artifact keeps
-    // BOTH measured: x_ngram_direct / x_ngram_prefix_filter). Since
+    // asymptotic argument owns the default; both strategies stay
+    // callable through DedupOps.ngramJaccardPairs(prefixFilter)). Since
     // round 9 the declared query reads the SHARED materialized pair set
     // and only adds the presentation sort + double cast.
     (s, d) => {

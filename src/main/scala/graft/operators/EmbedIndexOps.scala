@@ -327,7 +327,7 @@ object EmbedIndexOps extends QueryPack {
       StructField("vec_id", LongType),
       StructField("embedding", ArrayType(FloatType))))
     graft.streaming.StreamingOps.withStreamPartitions(s,
-      graft.streaming.StreamingOps.streamPartitionsFor(dir)) { ss =>
+      graft.Fs.partitionsFor(dir)) { ss =>
       val q = ss.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .option("latestFirst", "false")

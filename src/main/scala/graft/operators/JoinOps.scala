@@ -188,8 +188,8 @@ object JoinOps extends QueryPack {
   /** Ensure a bucketed table exists for this scale factor; returns its
     * name. The name is derived from the sf dir, so different fixtures
     * never collide, and an existing table is REUSED (the fixture input is
-    * immutable) — table setup is paid once (Bench's warm-up pass), not on
-    * every timed run. A stale directory left by a crashed run is cleared
+    * immutable) — table setup is paid once per warehouse, not on every
+    * timed run. A stale directory left by a crashed run is cleared
     * via the session's resolved warehouse path before the rewrite. */
   private[graft] def bucketedTable(s: SparkSession, d: String, base: String,
       write: => org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row]): String = {

@@ -863,7 +863,7 @@ object MultimodalOps extends QueryPack {
       org.apache.spark.sql.types.StructField("text",
         org.apache.spark.sql.types.StringType)))
     graft.streaming.StreamingOps.withStreamPartitions(s,
-      graft.streaming.StreamingOps.streamPartitionsFor(dir)) { ss =>
+      graft.Fs.partitionsFor(dir)) { ss =>
       val q = ss.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .option("latestFirst", "false")
@@ -945,8 +945,8 @@ object MultimodalOps extends QueryPack {
       // Shared frames are built ONCE and — r17 — materialized EAGERLY
       // (cache + count): the r16 one-action broadcast fan-out raced the
       // LAZY cache fills, so the heaviest shared subtrees computed
-      // twice concurrently (ProfJobs: two ~2 s duplicate jobs per
-      // invocation). The INDEX side now reads the stamped serving-index
+      // twice concurrently (a per-job profile showed two ~2 s duplicate
+      // jobs per invocation). The INDEX side now reads the stamped serving-index
       // artifact (VERDICT r16 task 2: share the encode subtree with the
       // serving index) — the same deterministic encode+hash chain,
       // hash-audited end-to-end by q_simsearch_media_index; the probe

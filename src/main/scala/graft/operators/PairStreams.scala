@@ -25,8 +25,8 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * multi-GB aggregation buffer in one task. The first round-9 cut
   * enforced the ceiling with contiguous rank blocks from a
   * count+row_number window, but the window's full sort of the posting
-  * stream cost ~4× the whole kernel at 10× stress (x_ngram_direct
-  * 26 s → 122 s). The current kernel assigns each posting a
+  * stream cost ~4× the whole kernel at 10× scale (the direct n-gram
+  * join, 26 s → 122 s). The current kernel assigns each posting a
   * DETERMINISTIC hash subgroup (xxhash64(id) mod ⌈df/cap⌉) before any
   * aggregation — no sort, no full-list buffer: per-bucket collect_lists
   * hold ~cap postings in expectation (hash concentration; the spec
@@ -85,9 +85,9 @@ object PairStreams {
     // df per key via a keyed aggregation + SHJ back-join (the count
     // relation is one row per distinct key; the hint keeps IT the build
     // side). NOT a window: count+row_number over the key partition
-    // forces a full sort of the posting stream, which at 10× stress
-    // cost ~4× the whole kernel (the round-9 first cut measured
-    // x_ngram_direct 26 s → 122 s before this was replaced).
+    // forces a full sort of the posting stream, which at 10× scale
+    // cost ~4× the whole kernel (the round-9 first cut measured the
+    // direct n-gram join 26 s → 122 s before this was replaced).
     val dfCounts = keyed.groupBy(keyCols: _*).agg(count(lit(1)).as("_df"))
     // hash subgroups instead of contiguous rank blocks: deterministic
     // g = xxhash64(id) mod ⌈df/cap⌉, assigned WITHOUT sorting. Group
@@ -141,7 +141,7 @@ object PairStreams {
 
   // floored at machine parallelism (r17): the pair kernel's stages are
   // compute-bound, and the session shuffle default is now derived from
-  // corpus BYTES (SparkEntry.batchShufflePartitions) — see
+  // corpus BYTES (Fs.partitionsFor) — see
   // DedupOps.verifyParallelism for the argument
   private def numShufflePartitions(df: DataFrame): Int =
     math.max(df.sparkSession.sparkContext.defaultParallelism,

@@ -65,9 +65,9 @@ object ShardOps extends QueryPack {
   /** Width for the pack's per-shard sort window (r17): the stage is
     * SORT-bound per shard, not byte-bound, so it must not narrow with
     * the corpus-byte-derived session shuffle default
-    * (SparkEntry.batchShufflePartitions) — the 10× stress measured the
-    * shard builds +15–60% when the 16-shard window ran on 11
-    * byte-derived partitions. Same convention as
+    * (Fs.partitionsFor) — on sf0.1 replicated 10× the shard builds ran
+    * +15–60% slower when the 16-shard window ran on 11 byte-derived
+    * partitions. Same convention as
     * DedupOps.verifyParallelism: floor at machine parallelism. The
     * explicit repartition below satisfies the window's clustered
     * distribution, so it adds no extra exchange. */
@@ -601,28 +601,6 @@ object ShardOps extends QueryPack {
           .filter(pairs.groupBy(_._2).map { case (g, ps) =>
             col("gen") === g && col("shard").isin(ps.map(_._1): _*)
           }.reduce(_ || _))))
-  }
-
-  /** Stress-only blast-radius variant (BenchStress `x_shard_forget_*`):
-    * same build + forget pipeline as the declared query but with a
-    * caller-chosen delete set, on its own store dir. Three points pin
-    * the proportional-cost claim at 10×: the declared query's fixture
-    * rule hits EVERY (shard, gen) partition (the bound's worst case —
-    * a ~full 2× re-pack); `doc_id % NShards == 3` hits exactly the two
-    * partitions of one shard (2/16 of the re-pack); `false` hits zero
-    * (build + manifest reads only — the shared fixed cost). */
-  private[graft] def forgetVariant(s: SparkSession, d: String,
-      pred: org.apache.spark.sql.Column): DataFrame = {
-    import s.implicits._
-    val dir = graft.streaming.StreamingOps
-      .indexArtifactDir("shard_forget_x", d).toString
-    val ids = taggedIds(s, d).localCheckpoint() // one tokenize pass (r16)
-    buildAppendStoreTo(s, d, dir, ids)
-    forgetDocs(s, d, dir, pred, Some(ids))
-    graft.Memo.releaseLocalCheckpoint(ids)
-    s.read.parquet(dir)
-      .select($"shard".cast("long").as("shard"),
-        $"gen".cast("long").as("gen"), $"seq_idx", $"n_ids")
   }
 
   private val shardForget = QueryDef(

@@ -48,7 +48,7 @@ object SimilarityOps extends QueryPack {
     * shuffled, or spilled. The previous two-phase rank-window formulation
     * sorted the full |queries| × |corpus| stream inside each task; at the
     * 10× stress scale (400M scored rows) that sort's spill was the whole
-    * query's GC lottery (5.7–160 s draws, BENCH_NOTES round 8). */
+    * query's GC lottery (5.7–160 s draws, round-8 bench notes). */
   private[graft] def exactTopK(s: SparkSession, d: String): DataFrame = {
       import s.implicits._
       import graft.functions.ScaledDot.{decimal_scale6, scaled_dot}

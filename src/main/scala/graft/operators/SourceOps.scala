@@ -114,7 +114,7 @@ object SourceOps extends QueryPack {
       import s.implicits._
       val dir = materializePayloads(s, d)
       graft.streaming.StreamingOps.withStreamPartitions(s,
-      graft.streaming.StreamingOps.streamPartitionsFor(dir)) { ss =>
+      graft.Fs.partitionsFor(dir)) { ss =>
         val q = ss.readStream.format("graft.sources.PayloadJsonSource")
           .option("path", dir)
           .option("maxFilesPerTrigger", "64") // ~5 micro-batches per sf

@@ -106,38 +106,6 @@ object StreamingOps extends QueryPack {
     finally ckpt.foreach(graft.Fs.deleteRecursively)
   }
 
-  /** Scale-adaptive stream shuffle-partition count for a bounded
-    * landing zone (r16, guide §2: derive partitioning from input size
-    * rather than a constant tuned for either local mode or the
-    * cluster). A stateful micro-batch pays per-PARTITION fixed costs —
-    * state-store open/commit and offset bookkeeping per partition per
-    * batch — so the partition count should track the zone's data
-    * volume: one partition per ~16 MB of zone bytes (the small-state
-    * analog of AQE's advisoryPartitionSizeInBytes), floored at 4
-    * (measured knee on the fixture zones: 8 → 4 cut the stateful
-    * families' per-batch overhead ~19%, 4 → 2 was flat) and capped at
-    * 512; `SPARK_GRAFT_STREAM_PARTS` overrides for explicit tuning. At
-    * a production TB-scale zone the same rule yields hundreds of
-    * partitions. Declared results are invariant to this value — every
-    * consumer's output is re-sorted and replay-collapsed. */
-  private[graft] def streamPartitionsFor(zone: String): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTS").map(_.toInt).getOrElse {
-      val root = java.nio.file.Paths.get(zone)
-      val bytes =
-        if (!java.nio.file.Files.isDirectory(root)) 0L
-        else {
-          val st = java.nio.file.Files.walk(root)
-          try {
-            import scala.jdk.CollectionConverters._
-            st.iterator().asScala
-              .filter(java.nio.file.Files.isRegularFile(_))
-              .map(java.nio.file.Files.size).sum
-          } finally st.close()
-        }
-      math.max(4L, math.min(512L, (bytes + (16L << 20) - 1) / (16L << 20)))
-        .toInt
-    }
-
   /** Per-run scratch checkpoint root for queries that must pass an
     * EXPLICIT checkpointLocation (file sinks, the statestore-reader
     * pair): RAM-backed when the host has one, disk fallback otherwise
@@ -245,7 +213,7 @@ object StreamingOps extends QueryPack {
       val rawSchema = Tables.rawEvents(s, d).schema
       // file stream source requires a directory: stream the sf dir with a
       // glob filter so only the events table is picked up
-      withStreamPartitions(s, streamPartitionsFor(d),
+      withStreamPartitions(s, graft.Fs.partitionsFor(d),
         Seq("spark.sql.legacy.parquet.nanosAsLong" -> "true")) { ss =>
         val q = Tables.normalizeTs(ss.readStream.schema(rawSchema)
           .option("pathGlobFilter", "events.parquet").parquet(d))
@@ -325,7 +293,7 @@ object StreamingOps extends QueryPack {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("value",
           org.apache.spark.sql.types.DoubleType)))
-      withStreamPartitions(s, streamPartitionsFor(dir)) { ss =>
+      withStreamPartitions(s, graft.Fs.partitionsFor(dir)) { ss =>
         val q = ss.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1")
           .option("latestFirst", "false")
@@ -412,7 +380,7 @@ object StreamingOps extends QueryPack {
     (s, d) => {
       import s.implicits._
       val dir = streamInputDir(s, d)
-      withStreamPartitions(s, streamPartitionsFor(dir)) { ss =>
+      withStreamPartitions(s, graft.Fs.partitionsFor(dir)) { ss =>
         val q = chainedStream(ss, dir)
           .writeStream.format("memory").queryName("graft_stream_chained")
           .outputMode("append")
@@ -467,7 +435,7 @@ object StreamingOps extends QueryPack {
         state.update(UserState(n, cents))
         Iterator.single((uid, n, cents))
       }
-      withStreamPartitions(s, streamPartitionsFor(dir)) { ss =>
+      withStreamPartitions(s, graft.Fs.partitionsFor(dir)) { ss =>
         import ss.implicits._
         val q = ss.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(dir)
@@ -585,7 +553,7 @@ object StreamingOps extends QueryPack {
       val schema = StructType(Seq(
         StructField("ts", TimestampType), StructField("user_id", LongType),
         StructField("value", DoubleType)))
-      withStreamPartitions(s, streamPartitionsFor(dir),
+      withStreamPartitions(s, graft.Fs.partitionsFor(dir),
         Seq("spark.sql.streaming.stateStore.providerClass" ->
           ("org.apache.spark.sql.execution.streaming.state." +
             "RocksDBStateStoreProvider"))) { ss =>
@@ -628,7 +596,7 @@ object StreamingOps extends QueryPack {
         StructField("ts", TimestampType), StructField("user_id", LongType),
         StructField("value", DoubleType)))
       // transformWithState refuses the default heap-backed provider
-      withStreamPartitions(s, streamPartitionsFor(dir),
+      withStreamPartitions(s, graft.Fs.partitionsFor(dir),
         Seq("spark.sql.streaming.stateStore.providerClass" ->
           ("org.apache.spark.sql.execution.streaming.state." +
             "RocksDBStateStoreProvider"))) { ss =>
@@ -713,7 +681,7 @@ object StreamingOps extends QueryPack {
       val schema = StructType(Seq(
         StructField("ts", TimestampType), StructField("user_id", LongType),
         StructField("value", DoubleType)))
-      withStreamPartitions(s, streamPartitionsFor(dir)) { ss =>
+      withStreamPartitions(s, graft.Fs.partitionsFor(dir)) { ss =>
         val q = ss.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(dir)
           .withColumn("minute_bucket",
@@ -779,7 +747,7 @@ object StreamingOps extends QueryPack {
       val schema = StructType(Seq(
         StructField("event_id", LongType), StructField("ts", TimestampType),
         StructField("user_id", LongType), StructField("event_type", StringType)))
-      withStreamPartitions(s, streamPartitionsFor(dir)) { ss =>
+      withStreamPartitions(s, graft.Fs.partitionsFor(dir)) { ss =>
         def side(et: String, p: String): DataFrame =
           ss.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1").parquet(dir)
@@ -826,7 +794,7 @@ object StreamingOps extends QueryPack {
         StructField("value", DoubleType)))
       val dim = Tables.nation(s, d)
         .select($"n_nationkey".cast("long").as("nkey"), $"n_name")
-      withStreamPartitions(s, streamPartitionsFor(dir)) { ss =>
+      withStreamPartitions(s, graft.Fs.partitionsFor(dir)) { ss =>
         val q = ss.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(dir)
           .filter($"user_id" >= 0)
@@ -873,7 +841,7 @@ object StreamingOps extends QueryPack {
       val schema = StructType(Seq(
         StructField("ts", TimestampType), StructField("user_id", LongType),
         StructField("value", DoubleType)))
-      withStreamPartitions(s, streamPartitionsFor(dir)) { ss =>
+      withStreamPartitions(s, graft.Fs.partitionsFor(dir)) { ss =>
         val q = ss.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(dir)
           .writeStream
@@ -922,7 +890,7 @@ object StreamingOps extends QueryPack {
       val schema = StructType(Seq(
         StructField("ts", TimestampType), StructField("user_id", LongType),
         StructField("value", DoubleType)))
-      withStreamPartitions(s, streamPartitionsFor(dir)) { ss =>
+      withStreamPartitions(s, graft.Fs.partitionsFor(dir)) { ss =>
         val q = ss.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(dir)
           .filter($"user_id" >= 0)
@@ -990,7 +958,7 @@ object StreamingOps extends QueryPack {
         org.apache.spark.sql.types.StructField("source",
           org.apache.spark.sql.types.StringType)))
       val (n, raw) = graft.operators.TextOps.modelRawScore($"text")
-      withStreamPartitions(s, streamPartitionsFor(dir)) { ss =>
+      withStreamPartitions(s, graft.Fs.partitionsFor(dir)) { ss =>
         val q = ss.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1")
           .option("latestFirst", "false")
@@ -1085,7 +1053,7 @@ object StreamingOps extends QueryPack {
           org.apache.spark.sql.types.StringType),
         org.apache.spark.sql.types.StructField("source",
           org.apache.spark.sql.types.StringType)))
-      withStreamPartitions(s, streamPartitionsFor(dir)) { ss =>
+      withStreamPartitions(s, graft.Fs.partitionsFor(dir)) { ss =>
         val q = ss.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(dir)
@@ -1250,7 +1218,7 @@ object StreamingOps extends QueryPack {
       val outPath = indexArtifactDir("stream_anomaly_out", d)
       graft.Fs.deleteRecursively(outPath)
       val ckPath = scratchCheckpointDir("stream_anomaly_ck", d)
-      withStreamPartitions(s, streamPartitionsFor(dir)) { ss =>
+      withStreamPartitions(s, graft.Fs.partitionsFor(dir)) { ss =>
         val q = ss.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(dir)
           .withWatermark("ts", "10 minutes")
@@ -1375,7 +1343,7 @@ object StreamingOps extends QueryPack {
       val schema = StructType(Seq(
         StructField("doc_id", LongType),
         StructField("text", StringType)))
-      withStreamPartitions(s, streamPartitionsFor(dir)) { ss =>
+      withStreamPartitions(s, graft.Fs.partitionsFor(dir)) { ss =>
         val q = ss.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(dir)
           .select($"doc_id",
@@ -1471,7 +1439,7 @@ object StreamingOps extends QueryPack {
       // EVICTS every closed window from state — the snapshot we came to
       // inspect. With them off, batch 0's state (watermark still 0,
       // nothing evicted, nothing emitted) is the complete aggregate set.
-      withStreamPartitions(s, streamPartitionsFor(dir),
+      withStreamPartitions(s, graft.Fs.partitionsFor(dir),
           Seq("spark.sql.streaming.noDataMicroBatches.enabled" ->
             "false")) { ss =>
         val q = ss.readStream.schema(schema).parquet(dir)
@@ -1563,7 +1531,7 @@ object StreamingOps extends QueryPack {
         StructField("ts", TimestampType),
         StructField("event_type", StringType),
         StructField("value", DoubleType)))
-      withStreamPartitions(s, streamPartitionsFor(dir),
+      withStreamPartitions(s, graft.Fs.partitionsFor(dir),
           Seq("spark.sql.streaming.noDataMicroBatches.enabled" ->
             "false")) { ss =>
         val q = ss.readStream.schema(schema)
@@ -1821,7 +1789,7 @@ object StreamingOps extends QueryPack {
       val schema = StructType(Seq(
         StructField("doc_id", LongType), StructField("text", StringType)))
       val (n, raw) = graft.operators.TextOps.modelRawScore($"text")
-      withStreamPartitions(s, streamPartitionsFor(dir)) { ss =>
+      withStreamPartitions(s, graft.Fs.partitionsFor(dir)) { ss =>
         val q = ss.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1")
           .option("latestFirst", "false")
@@ -1906,7 +1874,7 @@ object StreamingOps extends QueryPack {
       val outPath = indexArtifactDir("stream_schema_evo_out", d)
       graft.Fs.deleteRecursively(outPath)
       val out = outPath.toString
-      withStreamPartitions(s, streamPartitionsFor(dir)) { ss =>
+      withStreamPartitions(s, graft.Fs.partitionsFor(dir)) { ss =>
         val q = ss.readStream
           .schema(graft.operators.SourceOps.evo2Schema)
           .option("maxFilesPerTrigger", "1")
@@ -2003,7 +1971,7 @@ object StreamingOps extends QueryPack {
       val schema = StructType(Seq(
         StructField("doc_id", LongType), StructField("text", StringType)))
       val (n, raw) = graft.operators.TextOps.modelRawScore(col("text"))
-      withStreamPartitions(s, streamPartitionsFor(dir)) { ss =>
+      withStreamPartitions(s, graft.Fs.partitionsFor(dir)) { ss =>
         val q = ss.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1")
           .option("latestFirst", "false")
@@ -2086,7 +2054,7 @@ object StreamingOps extends QueryPack {
     * call). Deterministic tokenizer/gate state per corpus, so it is
     * localCheckpointed once per (application, corpus, fixture stamp) —
     * the same bounded-memo discipline as [[streamPipelineStore]] /
-    * BpeOps.vocabMemo (checkpoint blocks released on eviction; nothing
+    * BpeOps.tidDictMemo (checkpoint blocks released on eviction; nothing
     * persists across JVMs). The UNCACHED gate + tokenize cost stays on
     * the declared surface: q_stream_pipeline(_neardup) run the gates
     * inline per micro-batch and q_text_bpe_ids times the tokenize. */
@@ -2300,7 +2268,7 @@ object StreamingOps extends QueryPack {
   }
 
   /** Build-copy-forget on a caller-chosen delete set (the declared
-    * query and the BenchStress blast-radius variants share it). */
+    * query and StreamStoreForgetSpec's single-shard delete set share it). */
   private[graft] def forgetStreamVariant(s: SparkSession, d: String,
       kind: String, pred: org.apache.spark.sql.Column): DataFrame = {
     import s.implicits._
@@ -2446,8 +2414,8 @@ object StreamingOps extends QueryPack {
   // never merged); re-pack write is bounded by |window| + one tail
   // row per shard. Per-cycle compact cost is FLAT as cycles
   // accumulate — pinned by StreamStoreCompactSpec's 3-cycle test
-  // (earlier merges byte-identical) and the BenchStress cycle
-  // decomposition.
+  // (earlier merges byte-identical) and, when the cycles were timed
+  // one by one at 10× scale, a flat per-cycle cost.
 
   /** Merged generations live at CompactedGenBase + k, k = the highest
     * batch id that merge covers — outside any plausible micro-batch
@@ -2970,9 +2938,9 @@ object StreamingOps extends QueryPack {
   }
 
   /** Run the near-dup-gated stream and land the three logs — the
-    * UNCACHED build ([[ndPipelineLogs]] memoizes it; BenchStress's
-    * x_neardup_pipeline_build times this directly so the build cost
-    * stays on the tracked surface after memoization). */
+    * UNCACHED build ([[ndPipelineLogs]] memoizes it; calling this
+    * directly times or tests the build itself, which memoization
+    * otherwise hides after the first call). */
   private[graft] def buildNdLogs(s: SparkSession, d: String)
       : (String, String) = {
     import s.implicits._
@@ -2984,7 +2952,7 @@ object StreamingOps extends QueryPack {
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
     val (n, raw) = graft.operators.TextOps.modelRawScore($"text")
-    withStreamPartitions(s, streamPartitionsFor(dir)) { ss =>
+    withStreamPartitions(s, graft.Fs.partitionsFor(dir)) { ss =>
       val q = ss.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .option("latestFirst", "false")

@@ -165,6 +165,16 @@ class ApiSpec extends SparkTestBase {
       val rows = ss.table("api_avg_stream_10x")
       assert(rows.count() === 200L)
       assert(rows.filter($"avg_usd".isNull || $"avg_hashrate".isNull).count() === 0L)
+      // batch and stream agree window for window: every window holds both
+      // kinds, so the batch-only O11 fallback never fires on this zone
+      val cols = Seq($"win_start", $"avg_usd", $"avg_hashrate", $"avg_difficulty")
+      val t = BitcoinEtl.ingest(spark, pdir)
+      val batch = BitcoinEtl.avgInfo(t.price, t.hashrate).select(cols: _*)
+        .as[(Long, Double, Double, Double)].collect().toSeq
+      val stream = rows.orderBy($"win_start").select(cols: _*)
+        .as[(Long, Double, Double, Double)].collect().toSeq
+      assert(batch.length === 200)
+      assert(stream === batch)
     } finally q.stop()
   }
 

@@ -51,7 +51,7 @@ class ScaleTechniquesSpec extends SparkTestBase {
   }
 
   test("direct ngram pair strategy: only the kernel's pinned-build df join (broadcast-abort guard)") {
-    // Regression guard for the 10×-scale failure BENCH_sf1 caught: the
+    // Regression guard for a failure a 10×-replicated sf0.1 run caught: the
     // planner broadcast the Σ df² pair stream into a counts join because
     // static stats through Generate → aggregate are misestimates. The fix
     // carries (doc_id, n_sh) through the inverted index so the STRATEGY
@@ -61,8 +61,8 @@ class ScaleTechniquesSpec extends SparkTestBase {
     // side, and nothing is ever broadcast. (Since the round-8 default
     // flip the DECLARED query is the prefix strategy — guarded by the
     // next test — so the direct formulation is exercised here
-    // explicitly; it remains a first-class strategy and the stress
-    // artifact's x_ngram_direct entry.)
+    // explicitly; it remains a first-class strategy, and AuditOps
+    // calls it directly.)
     val df = operators.DedupOps.ngramJaccardPairs(spark, sf, prefixFilter = false)
     df.collect() // finalize AQE so codegen stage ids materialize
     val plan = df.queryExecution.executedPlan.toString
@@ -218,10 +218,10 @@ class ScaleTechniquesSpec extends SparkTestBase {
 
   test("plan sweep: no CartesianProduct anywhere; BNLJ only where deliberate; " +
       "pushable literal predicates reach the parquet scan") {
-    // PLANS.md's round-1 manual sweep, made permanent: an accidental
+    // The round-1 manual plan audit, made permanent: an accidental
     // nested-loop or cartesian plan is the classic 100 TB killer (O(n·m)
     // row comparisons). The whitelist is the set of DELIBERATE tiny-side
-    // broadcasts documented in PLANS.md. The same pass audits every file
+    // broadcasts that audit documented. The same pass audits every file
     // scan (VERDICT r4 task 5): a scan whose data filters include a
     // pushable attribute-vs-literal predicate must report PushedFilters —
     // an unpushed filter means the scan decodes rows the predicate could
@@ -342,23 +342,6 @@ class ScaleTechniquesSpec extends SparkTestBase {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
-  }
-
-  test("every declared query is stress-triaged (StressQueries or NotStressed)") {
-    // VERDICT r4 task 2's permanent fix: twice in a row, new operators
-    // shipped without a 10x datapoint. The stress list and the documented
-    // not-stressed list must exactly partition the declared surface, so a
-    // new query can't compile into the engine without a triage decision.
-    val declared = SparkEntry.queries.keySet
-    val stressed = BenchStress.StressQueries.toSet
-    val skipped = BenchStress.NotStressed
-    val untriaged = declared -- stressed -- skipped
-    val phantom = (stressed ++ skipped) -- declared
-    val both = stressed.intersect(skipped)
-    assert(untriaged.isEmpty,
-      s"add to BenchStress.StressQueries or NotStressed (with a reason): $untriaged")
-    assert(phantom.isEmpty, s"stress triage names unknown queries: $phantom")
-    assert(both.isEmpty, s"queries triaged both ways: $both")
   }
 
   test("no unbounded driver-side collect in any declared pipeline (source lint)") {

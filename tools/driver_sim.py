@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Exact simulation of the driver's correctness compare (reverse-engineered
-from CORRECTNESS_r01.json: this procedure reproduced all 53 of the driver's
-round-1 pass/fail hash verdicts).
+from the round-1 correctness report CORRECTNESS_r01.json, which only git
+history keeps now: this procedure reproduced all 53 of its pass/fail hash
+verdicts).
 
 The asymmetry that matters: the Spark result parquet is read via
 pandas/pyarrow (DECIMAL -> decimal.Decimal objects -> str keeps trailing
