@@ -50,6 +50,21 @@ object Fs {
     math.max(4L, math.min(512L, (bytes + (16L << 20) - 1) / (16L << 20)))
       .toInt
 
+  /** Explicit shuffle width for a COMPUTE-bound stage: the machine's
+    * parallelism, or the session's shuffle partitions if wider. Such a
+    * stage's rows are small but its CPU per row is not — candidate-pair
+    * rows of two longs before an exact verify, a per-shard sort window,
+    * the pair kernel's ~cap²-pair bucket emission. AQE's byte-based
+    * coalescing would fold them into one or two tasks and serialize the
+    * work (one task once burned 10+ CPU-minutes), and the session default
+    * is corpus-BYTE-derived ([[partitionsFor]]), which is the wrong
+    * measure for them: on sf0.1 replicated 10× the shard builds ran
+    * 15–60% slower on 11 byte-derived partitions. So the caller pins this
+    * width with an explicit `repartition(n, keys)`. */
+  private[graft] def computeWidth(s: org.apache.spark.sql.SparkSession): Int =
+    math.max(s.sparkContext.defaultParallelism,
+      s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+
   /** [[partitionsForBytes]] of the regular files under `dir` (0 bytes
     * when absent), walked on every call. */
   private[graft] def partitionsFor(dir: String): Int = {

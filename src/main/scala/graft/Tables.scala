@@ -9,38 +9,85 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * scan by Catalyst (predicate pushdown + column pruning) — the engine never
   * materializes unneeded columns. At cluster scale the same call works over
   * a directory of many files/partitions unchanged.
+  *
+  * Loading a table runs no Spark job. `spark.read.parquet` without a
+  * schema runs a schema-inference job on every call; instead the loader
+  * reads ONE parquet footer on the driver — the table file itself, or a
+  * directory's first data file in name order — converts it with Spark's
+  * own footer-to-schema conversion under the session conf, and hands that
+  * schema to the reader. Spark's default inference (`mergeSchema=false`)
+  * also trusts one footer, so the schema is the one inference gives;
+  * `mergeSchema` would read every footer and is not wanted for
+  * single-schema tables. A footer read is cheap and always current, so
+  * nothing is cached: a table rewritten in place is seen by the next
+  * load. A path with no data file (missing, empty, or only partition
+  * subdirectories) goes to Spark's own inference, which raises its own
+  * errors (`PATH_NOT_FOUND`).
   */
 object Tables {
-  /** Inferred schema per fixture file, memoized per (path, mtime, size)
-    * (r17, guide §6): `spark.read.parquet` without a schema runs a
-    * footer-sampling schema-inference driver job on EVERY call — one
-    * per base-table reference per query invocation across the whole
-    * declared surface (a per-job profile showed a 20–70 ms `parquet at
-    * Tables.scala` job in nearly every query), and at a large
-    * multi-file table it is a full listing+footer pass. The mtime+size
-    * key re-infers if the driver regenerates the corpus under a live
-    * JVM; within a JVM the fixture files are immutable. */
-  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long), org.apache.spark.sql.types.StructType]()
+  import org.apache.parquet.hadoop.Footer
+  import org.apache.spark.sql.execution.datasources.parquet.graftbridge.FooterBridge
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val f = new java.io.File(path)
-    val key = (path, f.lastModified(), f.length())
-    val sch = schemaMemo.computeIfAbsent(key,
-      _ => spark.read.parquet(path).schema)
-    spark.read.schema(sch).parquet(path)
+    read(spark, path, footerOf(spark, path))
+  }
+
+  private def read(spark: SparkSession, path: String,
+      footer: Option[Footer]): DataFrame = footer match {
+    case Some(f) => spark.read.schema(FooterBridge.schema(f, spark)).parquet(path)
+    case None => spark.read.parquet(path)
+  }
+
+  /** The footer schema inference would read: `path` itself when it is a
+    * file, else its first data file in name order (Spark's listing skips
+    * names starting with `_` or `.`, e.g. `_SUCCESS` and checksums). */
+  private def footerOf(spark: SparkSession, path: String): Option[Footer] = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val file: Option[FileStatus] =
+      try {
+        val st = fs.getFileStatus(p)
+        if (st.isFile) Some(st)
+        else fs.listStatus(p).filter { c =>
+          val n = c.getPath.getName
+          c.isFile && !n.startsWith("_") && !n.startsWith(".")
+        }.minByOption(_.getPath.getName)
+      } catch { case _: java.io.FileNotFoundException => None }
+    file.map(FooterBridge.footer(_, conf))
   }
 
   /** The fixture corpus has shipped `events.ts` in two vintages: parquet
     * TIMESTAMP(NANOS) (rounds 1–7), which Spark's vectorized reader only
     * accepts as a raw long (legacy mode), and TIMESTAMP(MICROS, NTZ)
-    * (round 8+ regeneration). Load raw with the legacy flag on — it only
-    * affects NANOS columns — and let [[normalizeTs]] branch on what
-    * actually arrived. */
+    * (round 8+ regeneration). The footer says which one is on disk: only
+    * the NANOS vintage turns the legacy flag on, before its schema is
+    * converted, so loading the current fixtures writes no session
+    * setting. [[normalizeTs]] then branches on what actually arrived. */
   def rawEvents(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    load(s, d, "events")
+    val path = s"$d/events.parquet"
+    val footer = footerOf(s, path)
+    if (footer.exists(nanosTs))
+      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    read(s, path, footer)
+  }
+
+  /** `ts` is stored as INT64 TIMESTAMP(NANOS). */
+  private def nanosTs(f: Footer): Boolean = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64
+    val schema: org.apache.parquet.schema.GroupType =
+      f.getParquetMetadata.getFileMetaData.getSchema
+    schema.containsField("ts") && {
+      val t = schema.getType("ts")
+      t.isPrimitive && t.asPrimitiveType.getPrimitiveTypeName == INT64 &&
+        (t.getLogicalTypeAnnotation match {
+          case ts: TimestampLogicalTypeAnnotation => ts.getUnit == TimeUnit.NANOS
+          case _ => false
+        })
+    }
   }
 
   /** Normalize whatever vintage `ts` arrived in to session-zoned

@@ -81,8 +81,36 @@ object ScaledDot {
   /** Marks a null float element in the scaled representation. */
   val NullSentinel: Long = Long.MinValue
 
-  /** Float vector → exact scale-6 unscaled longs (one BigDecimal
-    * conversion per element, paid once per row). */
+  /** Marks "no fast answer" from [[fastScale6]]; fast results are below
+    * 1e9 in magnitude, so it never collides with one. */
+  private final val Slow = Long.MinValue
+
+  /** `BigDecimal.valueOf(x).setScale(6, HALF_UP)`'s unscaled value without
+    * the decimal string `valueOf` formats, or [[Slow]]. For |x| < 1000
+    * the double product x·1e6 lies within about 2e-7 of the scaled
+    * decimal: `valueOf`'s string is within half an ulp of x (< 6e-14 ·
+    * 1e6) and the product rounds by at most half an ulp of 1e9 (6e-8).
+    * When its fraction is more than 1e-3 from .5, both therefore round to
+    * the same integer, and half away from zero is HALF_UP. A near-.5
+    * fraction, |x| ≥ 1000, NaN and ±Inf return [[Slow]]: the caller takes
+    * the BigDecimal path, with its overflow and non-finite errors. */
+  private def fastScale6(x: Double): Long = {
+    val a = math.abs(x)
+    if (!(a < 1000.0)) Slow
+    else {
+      val p = a * 1e6
+      val fl = math.floor(p)
+      val frac = p - fl
+      if (math.abs(frac - 0.5) <= 1e-3) Slow
+      else {
+        val r = if (frac > 0.5) fl.toLong + 1L else fl.toLong
+        if (x < 0) -r else r
+      }
+    }
+  }
+
+  /** Float vector → exact scale-6 unscaled longs (one conversion per
+    * element, paid once per row). */
   def scale6(x: ArrayData): GenericArrayData = {
     val n = x.numElements()
     val out = new Array[Any](n)
@@ -91,13 +119,18 @@ object ScaledDot {
       out(i) =
         if (x.isNullAt(i)) NullSentinel
         else {
-          val s = java.math.BigDecimal.valueOf(x.getFloat(i).toDouble)
-            .setScale(6, java.math.RoundingMode.HALF_UP)
-            .unscaledValue()
-          if (s.bitLength() > 62)
-            throw new IllegalArgumentException(
-              s"decimal_scale6: |element| too large for scaled-long form: ${x.getFloat(i)}")
-          java.lang.Long.valueOf(s.longValueExact())
+          val f = x.getFloat(i)
+          val fast = fastScale6(f.toDouble)
+          if (fast != Slow) fast
+          else {
+            val s = java.math.BigDecimal.valueOf(f.toDouble)
+              .setScale(6, java.math.RoundingMode.HALF_UP)
+              .unscaledValue()
+            if (s.bitLength() > 62)
+              throw new IllegalArgumentException(
+                s"decimal_scale6: |element| too large for scaled-long form: $f")
+            s.longValueExact()
+          }
         }
       i += 1
     }
@@ -106,7 +139,9 @@ object ScaledDot {
 
   /** Driver-side form of [[scale6]] for already-collected query vectors. */
   def scale6(v: Seq[Float]): Seq[Long] = v.map { f =>
-    java.math.BigDecimal.valueOf(f.toDouble)
+    val fast = fastScale6(f.toDouble)
+    if (fast != Slow) fast
+    else java.math.BigDecimal.valueOf(f.toDouble)
       .setScale(6, java.math.RoundingMode.HALF_UP)
       .movePointRight(6).longValueExact()
   }

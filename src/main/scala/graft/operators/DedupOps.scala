@@ -55,20 +55,6 @@ object DedupOps extends QueryPack {
       bound: Option[Int] = None): DataFrame =
     shingleOf(bounded(Tables.documents(s, d), bound))
 
-  /** Shuffle width for the exact-verify stages. Candidate-pair rows are
-    * two longs — they compress to almost nothing, so AQE's size-based
-    * partition coalescing folds a multi-million-pair stream into one or
-    * two tasks and serializes the CPU-bound per-pair verification (the
-    * stress run measured a single task burning 10+ CPU-minutes). The
-    * stage is compute-bound, not byte-bound: pin an explicit width.
-    * Floor at the machine parallelism (r17): the session's shuffle
-    * default is now corpus-BYTE-derived (SparkEntry), which is exactly
-    * wrong for a compute-bound stage — narrow pair rows at a small
-    * byte size still carry superlinear CPU. */
-  private def verifyParallelism(s: SparkSession): Int =
-    math.max(s.sparkContext.defaultParallelism,
-      s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-
   /** Bit budget for packing (n_sh, pos) into the pair kernel's payload
     * long — see the prefix strategy below. */
   private val PosBits = 21
@@ -372,14 +358,14 @@ object DedupOps extends QueryPack {
           .filter(lit(1L) + least($"n1" - $"p1", $"n2" - $"p2") >=
             ceil(($"n1" + $"n2") / lit(3.0)).cast("long") - 1L)
           .select($"doc1", $"doc2")
-          // explicit width: see verifyParallelism — candidate rows
+          // explicit width: see Fs.computeWidth — candidate rows
           // compress so well that AQE would coalesce the CPU-bound
           // verify below into one task. Keyed by doc1 ALONE: the
           // dedup aggregation above already hash-partitions on its full
           // key set, so a same-keyed repartition is optimized away as
           // redundant and the coalesce returns; doc1 differs, survives,
           // and still distributes (partner counts per doc are bounded).
-          .repartition(verifyParallelism(s), $"doc1")
+          .repartition(graft.Fs.computeWidth(s), $"doc1")
           // SHUFFLE_HASH-hint the DOC side: the candidate stream is
           // Generate-derived, so Catalyst's static size estimate is far
           // too small and an unhinted planner broadcasts the Σ-candidates
@@ -530,10 +516,10 @@ object DedupOps extends QueryPack {
           col("a.doc_id") < col("b.doc_id"))
         .select(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
         .distinct()
-        // explicit width before the CPU-bound verify (see verifyParallelism;
+        // explicit width before the CPU-bound verify (see Fs.computeWidth;
         // doc1 alone so the distinct's same-keyed partitioning can't make
         // the repartition "redundant" and hand the stage back to coalesce)
-        .repartition(verifyParallelism(s), $"doc1")
+        .repartition(graft.Fs.computeWidth(s), $"doc1")
       val inter = graft.functions.SortedIntersectSize
         .sorted_intersect_size($"sh1", $"sh2")
       cand
@@ -640,7 +626,7 @@ object DedupOps extends QueryPack {
         // same length filter (+1 absorbs the 6-decimal threshold round)
         .filter(greatest($"nd", $"nb") <= least($"nd", $"nb") * 2 + 1)
         .select($"did", $"bid").distinct()
-        .repartition(verifyParallelism(s), $"did")
+        .repartition(graft.Fs.computeWidth(s), $"did")
       val jaccardOf = (inter: Column, n1: Column, n2: Column) =>
         round(inter.cast("decimal(18,2)") / (n1 + n2 - inter), 6)
           .cast("decimal(38,6)")
@@ -758,7 +744,7 @@ object DedupOps extends QueryPack {
       // and the derived candidate stream can never become build side
       .join(baseK.hint("shuffle_hash"), Seq("band", "bhash"))
       .select($"did", $"bid").distinct()
-      .repartition(verifyParallelism(s), $"did")
+      .repartition(graft.Fs.computeWidth(s), $"did")
     val jaccardOf = (inter: Column, n1: Column, n2: Column) =>
       round(inter.cast("decimal(18,2)") / (n1 + n2 - inter), 6)
         .cast("decimal(38,6)")

@@ -120,7 +120,7 @@ object PairStreams {
       // one partition while being blind to their ~cap²-pair EMISSION
       // cost — the skew here is in the generator output, which no
       // input-size statistic sees.
-      .repartition(numShufflePartitions(posting), bucketKeys: _*)
+      .repartition(graft.Fs.computeWidth(posting.sparkSession), bucketKeys: _*)
       .groupBy(bucketKeys: _*)
       // collect_list skips nulls, so the `when` filters split the bucket
       // into its two ≤cap-element sides; sort restores block order
@@ -138,12 +138,4 @@ object PairStreams {
         transform(col("_r"), x => x.getField("_id")).as("r_id"),
         transform(col("_r"), x => x.getField("_n")).as("r_n")): _*)
   }
-
-  // floored at machine parallelism (r17): the pair kernel's stages are
-  // compute-bound, and the session shuffle default is now derived from
-  // corpus BYTES (Fs.partitionsFor) — see
-  // DedupOps.verifyParallelism for the argument
-  private def numShufflePartitions(df: DataFrame): Int =
-    math.max(df.sparkSession.sparkContext.defaultParallelism,
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt)
 }

@@ -62,19 +62,6 @@ object ShardOps extends QueryPack {
     * no per-token doc_id (re-packed rows — fixed-width rows carry no doc
     * boundaries by design), in which case the stat columns are NULL so
     * every generation writes the same parquet schema. */
-  /** Width for the pack's per-shard sort window (r17): the stage is
-    * SORT-bound per shard, not byte-bound, so it must not narrow with
-    * the corpus-byte-derived session shuffle default
-    * (Fs.partitionsFor) — on sf0.1 replicated 10× the shard builds ran
-    * +15–60% slower when the 16-shard window ran on 11 byte-derived
-    * partitions. Same convention as
-    * DedupOps.verifyParallelism: floor at machine parallelism. The
-    * explicit repartition below satisfies the window's clustered
-    * distribution, so it adds no extra exchange. */
-  private def packWidth(s: SparkSession): Int =
-    math.max(s.sparkContext.defaultParallelism,
-      s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-
   private[graft] def packStream(s: SparkSession, toks: DataFrame,
       order: Seq[String], startSeq: Option[DataFrame],
       docStats: Boolean): DataFrame = {
@@ -82,7 +69,10 @@ object ShardOps extends QueryPack {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"shard").orderBy(order.map(col): _*)
     val idxd = toks
-      .repartition(packWidth(s), $"shard")
+      // compute width (Fs.computeWidth): the per-shard sort window is
+      // sort-bound, not byte-bound; this repartition satisfies the
+      // window's clustered distribution, so it adds no exchange
+      .repartition(graft.Fs.computeWidth(s), $"shard")
       .withColumn("tok_idx", row_number().over(w).cast("long") - 1L)
       .withColumn("seq_in_gen", expr(s"tok_idx div $SeqLen"))
       .withColumn("pos_in_seq", pmod($"tok_idx", lit(SeqLen.toLong)))
@@ -489,7 +479,7 @@ object ShardOps extends QueryPack {
       .partitionBy($"shard", $"gen")
       .orderBy($"doc_id", $"pos", $"subpos")
     val idxd = toks
-      .repartition(packWidth(s), $"shard", $"gen") // see packWidth
+      .repartition(graft.Fs.computeWidth(s), $"shard", $"gen") // as packStream
       .withColumn("tok_idx", row_number().over(w).cast("long") - 1L)
       .withColumn("seq_in_gen", expr(s"tok_idx div $SeqLen"))
       .withColumn("pos_in_seq", pmod($"tok_idx", lit(SeqLen.toLong)))

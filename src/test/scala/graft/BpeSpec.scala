@@ -54,13 +54,7 @@ class BpeSpec extends SparkTestBase {
   test("learning job count is constant in the merge bound (driver-local loop)") {
     // 64 merges must cost the same number of Spark jobs as 8: the loop
     // runs on the collected dict, so only the dict aggregation+collect
-    // launches jobs. Job ids are globally increasing per context — the
-    // max-id delta bounds the jobs a call launched (specs run serially).
-    def jobsDuring(body: => Unit): Int = {
-      def maxId = spark.sparkContext.statusTracker
-        .getJobIdsForGroup(null).maxOption.getOrElse(-1)
-      val before = maxId; body; maxId - before
-    }
+    // launches jobs.
     val j8 = jobsDuring(BpeOps.learnBpeUncached(spark, sf, maxMerges = 8))
     val j64 = jobsDuring(BpeOps.learnBpeUncached(spark, sf, maxMerges = 64))
     assert(j8 > 0 && j8 <= 4, s"dict collect should be a handful of jobs, got $j8")

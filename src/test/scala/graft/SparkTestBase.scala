@@ -23,4 +23,13 @@ trait SparkTestBase extends AnyFunSuite {
   val sf: String = "/root/testdata/sf0.001"
 
   def q(name: String) = SparkEntry.queries(name)(spark, sf)
+
+  /** Spark jobs launched while `body` runs. Job ids are globally
+    * increasing per context, so the max-id delta bounds the jobs a call
+    * launched (specs run serially). */
+  def jobsDuring(body: => Unit): Int = {
+    def maxId = spark.sparkContext.statusTracker
+      .getJobIdsForGroup(null).maxOption.getOrElse(-1)
+    val before = maxId; body; maxId - before
+  }
 }
