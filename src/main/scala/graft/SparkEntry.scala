@@ -38,7 +38,7 @@ object SparkEntry {
     * sf0.1 (17.5 MB) this is 4 where the core count was the default:
     * the sub-second tail paid pure per-task scheduling overhead. CPU-
     * bound stage widths are NOT tied to it: the pair-verify kernels pin
-    * their width to max(this, defaultParallelism) (DedupOps/PairStreams).
+    * their width to [[Fs.computeWidth]].
     * Declared results are partition-count invariant (every query's
     * output is sorted/aggregated). */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

@@ -23,8 +23,10 @@ import org.apache.spark.sql.functions._
   * Differences from the reference, deliberate (SURVEY §7.4.3): typed
   * longs instead of str-cast numerics; one row per window instead of one
   * row per scheduler tick; decimal-exact averages (the reference wraps a
-  * float division in Decimal, load.py:34-35); no ZeroDivisionError on an
-  * empty hashrate window (the row is simply absent).
+  * float division in Decimal, load.py:34-35); SQL AVG's null rule for
+  * every average (each divides by the count of its own column's values);
+  * a window is emitted only if it has a hashrate value (the reference
+  * raises ZeroDivisionError on a window without one).
   */
 object BitcoinEtl {
 
@@ -58,42 +60,22 @@ object BitcoinEtl {
   def appendRaw(df: DataFrame, dir: String): Unit =
     df.write.mode("append").parquet(dir)
 
-  /** The reference's one real query (O7-O13): 5-minute windowed averages
-    * of both streams, joined at the window grain into the wide avg_info
-    * row. Price windows with no rows fall back to the previous window's
-    * average (O11, load.py:16-25); output rounds to 2 decimals like the
-    * reference's f"{x:.2f}" (O13, load.py:52-53).
+  /** The reference's one real query (O7-O13): 5-minute averages of price
+    * and hashrate/difficulty in one wide avg_info row per window (the
+    * shared [[windowAverages]] over both tables). Price windows with no
+    * rows fall back to the previous window's average (O11,
+    * load.py:16-25), over every window either table touches.
     */
   def avgInfo(price: DataFrame, hashrate: DataFrame): DataFrame = {
-    def win(c: org.apache.spark.sql.Column) =
-      unix_timestamp(window(c, "5 minutes").getField("start"))
-    val p = price
-      .groupBy(win(col("server_ts")).as("win_start"))
-      .agg(sum(col("usd").cast("decimal(18,2)")).cast("decimal(38,2)").as("s"),
-        count("*").as("n"))
-      .select(col("win_start"),
-        round(col("s") / col("n"), 2).cast("decimal(38,2)").as("avg_usd_w"))
-    val h = hashrate
-      .groupBy(win(col("server_ts")).as("win_start"))
-      .agg(
-        sum(col("hashrate").cast("decimal(28,0)")).cast("decimal(38,0)").as("sh"),
-        sum(col("difficulty").cast("decimal(28,0)")).cast("decimal(38,0)").as("sd"),
-        count("*").as("n"))
-      .select(col("win_start"),
-        round(col("sh") / col("n"), 2).cast("decimal(38,2)").as("avg_hashrate"),
-        round(col("sd") / col("n"), 2).cast("decimal(38,2)").as("avg_difficulty"))
-    // previous-window price fallback over the joint window axis
+    val typed = price.select(col("server_ts"), col("usd"))
+      .unionByName(hashrate.select(col("server_ts"), col("hashrate"), col("difficulty")),
+        allowMissingColumns = true)
+    // no partition spec on purpose: the fallback runs once, over one row per window
     val prevW = Window.orderBy(col("win_start"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    h.join(p, Seq("win_start"), "full_outer")
+    emit(windowAverages(typed)
       .withColumn("avg_usd",
-        coalesce(col("avg_usd_w"),
-          last(col("avg_usd_w"), ignoreNulls = true).over(prevW)))
-      .filter(col("avg_hashrate").isNotNull) // hashrate has no fallback (load.py:30-35)
-      .select(col("win_start"),
-        col("avg_usd").cast("double").as("avg_usd"),
-        col("avg_hashrate").cast("double").as("avg_hashrate"),
-        col("avg_difficulty").cast("double").as("avg_difficulty"))
+        coalesce(col("avg_usd"), last(col("avg_usd"), ignoreNulls = true).over(prevW))))
       .orderBy(col("win_start"))
   }
 
@@ -106,13 +88,12 @@ object BitcoinEtl {
     * the sink/trigger (`df.writeStream...start()`), i.e. the reference's
     * scheduler cadence becomes a trigger interval.
     *
-    * Both logical streams flow through ONE windowed aggregation
-    * (conditional aggregates instead of a stream-stream join of
-    * aggregates — a single stateful operator, bounded state at the
-    * watermark). The O11 fallback is deliberately absent in streaming:
-    * the watermark's late-data tolerance replaces it (SURVEY O11's row —
-    * the fallback is the reference's crude stand-in for lateness
-    * handling).
+    * Both logical streams flow through ONE windowed aggregation, the
+    * [[windowAverages]] that batch [[avgInfo]] uses (a single stateful
+    * operator, bounded state at the watermark). Only the O11 fallback is
+    * batch-only: the watermark's late-data tolerance replaces it (SURVEY
+    * O11's row — the fallback is the reference's crude stand-in for
+    * lateness handling).
     */
   def avgInfoStream(spark: SparkSession, payloadDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
@@ -131,20 +112,41 @@ object BitcoinEtl {
       .select(
         timestamp_seconds(col("server_ts")).as("server_ts"),
         col("usd"), col("hashrate"), col("difficulty"))
+    emit(windowAverages(typed.withWatermark("server_ts", "10 minutes")))
+  }
+
+  /** O7-O9, O13 for batch and stream alike: one aggregate per 5-minute
+    * window over rows carrying `server_ts` and any of `usd`, `hashrate`,
+    * `difficulty` (null where a row lacks it). Each average divides its
+    * column's decimal sum by the count of that column's values, SQL AVG's
+    * null rule (O8, `SELECT AVG(USD)`): the quotient at scale 6, then
+    * rounded to 2 places like the reference's f"{x:.2f}" (load.py:52-53).
+    * A window without values of a column averages to NULL. Grouped by the
+    * window struct itself, as streaming append mode requires. */
+  private def windowAverages(typed: DataFrame): DataFrame = {
+    def avg2(s: String, n: String) = round(col(s) / col(n), 2).cast("decimal(38,2)")
     typed
-      .withWatermark("server_ts", "10 minutes")
       .groupBy(window(col("server_ts"), "5 minutes"))
       .agg(
         sum(col("usd").cast("decimal(18,2)")).cast("decimal(38,2)").as("ps"),
         count(col("usd")).as("pn"),
         sum(col("hashrate").cast("decimal(28,0)")).cast("decimal(38,0)").as("hs"),
+        count(col("hashrate")).as("hn"),
         sum(col("difficulty").cast("decimal(28,0)")).cast("decimal(38,0)").as("ds"),
-        count(col("hashrate")).as("hn"))
-      .filter(col("hn") > 0)
+        count(col("difficulty")).as("dn"))
       .select(
         unix_timestamp(col("window.start")).as("win_start"),
-        round(col("ps") / col("pn"), 2).cast("double").as("avg_usd"),
-        round(col("hs") / col("hn"), 2).cast("double").as("avg_hashrate"),
-        round(col("ds") / col("hn"), 2).cast("double").as("avg_difficulty"))
+        avg2("ps", "pn").as("avg_usd"),
+        avg2("hs", "hn").as("avg_hashrate"),
+        avg2("ds", "dn").as("avg_difficulty"))
   }
+
+  /** The avg_info row: only windows with a hashrate value (hashrate has no
+    * fallback, load.py:30-35), averages as doubles. */
+  private def emit(avgs: DataFrame): DataFrame =
+    avgs.filter(col("avg_hashrate").isNotNull)
+      .select(col("win_start"),
+        col("avg_usd").cast("double").as("avg_usd"),
+        col("avg_hashrate").cast("double").as("avg_hashrate"),
+        col("avg_difficulty").cast("double").as("avg_difficulty"))
 }

@@ -13,27 +13,23 @@ class ApiSpec extends SparkTestBase {
   import spark.implicits._
 
   private val t0 = 1609459200L // window w0 start (aligned to 5 min)
-  private val dir = {
-    val d = Paths.get("target", "test-api-payloads")
-    if (Files.exists(d)) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(d.toFile)
-    }
+  private def zone(name: String, payloads: Seq[(String, String)]): String = {
+    val d = Paths.get("target", name)
+    graft.Fs.deleteRecursively(d)
     Files.createDirectories(d)
-    def write(name: String, json: String): Unit =
-      Files.write(d.resolve(name), json.getBytes(StandardCharsets.UTF_8))
-    // w0 [t0, t0+300): two prices (50000, 50010), two hashrate rows
-    write("p1.json", s"""{"spider_ts": ${t0 + 10}, "price_data": {"USD": 50000, "time": ${t0 + 5}}}""")
-    write("p2.json", s"""{"spider_ts": ${t0 + 70}, "price_data": {"USD": 50010, "time": ${t0 + 65}}}""")
-    write("h1.json", s"""{"spider_ts": ${t0 + 20}, "hash_rate_data": {"currentHashrate": 1000, "currentDifficulty": 500}}""")
-    write("h2.json", s"""{"spider_ts": ${t0 + 80}, "hash_rate_data": {"currentHashrate": 3000, "currentDifficulty": 700}}""")
-    // w1 [t0+300, t0+600): hashrate only -> price falls back to w0's avg
-    write("h3.json", s"""{"spider_ts": ${t0 + 310}, "hash_rate_data": {"currentHashrate": 5000, "currentDifficulty": 900}}""")
+    for ((file, json) <- payloads)
+      Files.write(d.resolve(file), json.getBytes(StandardCharsets.UTF_8))
     d.toString
   }
+  private val payloads = Seq(
+    // w0 [t0, t0+300): two prices (50000, 50010), two hashrate rows
+    "p1.json" -> s"""{"spider_ts": ${t0 + 10}, "price_data": {"USD": 50000, "time": ${t0 + 5}}}""",
+    "p2.json" -> s"""{"spider_ts": ${t0 + 70}, "price_data": {"USD": 50010, "time": ${t0 + 65}}}""",
+    "h1.json" -> s"""{"spider_ts": ${t0 + 20}, "hash_rate_data": {"currentHashrate": 1000, "currentDifficulty": 500}}""",
+    "h2.json" -> s"""{"spider_ts": ${t0 + 80}, "hash_rate_data": {"currentHashrate": 3000, "currentDifficulty": 700}}""",
+    // w1 [t0+300, t0+600): hashrate only -> price falls back to w0's avg
+    "h3.json" -> s"""{"spider_ts": ${t0 + 310}, "hash_rate_data": {"currentHashrate": 5000, "currentDifficulty": 900}}""")
+  private val dir = zone("test-api-payloads", payloads)
 
   test("ingest splits payloads into the reference's typed tables") {
     val t = BitcoinEtl.ingest(spark, dir)
@@ -234,5 +230,32 @@ class ApiSpec extends SparkTestBase {
     assert(back.count() === 2)
     assert(back.columns.sorted ===
       Array("avg_difficulty", "avg_hashrate", "avg_usd", "win_start"))
+  }
+
+  test("partial payloads: each average counts its own column, in batch and stream alike") {
+    // the zone above plus four partial payloads: a price without USD and a
+    // difficulty without hashrate land in w0; a price without time and a
+    // hashrate without spider_ts have no server_ts, so no window
+    val partial = zone("test-api-partial", payloads ++ Seq(
+      "p3.json" -> s"""{"spider_ts": ${t0 + 30}, "price_data": {"time": ${t0 + 35}}}""",
+      "p4.json" -> s"""{"spider_ts": ${t0 + 40}, "price_data": {"USD": 99999}}""",
+      "h4.json" -> """{"hash_rate_data": {"currentHashrate": 7777, "currentDifficulty": 8888}}""",
+      "h5.json" -> s"""{"spider_ts": ${t0 + 90}, "hash_rate_data": {"currentDifficulty": 100}}"""))
+    val cols = Seq($"win_start", $"avg_usd", $"avg_hashrate", $"avg_difficulty")
+    val t = BitcoinEtl.ingest(spark, partial)
+    val batch = BitcoinEtl.avgInfo(t.price, t.hashrate).select(cols: _*)
+      .as[(Option[Long], Option[Double], Double, Double)].collect().toSeq
+    val q = BitcoinEtl.avgInfoStream(spark, partial)
+      .writeStream.format("memory").queryName("api_avg_partial")
+      .outputMode("complete")
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    val stream = spark.table("api_avg_partial").orderBy($"win_start").select(cols: _*)
+      .as[(Option[Long], Option[Double], Double, Double)].collect().toSeq
+    // w0: USD (50000 + 50010) / 2, hashrate (1000 + 3000) / 2 and
+    // difficulty (500 + 700 + 100) / 3
+    val w0 = (Some(t0), Some(50005.0), 2000.0, 433.33)
+    assert(batch === Seq(w0, (Some(t0 + 300), Some(50005.0), 5000.0, 900.0)))
+    assert(stream === Seq(w0, (Some(t0 + 300), None, 5000.0, 900.0)))
   }
 }
