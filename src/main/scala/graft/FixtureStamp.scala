@@ -13,7 +13,8 @@ import java.nio.file.{Files, Path}
   * against the fresh tables would silently mismatch. The marker therefore
   * records the identity (size + mtime per source file) of the tables the
   * fixture was built from, plus a layout version; any corpus regeneration
-  * or fixture-format change rebuilds in place.
+  * or fixture-format change rebuilds the artifact (`Fs.staged` writes the
+  * stamp into its `_complete` marker).
   */
 object FixtureStamp {
 

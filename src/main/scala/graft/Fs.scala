@@ -1,12 +1,139 @@
 package graft
 
-/** Filesystem helpers shared by the artifact-dir builders. */
+import java.nio.file.{Files, FileSystemException, NoSuchFileException, Path,
+  Paths, StandardCopyOption}
+
+import org.apache.spark.sql.DataFrame
+
+/** Filesystem helpers, and the one home of derived artifacts: every
+  * directory the engine derives from a corpus (stream landing zones,
+  * persisted indexes, fixture tables, per-run sink outputs) is named by
+  * [[artifactDir]] and, when it is reused across calls and JVMs, built
+  * by [[staged]]. */
 object Fs {
+  /** Root of every derived artifact: `target/` under the working
+    * directory, made absolute once. */
+  private val Root: Path = Paths.get("target").toAbsolutePath
+
+  private val Marker = "_complete"
+
+  /** `<corpus basename>-<md5 prefix of the full corpus path>`. The hash
+    * keeps two corpora with one basename (two fixture roots both ending
+    * in `sf0.01`) from sharing artifacts while in-JVM memos, keyed by the
+    * full path, still point at them. */
+  private def artifactName(corpus: String): String =
+    new java.io.File(corpus).getName + "-" +
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(corpus.getBytes("UTF-8")).take(4)
+        .map("%02x".format(_)).mkString
+
+  /** `target/<kind>/<corpus basename>-<md5 prefix>`, absolute. */
+  def artifactDir(kind: String, corpus: String): Path =
+    Root.resolve(kind).resolve(artifactName(corpus))
+
+  /** Root for per-run scratch that needs speed, not durability (stream
+    * checkpoints): the RAM-backed `/dev/shm` when the host has a
+    * writable one, else the artifact root. Every stateful micro-batch
+    * commits offsets and state per partition with fsyncs; on a disk
+    * that fixed cost dominated the streaming queries' profile. */
+  lazy val scratchRoot: Path = {
+    val shm = Paths.get("/dev/shm")
+    if (Files.isDirectory(shm) && Files.isWritable(shm)) shm
+    else Files.createDirectories(Root)
+  }
+
+  /** The checkpoint path of `kind` over `corpus` under [[scratchRoot]],
+    * not wiped. Offline state readers (the statestore-source specs)
+    * resolve the checkpoint a query used through this. */
+  private[graft] def scratchCheckpointPath(kind: String, corpus: String)
+      : Path =
+    scratchRoot.resolve(s"graft_ck_${kind}_" + artifactName(corpus))
+
+  private def holds(dir: Path, stamp: String): Boolean =
+    try FixtureStamp.upToDate(dir.resolve(Marker), stamp)
+    catch { case _: NoSuchFileException => false } // moved aside meanwhile
+
+  /** The artifact `(kind, corpus)` at version `stamp`, as a path. It
+    * returns at once when the dir's `_complete` holds `stamp`.
+    * Otherwise `build` writes into a fresh sibling temp dir, `_complete`
+    * is written there and the dir is renamed into place: the
+    * stage-then-rename commit of Spark's own file writers. A reader never
+    * sees a half-built artifact, a failed build leaves the previous
+    * version in place, and nothing may write into the dir after this
+    * returns (copy it first). */
+  def staged(kind: String, corpus: String, stamp: String)(
+      build: Path => Unit): String = {
+    val dir = artifactDir(kind, corpus)
+    if (!holds(dir, stamp)) {
+      Files.createDirectories(dir.getParent)
+      // a sibling, so the rename stays on one filesystem and is atomic;
+      // no leading '.' or '_', which would hide it from Spark's readers
+      val tmp = Files.createTempDirectory(dir.getParent,
+        s"${dir.getFileName}.tmp-")
+      try {
+        build(tmp)
+        FixtureStamp.complete(tmp.resolve(Marker), stamp)
+        install(tmp, dir, stamp)
+      } finally deleteRecursively(tmp) // gone already once installed
+    }
+    dir.toString
+  }
+
+  /** Rename the built `tmp` into `dir`. A builder that finds `dir`
+    * already complete at `stamp` lost a race: it keeps the winner's dir
+    * and its caller deletes `tmp`. A stale `dir` is moved aside, `tmp`
+    * renamed in, and the old version deleted last. */
+  private def install(tmp: Path, dir: Path, stamp: String): Unit = {
+    def move(from: Path, to: Path): Boolean =
+      try { Files.move(from, to, StandardCopyOption.ATOMIC_MOVE); true }
+      catch { case _: FileSystemException => false } // lost to another JVM
+    val aside = Seq.newBuilder[Path]
+    var attempts = 0
+    try while (!holds(dir, stamp) && !move(tmp, dir)) {
+      attempts += 1
+      require(attempts < 16, s"could not install $tmp as $dir")
+      val old = dir.resolveSibling(
+        s"${dir.getFileName}.old-${java.util.UUID.randomUUID}")
+      if (!holds(dir, stamp) && move(dir, old)) aside += old
+    } finally aside.result().foreach(deleteRecursively)
+  }
+
+  /** A landing zone at version `stamp`: each of `parts` written as
+    * exactly one parquet file, with strictly increasing mtimes in part
+    * order, built through [[staged]]. `FileStreamSource` admits files by
+    * mtime, so the part order IS the micro-batch order (a tie could
+    * admit a watermark-advancing sentinel first and drop every real
+    * event as late). The parts are computed only on a rebuild. */
+  def landingZone(kind: String, corpus: String, stamp: String)(
+      parts: => Seq[DataFrame]): String =
+    staged(kind, corpus, stamp) { dir =>
+      def files = dir.toFile.listFiles().filter(_.getName.startsWith("part-"))
+        .toSet
+      val ps = parts
+      val t = System.currentTimeMillis()
+      ps.zipWithIndex.foldLeft(Set.empty[java.io.File]) {
+        case (before, (df, i)) =>
+          df.coalesce(1).write.mode("append").parquet(dir.toString)
+          val after = files
+          val added = after -- before
+          require(added.size == 1,
+            s"part $i of $kind wrote ${added.size} files, expected 1")
+          touchOrFail(added, t - (ps.size - 1 - i) * 60000L)
+          after
+      }
+    }
+
+  /** Pin mtimes, failing loudly: a silent setLastModified failure would
+    * commit an order-scrambled landing zone. */
+  private def touchOrFail(fs: Iterable[java.io.File], ts: Long): Unit =
+    fs.foreach(f => require(f.setLastModified(ts),
+      s"setLastModified failed for $f"))
+
   /** Recursive delete, children before parents; no-op when absent.
     * Replaces the six inline `Files.walk ... reverse.foreach(delete)`
     * copies (r12 review) — and unlike them, closes the walk stream. */
-  def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
+  def deleteRecursively(p: Path): Unit =
+    if (Files.exists(p)) {
       import scala.jdk.CollectionConverters._
       val walk = java.nio.file.Files.walk(p)
       try walk.iterator().asScala.toSeq.reverse

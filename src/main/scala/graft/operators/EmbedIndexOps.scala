@@ -127,18 +127,12 @@ object EmbedIndexOps extends QueryPack {
   }
 
   /** The persisted index artifact, stamped per corpus version. */
-  private[graft] def embedIndexDir(s: SparkSession, d: String): String = {
-    val dir = graft.streaming.StreamingOps
-      .indexArtifactDir("embed_rad_index", d)
-    val marker = dir.resolve("_complete")
-    val stamp = graft.FixtureStamp.stamp("v1", d, "embeddings")
-    if (graft.FixtureStamp.upToDate(marker, stamp)) return dir.toString
-    graft.Fs.deleteRecursively(dir)
-    writeEmbedIndexBase(s, d, dir.toString)
-    appendEmbedIndexDelta(s, d, dir.toString)
-    graft.FixtureStamp.complete(marker, stamp)
-    dir.toString
-  }
+  private[graft] def embedIndexDir(s: SparkSession, d: String): String =
+    graft.Fs.staged("embed_rad_index", d,
+        graft.FixtureStamp.stamp("v1", d, "embeddings")) { dir =>
+      writeEmbedIndexBase(s, d, dir.toString)
+      appendEmbedIndexDelta(s, d, dir.toString)
+    }
 
   private def indexRead(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -273,31 +267,15 @@ object EmbedIndexOps extends QueryPack {
   /** Two-file embeddings landing zone (vec_id midpoint split, mtime-
     * pinned batch order) — the ingest-stream fixture for the
     * stream-maintained index. Idempotent per sf. */
-  private[graft] def streamEmbedDir(s: SparkSession, d: String): String = {
-    import s.implicits._
-    val dir = java.nio.file.Paths.get("target", "stream_embed",
-      new java.io.File(d).getName).toAbsolutePath
-    val marker = dir.resolve("_complete")
-    val stamp = graft.FixtureStamp.stamp("v1", d, "embeddings")
-    if (graft.FixtureStamp.upToDate(marker, stamp)) return dir.toString
-    val vecs = Tables.embeddings(s, d).select($"vec_id", $"embedding")
-    val sp = vecs.agg(((max($"vec_id") + 1L) / 2L).cast("long"))
-      .head().getLong(0)
-    vecs.filter($"vec_id" < sp)
-      .coalesce(1).write.mode("overwrite").parquet(dir.toString)
-    def parts: Set[java.io.File] = new java.io.File(dir.toString)
-      .listFiles().filter(_.getName.startsWith("part-")).toSet
-    val lowParts = parts
-    vecs.filter($"vec_id" >= sp)
-      .coalesce(1).write.mode("append").parquet(dir.toString)
-    // batch order is load-bearing; a silent mtime failure would stamp
-    // an order-scrambled zone complete (the SourceOps ADVICE-r15 rule)
-    val t = System.currentTimeMillis()
-    graft.streaming.StreamingOps.touchOrFail(lowParts, t - 60000L)
-    graft.streaming.StreamingOps.touchOrFail(parts -- lowParts, t)
-    graft.FixtureStamp.complete(marker, stamp)
-    dir.toString
-  }
+  private[graft] def streamEmbedDir(s: SparkSession, d: String): String =
+    graft.Fs.landingZone("stream_embed", d,
+        graft.FixtureStamp.stamp("v1", d, "embeddings")) {
+      import s.implicits._
+      val vecs = Tables.embeddings(s, d).select($"vec_id", $"embedding")
+      val sp = vecs.agg(((max($"vec_id") + 1L) / 2L).cast("long"))
+        .head().getLong(0)
+      Seq(vecs.filter($"vec_id" < sp), vecs.filter($"vec_id" >= sp))
+    }
 
   /** One stream micro-batch: scale+hash the arriving vectors, append
     * their signature delta as gen=batchId. Stateless — a replayed
@@ -314,35 +292,29 @@ object EmbedIndexOps extends QueryPack {
   }
 
   private[graft] def streamEmbedIndexLog(s: SparkSession, d: String)
-      : String = {
-    val dir = streamEmbedDir(s, d)
-    val outPath = graft.streaming.StreamingOps
-      .indexArtifactDir("stream_embed_rad_index", d)
-    val marker = outPath.resolve("_complete")
-    val stamp = graft.FixtureStamp.stamp("v1", d, "embeddings")
-    if (graft.FixtureStamp.upToDate(marker, stamp)) return outPath.toString
-    graft.Fs.deleteRecursively(outPath)
-    val out = outPath.toString
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType))))
-    graft.streaming.StreamingOps.withStreamPartitions(s,
-      graft.Fs.partitionsFor(dir)) { ss =>
-      val q = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(dir)
-        .writeStream
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          streamEmbedIndexBatch(batch, batchId, out)
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
+      : String =
+    graft.Fs.staged("stream_embed_rad_index", d,
+        graft.FixtureStamp.stamp("v1", d, "embeddings")) { outPath =>
+      val dir = streamEmbedDir(s, d)
+      val out = outPath.toString
+      val schema = StructType(Seq(
+        StructField("vec_id", LongType),
+        StructField("embedding", ArrayType(FloatType))))
+      graft.streaming.StreamingOps.withStreamPartitions(s,
+        graft.Fs.partitionsFor(dir)) { ss =>
+        val q = ss.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1")
+          .option("latestFirst", "false")
+          .parquet(dir)
+          .writeStream
+          .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+            streamEmbedIndexBatch(batch, batchId, out)
+          }
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
     }
-    graft.FixtureStamp.complete(marker, stamp)
-    out
-  }
 
   private val annStreamIndexed = QueryDef(
     "q_stream_ann_index",
@@ -362,8 +334,7 @@ object EmbedIndexOps extends QueryPack {
     (s, d) => {
       import s.implicits._
       val log = streamEmbedIndexLog(s, d)
-      val basePath = graft.streaming.StreamingOps
-        .indexArtifactDir("stream_embed_rad_base", d)
+      val basePath = graft.Fs.artifactDir("stream_embed_rad_base", d)
       s.read.parquet(log)
         .select($"vec_id", $"sv", $"band", $"bkey")
         .distinct()
@@ -403,8 +374,7 @@ object EmbedIndexOps extends QueryPack {
   private val annIndexForget = QueryDef(
     "q_ann_index_forget",
     (s, d) => {
-      val dir = graft.streaming.StreamingOps
-        .indexArtifactDir("embed_rad_index_forget", d).toString
+      val dir = graft.Fs.artifactDir("embed_rad_index_forget", d).toString
       buildEmbedIndexStore(s, d, dir) // one scale+hash pass (r16)
       val pred = col("vec_id") % ShardOps.ForgetMod === ShardOps.ForgetRes
       forgetEmbedIndex(s, d, dir, pred)

@@ -306,38 +306,27 @@ object JoinOps extends QueryPack {
   // fixture write. ScaleTechniquesSpec asserts the executed fact scan
   // carries the `dynamicpruning` partition filter and prunes to the two
   // 'web' partitions.
-  private[graft] def dppFactDir(s: SparkSession, d: String): String = {
-    import s.implicits._
-    val dir = java.nio.file.Paths.get("target", "dpp_fact",
-      new java.io.File(d).getName).toAbsolutePath.toString
-    val marker = java.nio.file.Paths.get(dir, "_stamp")
-    val stamp = graft.FixtureStamp.stamp("v1", d, "events")
-    if (!graft.FixtureStamp.upToDate(marker, stamp)) {
+  private[graft] def dppFactDir(s: SparkSession, d: String): String =
+    graft.Fs.staged("dpp_fact", d,
+        graft.FixtureStamp.stamp("v1", d, "events")) { dir =>
+      import s.implicits._
       Tables.events(s, d)
         .select($"event_id", $"user_id", $"value", $"event_type")
-        .write.mode("overwrite").partitionBy("event_type").parquet(dir)
-      graft.FixtureStamp.complete(marker, stamp)
+        .write.mode("overwrite").partitionBy("event_type")
+        .parquet(dir.toString)
     }
-    dir
-  }
 
-  private[graft] def dppDimDir(s: SparkSession, d: String): String = {
-    import s.implicits._
-    val dir = java.nio.file.Paths.get("target", "dpp_dim",
-      new java.io.File(d).getName).toAbsolutePath.toString
-    val marker = java.nio.file.Paths.get(dir, "_stamp")
-    val stamp = graft.FixtureStamp.stamp("v1", d, "events")
-    if (!graft.FixtureStamp.upToDate(marker, stamp)) {
+  private[graft] def dppDimDir(s: SparkSession, d: String): String =
+    graft.Fs.staged("dpp_dim", d,
+        graft.FixtureStamp.stamp("v1", d, "events")) { dir =>
+      import s.implicits._
       Tables.events(s, d).select($"event_type").distinct()
         .withColumn("channel",
           when($"event_type".isin("click", "view"), "web")
             .when($"event_type".isin("purchase", "signup"), "app")
             .otherwise("ops"))
-        .coalesce(1).write.mode("overwrite").parquet(dir)
-      graft.FixtureStamp.complete(marker, stamp)
+        .coalesce(1).write.mode("overwrite").parquet(dir.toString)
     }
-    dir
-  }
 
   private val joinDpp = QueryDef(
     "q_join_dpp",

@@ -721,18 +721,12 @@ object MultimodalOps extends QueryPack {
   }
 
   /** The persisted index artifact, stamped per corpus version. */
-  private[graft] def mediaIndexDir(s: SparkSession, d: String): String = {
-    val dir = graft.streaming.StreamingOps
-      .indexArtifactDir("media_band_index", d)
-    val marker = dir.resolve("_complete")
-    val stamp = graft.FixtureStamp.stamp("v1", d, "documents")
-    if (graft.FixtureStamp.upToDate(marker, stamp)) return dir.toString
-    graft.Fs.deleteRecursively(dir)
-    writeMediaIndexBase(s, d, dir.toString)
-    appendMediaIndexDelta(s, d, dir.toString)
-    graft.FixtureStamp.complete(marker, stamp)
-    dir.toString
-  }
+  private[graft] def mediaIndexDir(s: SparkSession, d: String): String =
+    graft.Fs.staged("media_band_index", d,
+        graft.FixtureStamp.stamp("v1", d, "documents")) { dir =>
+      writeMediaIndexBase(s, d, dir.toString)
+      appendMediaIndexDelta(s, d, dir.toString)
+    }
 
   /** Probe top-k over an arbitrary (neighbor_id, phi, band, bkey) index
     * relation — the ONE search plan every persisted-index variant
@@ -797,8 +791,7 @@ object MultimodalOps extends QueryPack {
     "q_media_index_forget",
     (s, d) => {
       import s.implicits._
-      val dir = graft.streaming.StreamingOps
-        .indexArtifactDir("media_band_index_forget", d).toString
+      val dir = graft.Fs.artifactDir("media_band_index_forget", d).toString
       buildMediaIndexStore(s, d, dir) // one encode+hash pass (r16)
       forgetMediaIndex(s, d, dir,
         col("doc_id") % ShardOps.ForgetMod === ShardOps.ForgetRes)
@@ -847,38 +840,31 @@ object MultimodalOps extends QueryPack {
   }
 
   private[graft] def streamMediaIndexLog(s: SparkSession, d: String)
-      : String = {
-    import s.implicits._
-    val dir = graft.streaming.StreamingOps.streamPipeDir(s, d)
-    val outPath = graft.streaming.StreamingOps
-      .indexArtifactDir("stream_media_band_index", d)
-    val marker = outPath.resolve("_complete")
-    val stamp = graft.FixtureStamp.stamp("v1", d, "documents")
-    if (graft.FixtureStamp.upToDate(marker, stamp)) return outPath.toString
-    graft.Fs.deleteRecursively(outPath)
-    val out = outPath.toString
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    graft.streaming.StreamingOps.withStreamPartitions(s,
-      graft.Fs.partitionsFor(dir)) { ss =>
-      val q = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(dir)
-        .writeStream
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          streamMediaIndexBatch(batch, batchId, out)
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
+      : String =
+    graft.Fs.staged("stream_media_band_index", d,
+        graft.FixtureStamp.stamp("v1", d, "documents")) { outPath =>
+      val dir = graft.streaming.StreamingOps.streamPipeDir(s, d)
+      val out = outPath.toString
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("doc_id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("text",
+          org.apache.spark.sql.types.StringType)))
+      graft.streaming.StreamingOps.withStreamPartitions(s,
+        graft.Fs.partitionsFor(dir)) { ss =>
+        val q = ss.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1")
+          .option("latestFirst", "false")
+          .parquet(dir)
+          .writeStream
+          .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+            streamMediaIndexBatch(batch, batchId, out)
+          }
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
     }
-    graft.FixtureStamp.complete(marker, stamp)
-    out
-  }
 
   private val mediaSearchStreamIndexed = QueryDef(
     "q_stream_media_index",
@@ -909,8 +895,7 @@ object MultimodalOps extends QueryPack {
     (s, d) => {
       import s.implicits._
       val log = streamMediaIndexLog(s, d)
-      val basePath = graft.streaming.StreamingOps
-        .indexArtifactDir("stream_media_band_base", d)
+      val basePath = graft.Fs.artifactDir("stream_media_band_base", d)
       s.read.parquet(log)
         .select($"media_id", $"ph", $"band", $"bkey")
         .distinct()
@@ -1508,18 +1493,12 @@ object MultimodalOps extends QueryPack {
       .write.mode("overwrite").partitionBy("gen").parquet(dir)
   }
 
-  private[graft] def audioIndexDir(s: SparkSession, d: String): String = {
-    val dir = graft.streaming.StreamingOps
-      .indexArtifactDir("audio_band_index", d)
-    val marker = dir.resolve("_complete")
-    val stamp = graft.FixtureStamp.stamp("v1", d, "documents")
-    if (graft.FixtureStamp.upToDate(marker, stamp)) return dir.toString
-    graft.Fs.deleteRecursively(dir)
-    writeAudioIndexBase(s, d, dir.toString)
-    appendAudioIndexDelta(s, d, dir.toString)
-    graft.FixtureStamp.complete(marker, stamp)
-    dir.toString
-  }
+  private[graft] def audioIndexDir(s: SparkSession, d: String): String =
+    graft.Fs.staged("audio_band_index", d,
+        graft.FixtureStamp.stamp("v1", d, "documents")) { dir =>
+      writeAudioIndexBase(s, d, dir.toString)
+      appendAudioIndexDelta(s, d, dir.toString)
+    }
 
   /** Search over the persisted audio index — composed from the ONE
     * audio search plan ([[audioProbeTopK]]) and the shared index read,
@@ -1567,8 +1546,7 @@ object MultimodalOps extends QueryPack {
     "q_audio_index_forget",
     (s, d) => {
       import s.implicits._
-      val dir = graft.streaming.StreamingOps
-        .indexArtifactDir("audio_band_index_forget", d).toString
+      val dir = graft.Fs.artifactDir("audio_band_index_forget", d).toString
       buildAudioIndexStore(s, d, dir) // one encode+fingerprint pass (r16)
       forgetAudioIndex(s, d, dir,
         col("doc_id") % ShardOps.ForgetMod === ShardOps.ForgetRes)

@@ -241,8 +241,7 @@ object SearchOps extends QueryPack {
   // query-cardinality weight relation — the corpus is never re-read.
 
   private[graft] def postingIndexDir(d: String): String =
-    graft.streaming.StreamingOps
-      .indexArtifactDir("posting_index_forget", d).toString
+    graft.Fs.artifactDir("posting_index_forget", d).toString
 
   private[graft] def postingMetaDir(dir: String): String = dir + "_meta"
 

@@ -39,7 +39,7 @@ object ShardOps extends QueryPack {
     * full-path-hash scheme (r11 basename-collision rule), one
     * implementation for every artifact family. */
   private[graft] def shardDir(d: String): String =
-    graft.streaming.StreamingOps.indexArtifactDir("shard_ids", d).toString
+    graft.Fs.artifactDir("shard_ids", d).toString
 
   /** Shared pack step: per-shard (doc_id, pos, subpos) total order →
     * running token index → [[SeqLen]]-sized rows, grouped to one packed
@@ -157,7 +157,7 @@ object ShardOps extends QueryPack {
   // q_stream_index_maintain LSM posture applied to training shards.
 
   private[graft] def appendShardDir(d: String): String =
-    graft.streaming.StreamingOps.indexArtifactDir("shard_append", d).toString
+    graft.Fs.artifactDir("shard_append", d).toString
 
   /** One ingest generation's subword-id stream (the shared
     * [[GenerationLayout.ShardStore]] rule). */
@@ -310,7 +310,7 @@ object ShardOps extends QueryPack {
   // shard compacts independently — the window partitions on shard.
 
   private[graft] def compactShardDir(d: String): String =
-    graft.streaming.StreamingOps.indexArtifactDir("shard_compact", d).toString
+    graft.Fs.artifactDir("shard_compact", d).toString
 
   /** Compact the two-generation store at `dir`: re-pack [base tail ∪
     * gen-1] into gen=2 files, then vacuum the gen=1 directories.
@@ -462,7 +462,7 @@ object ShardOps extends QueryPack {
   private[graft] val ForgetRes = 5L
 
   private[graft] def forgetShardDir(d: String): String =
-    graft.streaming.StreamingOps.indexArtifactDir("shard_forget", d).toString
+    graft.Fs.artifactDir("shard_forget", d).toString
 
   /** As [[packStream]] (docStats = true form), but packing EACH
     * (shard, gen) independently in ONE pass: the window partitions on

@@ -32,35 +32,30 @@ object SourceOps extends QueryPack {
 
   /** Deterministic payload corpus for one sf; idempotent. */
   def materializePayloads(s: SparkSession, d: String): String = {
-    import s.implicits._
-    // resolved from the working directory; remembered for the lazy oracle
-    val dir = Paths.get("target", "payloads", new java.io.File(d).getName)
-      .toAbsolutePath
-    lastPayloadDir = Some(dir.toString)
-    val marker = dir.resolve("_complete")
-    val stamp = graft.FixtureStamp.stamp("v2", d, "events")
-    if (graft.FixtureStamp.upToDate(marker, stamp)) return dir.toString
-    Files.createDirectories(dir)
-    val rows = Tables.events(s, d)
-      .orderBy($"event_id").limit(NPayloads)
-      .select($"event_id", unix_timestamp($"ts").as("ts_s"), $"value")
-      .as[(Long, Long, Double)].collect()
-    rows.foreach { case (id, tsS, v) =>
-      val spiderTs = 1700000000L + id
-      val json =
-        if (id % 2 == 0)
-          s"""{"spider_ts": $spiderTs, "price_data": {"USD": ${math.round(v)}, "time": $tsS}}"""
-        else
-          s"""{"spider_ts": $spiderTs, "hash_rate_data": {"currentHashrate": ${math.round(v * 1e6)}, "currentDifficulty": ${math.round(v * 1e4)}}}"""
-      Files.write(dir.resolve(f"payload_$id%06d.json"),
-        json.getBytes(StandardCharsets.UTF_8))
+    val dir = graft.Fs.staged("payloads", d,
+        graft.FixtureStamp.stamp("v2", d, "events")) { dir =>
+      import s.implicits._
+      val rows = Tables.events(s, d)
+        .orderBy($"event_id").limit(NPayloads)
+        .select($"event_id", unix_timestamp($"ts").as("ts_s"), $"value")
+        .as[(Long, Long, Double)].collect()
+      rows.foreach { case (id, tsS, v) =>
+        val spiderTs = 1700000000L + id
+        val json =
+          if (id % 2 == 0)
+            s"""{"spider_ts": $spiderTs, "price_data": {"USD": ${math.round(v)}, "time": $tsS}}"""
+          else
+            s"""{"spider_ts": $spiderTs, "hash_rate_data": {"currentHashrate": ${math.round(v * 1e6)}, "currentDifficulty": ${math.round(v * 1e4)}}}"""
+        Files.write(dir.resolve(f"payload_$id%06d.json"),
+          json.getBytes(StandardCharsets.UTF_8))
+      }
+      // one malformed payload: exercises the reference's swallow-and-log
+      // error path (extract.py:14-19) without failing the scan
+      Files.write(dir.resolve("payload_bad.json"),
+        "{not json".getBytes(StandardCharsets.UTF_8))
     }
-    // one malformed payload: exercises the reference's swallow-and-log
-    // error path (extract.py:14-19) without failing the scan
-    Files.write(dir.resolve("payload_bad.json"),
-      "{not json".getBytes(StandardCharsets.UTF_8))
-    graft.FixtureStamp.complete(marker, stamp)
-    dir.toString
+    lastPayloadDir = Some(dir) // for the lazy oracle
+    dir
   }
 
   /** Shared by the batch scan and its MicroBatchStream twin — identical
@@ -70,7 +65,7 @@ object SourceOps extends QueryPack {
   private def payloadOracle: String = {
     val dir = lastPayloadDir.getOrElse(
       // no payload query ran in this JVM — default to the driver's verify sf
-      Paths.get("target", "payloads", "sf0.01").toAbsolutePath.toString)
+      graft.Fs.artifactDir("payloads", "sf0.01").toString)
     s"""SELECT
       CASE WHEN price_data IS NOT NULL THEN 'price'
            WHEN hash_rate_data IS NOT NULL THEN 'hashrate'
@@ -135,8 +130,7 @@ object SourceOps extends QueryPack {
     oracleFn = Some(() => payloadOracle))
 
   private def sinkDir(kind: String, d: String): String =
-    Paths.get("target", kind, new java.io.File(d).getName)
-      .toAbsolutePath.toString
+    graft.Fs.artifactDir(kind, d).toString
 
   /** Exact cents view of the double value column (decimal*100 as long) —
     * survives any text format without float round-trip concerns. */
@@ -394,23 +388,17 @@ object SourceOps extends QueryPack {
   // (doc_id%3=0) WITHOUT `lang`, vintage-2 files with it — landed as
   // plain part files in ONE flat directory, the real landing-zone shape.
 
-  private[graft] def schemaEvoDir(s: SparkSession, d: String): String = {
-    import s.implicits._
-    val dir = graft.streaming.StreamingOps.indexArtifactDir("schema_evo", d)
-    val marker = dir.resolve("_complete")
-    val stamp = graft.FixtureStamp.stamp("v1", d, "documents")
-    if (graft.FixtureStamp.upToDate(marker, stamp)) return dir.toString
-    graft.Fs.deleteRecursively(dir)
-    val docs = Tables.documents(s, d)
-    docs.filter($"doc_id" % 3 === 0)
-      .select($"doc_id", $"text") // the pre-lang vintage
-      .write.mode("overwrite").parquet(dir.toString)
-    docs.filter($"doc_id" % 3 =!= 0)
-      .select($"doc_id", $"text", $"lang")
-      .write.mode("append").parquet(dir.toString)
-    graft.FixtureStamp.complete(marker, stamp)
-    dir.toString
-  }
+  // v2: one file per vintage (the landing-zone builder's layout)
+  private[graft] def schemaEvoDir(s: SparkSession, d: String): String =
+    graft.Fs.landingZone("schema_evo", d,
+        graft.FixtureStamp.stamp("v2", d, "documents")) {
+      import s.implicits._
+      val docs = Tables.documents(s, d)
+      Seq(docs.filter($"doc_id" % 3 === 0)
+          .select($"doc_id", $"text"), // the pre-lang vintage
+        docs.filter($"doc_id" % 3 =!= 0)
+          .select($"doc_id", $"text", $"lang"))
+    }
 
   /** The unified schema a reader DECLARES over the drifted zone. */
   private[graft] val evoSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -464,68 +452,27 @@ object SourceOps extends QueryPack {
   // v1 (doc_id%3=0): INT32 doc_id, no lang column at all;
   // v2 (doc_id%3=1): BIGINT doc_id, the OLD column name lang_code;
   // v3 (doc_id%3=2): BIGINT doc_id, the current name lang.
-  private[graft] def schemaEvo2Dir(s: SparkSession, d: String): String = {
-    import s.implicits._
-    val dir = graft.streaming.StreamingOps.indexArtifactDir("schema_evo2", d)
-    val marker = dir.resolve("_complete")
-    val stamp = graft.FixtureStamp.stamp("v1", d, "documents")
-    if (graft.FixtureStamp.upToDate(marker, stamp)) return dir.toString
-    graft.Fs.deleteRecursively(dir)
-    val docs = Tables.documents(s, d)
-    docs.filter($"doc_id" % 3 === 0) // the int32-id, pre-lang vintage
-      .select($"doc_id".cast("int").as("doc_id"), $"text")
-      .write.mode("overwrite").parquet(dir.toString)
-    docs.filter($"doc_id" % 3 === 1) // the renamed-column vintage
-      .select($"doc_id", $"text", $"lang".as("lang_code"))
-      .write.mode("append").parquet(dir.toString)
-    docs.filter($"doc_id" % 3 === 2) // the current vintage
-      .select($"doc_id", $"text", $"lang")
-      .write.mode("append").parquet(dir.toString)
-    graft.FixtureStamp.complete(marker, stamp)
-    dir.toString
-  }
+  // One file per vintage, mtimes pinned oldest-first (v2: the
+  // landing-zone builder's layout).
+  private[graft] def schemaEvo2Dir(s: SparkSession, d: String): String =
+    graft.Fs.landingZone("schema_evo2", d,
+        graft.FixtureStamp.stamp("v2", d, "documents")) {
+      import s.implicits._
+      val docs = Tables.documents(s, d)
+      Seq(docs.filter($"doc_id" % 3 === 0) // the int32-id, pre-lang vintage
+          .select($"doc_id".cast("int").as("doc_id"), $"text"),
+        docs.filter($"doc_id" % 3 === 1) // the renamed-column vintage
+          .select($"doc_id", $"text", $"lang".as("lang_code")),
+        docs.filter($"doc_id" % 3 === 2) // the current vintage
+          .select($"doc_id", $"text", $"lang"))
+    }
 
-  /** Streaming landing zone of the SAME three drifted vintages, one
-    * file per vintage with pinned mtimes so the stream admits them
-    * oldest-first (v1 int32/pre-lang → v2 renamed → v3 current) — the
-    * production shape where a landing zone drifts MID-STREAM
-    * (q_stream_schema_evolution; VERDICT r14 task 4). */
-  private[graft] def schemaEvo2StreamDir(s: SparkSession, d: String): String = {
-    import s.implicits._
-    val dir = graft.streaming.StreamingOps
-      .indexArtifactDir("schema_evo2_stream", d)
-    val marker = dir.resolve("_complete")
-    val stamp = graft.FixtureStamp.stamp("v1", d, "documents")
-    if (graft.FixtureStamp.upToDate(marker, stamp)) return dir.toString
-    graft.Fs.deleteRecursively(dir)
-    val docs = Tables.documents(s, d)
-    docs.filter($"doc_id" % 3 === 0)
-      .select($"doc_id".cast("int").as("doc_id"), $"text")
-      .coalesce(1).write.mode("overwrite").parquet(dir.toString)
-    def parts: Set[java.io.File] = new java.io.File(dir.toString)
-      .listFiles().filter(_.getName.startsWith("part-")).toSet
-    val v1 = parts
-    docs.filter($"doc_id" % 3 === 1)
-      .select($"doc_id", $"text", $"lang".as("lang_code"))
-      .coalesce(1).write.mode("append").parquet(dir.toString)
-    val v12 = parts
-    docs.filter($"doc_id" % 3 === 2)
-      .select($"doc_id", $"text", $"lang")
-      .coalesce(1).write.mode("append").parquet(dir.toString)
-    val all = parts
-    val t = System.currentTimeMillis()
-    // the oldest-first admission order (and the restart test's
-    // sortBy(lastModified)) depends on these mtimes — a silent
-    // setLastModified failure would stamp an order-scrambled landing
-    // zone complete, so fail the fixture build loudly (ADVICE r15)
-    def touch(fs: Set[java.io.File], ts: Long): Unit = fs.foreach(f =>
-      require(f.setLastModified(ts), s"setLastModified failed for $f"))
-    touch(v1, t - 120000L)
-    touch(v12 -- v1, t - 60000L)
-    touch(all -- v12, t)
-    graft.FixtureStamp.complete(marker, stamp)
-    dir.toString
-  }
+  /** The streaming view of the same zone: its pinned mtimes make the
+    * stream admit the vintages oldest-first (v1 int32/pre-lang → v2
+    * renamed → v3 current) — the production shape where a landing zone
+    * drifts MID-STREAM (q_stream_schema_evolution). */
+  private[graft] def schemaEvo2StreamDir(s: SparkSession, d: String): String =
+    schemaEvo2Dir(s, d)
 
   /** The declared unified schema: widened id + BOTH lang names. */
   private[graft] val evo2Schema = org.apache.spark.sql.types.StructType(Seq(

@@ -51,14 +51,6 @@ object StreamingOps extends QueryPack {
     // multi-config service can accumulate.
     cap = 4, onEvict = _ => ())
 
-  /** Fixture-zone mtime pin — batch admission order is load-bearing in
-    * every landing zone, so a silent setLastModified failure must fail
-    * the build loudly, not stamp an order-scrambled zone complete (the
-    * SourceOps ADVICE-r15 rule, applied to every site r16). */
-  private[graft] def touchOrFail(fs: Iterable[java.io.File], ts: Long): Unit =
-    fs.foreach(f => require(f.setLastModified(ts),
-      s"setLastModified failed for $f"))
-
   private[graft] def withStreamPartitions[T](s: SparkSession, n: Int,
       conf: Seq[(String, String)] = Nil)(
       body: SparkSession => T): T = {
@@ -68,33 +60,16 @@ object StreamingOps extends QueryPack {
       conf.foreach { case (k, v) => ss.conf.set(k, v) }
       ss
     }
-    // FRESH per-call checkpoint root, placed on a RAM-backed filesystem
-    // when the host has one (VERDICT r8 task 8): every stateful
-    // micro-batch commits offsets + state per partition with fsyncs, and
-    // on a disk-backed java.io.tmpdir that fixed cost dominated the
-    // streaming family's bench profile. RAM-backed checkpoints are the
-    // local-mode analog of the NVMe-local state dirs a cluster deployment
-    // provisions; durability semantics are unchanged for these
-    // bounded-input runs (the checkpoint never outlives the query —
-    // it is deleted below). MUST stay fresh per call: reusing a
-    // checkpoint would RESUME state and falsify the query's result.
-    val root = java.nio.file.Paths.get("/dev/shm")
-    val ckpt =
-      if (java.nio.file.Files.isDirectory(root) &&
-          java.nio.file.Files.isWritable(root))
-        Some(java.nio.file.Files.createTempDirectory(root, "graft_ckpt_"))
-      else None
-    // ALWAYS reconcile the conf on the POOLED session (ADVICE r9): when
-    // the RAM-backed tempdir isn't available this call, a previous
-    // call's (already-deleted) path must not linger on the reused
-    // session — unset it so each query falls back to its own
-    // disk-backed default checkpoint dir.
-    ckpt match {
-      case Some(p) =>
-        scoped.conf.set("spark.sql.streaming.checkpointLocation", p.toString)
-      case None =>
-        scoped.conf.unset("spark.sql.streaming.checkpointLocation")
-    }
+    // FRESH per-call checkpoint root under the scratch root (RAM-backed
+    // when the host has one, the local-mode analog of the NVMe-local
+    // state dirs a cluster deployment provisions); durability semantics
+    // are unchanged for these bounded-input runs (the checkpoint never
+    // outlives the query — it is deleted below). MUST stay fresh per
+    // call: reusing a checkpoint would RESUME state and falsify the
+    // query's result.
+    val ckpt = java.nio.file.Files.createTempDirectory(graft.Fs.scratchRoot,
+      "graft_ckpt_")
+    scoped.conf.set("spark.sql.streaming.checkpointLocation", ckpt.toString)
     // changelog checkpointing: commit the per-batch delta instead of
     // zip-snapshotting the whole RocksDB instance every micro-batch —
     // the production-recommended mode for frequent small commits; a
@@ -103,47 +78,21 @@ object StreamingOps extends QueryPack {
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
       "true")
     try body(scoped)
-    finally ckpt.foreach(graft.Fs.deleteRecursively)
+    finally graft.Fs.deleteRecursively(ckpt)
   }
 
-  /** Per-run scratch checkpoint root for queries that must pass an
-    * EXPLICIT checkpointLocation (file sinks, the statestore-reader
-    * pair): RAM-backed when the host has one, disk fallback otherwise
-    * — the r8 rule that moved withStreamPartitions' per-call
-    * checkpoints off disk, extended in r16 to the four queries that
-    * bypassed it (each stateful micro-batch commits offsets + state
-    * deltas per partition with fsyncs; on the ext4 target/ dir that
-    * fixed cost dominated these queries' bench profile). The
-    * checkpoint never outlives its usefulness — every caller wipes it
-    * at entry and the bounded landing-zone runs re-stream per
-    * invocation — so durability semantics are unchanged; at cluster
-    * scale this is the NVMe-local state-dir analog. Deterministic
-    * per-(kind, corpus) names keep the /dev/shm footprint bounded. */
+  /** Per-run checkpoint for queries that must pass an EXPLICIT
+    * checkpointLocation (file sinks, the statestore-reader pair), under
+    * the same scratch root as [[withStreamPartitions]]' checkpoints,
+    * wiped at entry. Every caller re-streams its bounded landing zone
+    * per invocation, so durability semantics are unchanged.
+    * Deterministic per-(kind, corpus) names keep the scratch footprint
+    * bounded. */
   private[graft] def scratchCheckpointDir(kind: String, d: String)
       : java.nio.file.Path = {
-    val p = scratchCheckpointPath(kind, d)
+    val p = graft.Fs.scratchCheckpointPath(kind, d)
     graft.Fs.deleteRecursively(p)
     p
-  }
-
-  /** Resolve (WITHOUT wiping) the scratch checkpoint path for `kind`
-    * over corpus `d` — the same RAM-backed-or-disk rule
-    * [[scratchCheckpointDir]] applies. Split out so offline state
-    * readers (the statestore-source specs) can locate the checkpoint
-    * the query actually used instead of re-deriving the fallback rule
-    * (the r16 batch-1 move to /dev/shm silently stranded a spec on the
-    * old disk path). */
-  private[graft] def scratchCheckpointPath(kind: String, d: String)
-      : java.nio.file.Path = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    if (java.nio.file.Files.isDirectory(shm) &&
-        java.nio.file.Files.isWritable(shm))
-      // full-path hash suffix — the indexArtifactDir collision rule
-      shm.resolve(s"graft_ck_${kind}_" + new java.io.File(d).getName +
-        "-" + java.security.MessageDigest.getInstance("MD5")
-          .digest(d.getBytes("UTF-8")).take(4)
-          .map("%02x".format(_)).mkString)
-    else indexArtifactDir(kind, d)
   }
 
   /** Streaming queries active on ANY pooled scoped session — the outer
@@ -247,35 +196,24 @@ object StreamingOps extends QueryPack {
   /** Typed event row (also used by specs driving MemoryStream). */
   case class Ev(ts: java.sql.Timestamp, user_id: Long, value: Double)
 
-  /** Materialize a two-file streaming input under target/: file 1 = the
-    * whole events table (µs timestamps, so the stream source needs no
-    * ns workaround), file 2 = a single far-future sentinel row that
-    * advances the watermark past every real session. Idempotent per sf. */
-  private[graft] def streamInputDir(s: SparkSession, d: String): String = {
-    import s.implicits._
-    val dir = java.nio.file.Paths.get("target", "stream_in",
-      new java.io.File(d).getName).toAbsolutePath
-    val marker = dir.resolve("_complete")
-    val stamp = graft.FixtureStamp.stamp("v2", d, "events")
-    if (graft.FixtureStamp.upToDate(marker, stamp)) return dir.toString
-    val ev = Tables.events(s, d).select($"ts", $"user_id", $"value")
-    ev.coalesce(1).write.mode("overwrite").parquet(dir.toString)
-    def parts: Set[java.io.File] = new java.io.File(dir.toString)
-      .listFiles().filter(_.getName.startsWith("part-")).toSet
-    val eventParts = parts
-    val maxTs = ev.agg(max($"ts")).head().getTimestamp(0)
-    Seq(Ev(new java.sql.Timestamp(maxTs.getTime + 86400L * 1000L), -1L, 0.0))
-      .toDF().coalesce(1).write.mode("append").parquet(dir.toString)
-    // FileStreamSource orders batches by modification time; an mtime tie
-    // between the events file and the sentinel could admit the sentinel
-    // FIRST, advancing the watermark and dropping every real event as
-    // late. Pin the order explicitly: events at t-60s, sentinel at t.
-    val t = System.currentTimeMillis()
-    touchOrFail(eventParts, t - 60000L)
-    touchOrFail(parts -- eventParts, t)
-    graft.FixtureStamp.complete(marker, stamp)
-    dir.toString
-  }
+  /** A far-future timestamp: one day past the latest event in `ev`.
+    * Sentinel rows carry it to advance the watermark past every real
+    * event. */
+  private def farFuture(ev: DataFrame): java.sql.Timestamp =
+    new java.sql.Timestamp(
+      ev.agg(max(col("ts"))).head().getTimestamp(0).getTime + 86400L * 1000L)
+
+  /** Two-file streaming input: file 1 = the whole events table (µs
+    * timestamps, so the stream source needs no ns workaround), file 2 =
+    * a single far-future sentinel row that advances the watermark past
+    * every real session. Idempotent per sf. */
+  private[graft] def streamInputDir(s: SparkSession, d: String): String =
+    graft.Fs.landingZone("stream_in", d,
+        graft.FixtureStamp.stamp("v2", d, "events")) {
+      import s.implicits._
+      val ev = Tables.events(s, d).select($"ts", $"user_id", $"value")
+      Seq(ev, Seq(Ev(farFuture(ev), -1L, 0.0)).toDF())
+    }
 
   // No driver materialization: a REAL file-source stream, one file per
   // micro-batch (events, then the sentinel), so append mode emits every
@@ -714,23 +652,16 @@ object StreamingOps extends QueryPack {
     * table, file 2 = one far-future sentinel per join side (user_id < 0,
     * filtered back out) so both sides' watermarks advance past every
     * real event and the join state fully drains. Idempotent per sf. */
-  private def streamInputDir2(s: SparkSession, d: String): String = {
-    import s.implicits._
-    val dir = java.nio.file.Paths.get("target", "stream_in2",
-      new java.io.File(d).getName).toAbsolutePath
-    val marker = dir.resolve("_complete")
-    val stamp = graft.FixtureStamp.stamp("v2", d, "events")
-    if (graft.FixtureStamp.upToDate(marker, stamp)) return dir.toString
-    val ev = Tables.events(s, d)
-      .select($"event_id", $"ts", $"user_id", $"event_type")
-    ev.coalesce(1).write.mode("overwrite").parquet(dir.toString)
-    val maxTs = ev.agg(max($"ts")).head().getTimestamp(0)
-    val far = new java.sql.Timestamp(maxTs.getTime + 86400L * 1000L)
-    Seq(Ev2(-1L, far, -1L, "purchase"), Ev2(-2L, far, -1L, "view"))
-      .toDF().coalesce(1).write.mode("append").parquet(dir.toString)
-    graft.FixtureStamp.complete(marker, stamp)
-    dir.toString
-  }
+  private def streamInputDir2(s: SparkSession, d: String): String =
+    graft.Fs.landingZone("stream_in2", d,
+        graft.FixtureStamp.stamp("v2", d, "events")) {
+      import s.implicits._
+      val ev = Tables.events(s, d)
+        .select($"event_id", $"ts", $"user_id", $"event_type")
+      val far = farFuture(ev)
+      Seq(ev, Seq(Ev2(-1L, far, -1L, "purchase"), Ev2(-2L, far, -1L, "view"))
+        .toDF())
+    }
 
   // The O12 combine generalized to a REAL stream-stream join: each
   // purchase matched to the same user's views from the preceding 10
@@ -834,8 +765,7 @@ object StreamingOps extends QueryPack {
     (s, d) => {
       import s.implicits._
       val dir = streamInputDir(s, d)
-      val outPath = java.nio.file.Paths.get("target", "sink_foreachbatch",
-        new java.io.File(d).getName).toAbsolutePath
+      val outPath = graft.Fs.artifactDir("sink_foreachbatch", d)
       graft.Fs.deleteRecursively(outPath) // idempotent across reruns
       val out = outPath.toString
       val schema = StructType(Seq(
@@ -884,8 +814,7 @@ object StreamingOps extends QueryPack {
     (s, d) => {
       import s.implicits._
       val dir = streamInputDir(s, d)
-      val base = java.nio.file.Paths.get("target", "sink_stream_files",
-        new java.io.File(d).getName).toAbsolutePath
+      val base = graft.Fs.artifactDir("sink_stream_files", d)
       graft.Fs.deleteRecursively(base)
       val schema = StructType(Seq(
         StructField("ts", TimestampType), StructField("user_id", LongType),
@@ -917,27 +846,19 @@ object StreamingOps extends QueryPack {
       "log + checkpoint; read-back equals the batch aggregate")
 
   // ------------------------- streaming curation: model quality gate
-  /** Documents as a two-file landing zone under target/ — the corpus
-    * split on doc_id parity so `maxFilesPerTrigger=1` exercises two
-    * micro-batches. No watermark/mtime pinning needed: the gate is
-    * stateless and the complete-mode aggregate is batch-order-invariant.
-    * Idempotent per sf ([[graft.FixtureStamp]]-guarded). */
-  private[graft] def streamDocsDir(s: SparkSession, d: String): String = {
-    import s.implicits._
-    val dir = java.nio.file.Paths.get("target", "stream_docs",
-      new java.io.File(d).getName).toAbsolutePath
-    val marker = dir.resolve("_complete")
-    val stamp = graft.FixtureStamp.stamp("v1", d, "documents")
-    if (graft.FixtureStamp.upToDate(marker, stamp)) return dir.toString
-    val docs = graft.Tables.documents(s, d)
-      .select($"doc_id", $"text", $"source")
-    docs.filter($"doc_id" % 2 === 0)
-      .coalesce(1).write.mode("overwrite").parquet(dir.toString)
-    docs.filter($"doc_id" % 2 =!= 0)
-      .coalesce(1).write.mode("append").parquet(dir.toString)
-    graft.FixtureStamp.complete(marker, stamp)
-    dir.toString
-  }
+  /** Documents as a two-file landing zone — the corpus split on doc_id
+    * parity so `maxFilesPerTrigger=1` exercises two micro-batches. The
+    * gate is stateless and the complete-mode aggregate is
+    * batch-order-invariant, so the pinned order is not load-bearing
+    * here. Idempotent per sf. */
+  private[graft] def streamDocsDir(s: SparkSession, d: String): String =
+    graft.Fs.landingZone("stream_docs", d,
+        graft.FixtureStamp.stamp("v1", d, "documents")) {
+      val docs = graft.Tables.documents(s, d)
+        .select(col("doc_id"), col("text"), col("source"))
+      Seq(docs.filter(col("doc_id") % 2 === 0),
+        docs.filter(col("doc_id") % 2 =!= 0))
+    }
 
   // The streaming form of the curation tier's model gate
   // (q_text_quality_model): score each arriving document with the
@@ -1018,32 +939,18 @@ object StreamingOps extends QueryPack {
   // The read-back sum over deltas equals the batch index stats, which is
   // the DuckDB oracle; n_batches counts the delta rows a term received
   // (= distinct doc_id parities, since streamDocsDir splits on parity).
+  private val deltaLogMemo = new graft.Memo.Bounded[
+    (String, String, String), String](cap = 4, onEvict = _ => ())
   /** Run the index-maintenance stream and return the delta-log path —
     * shared by the LSM read (q_stream_index_maintain) and the compaction
     * (q_stream_index_compact). Memoized per (context, corpus, stamp):
     * the log content is deterministic within a JVM, so the second
     * consumer reads the same log instead of re-running the stream. */
-  /** Landing dir for a corpus-derived index artifact. The suffix hashes
-    * the FULL corpus path: the memo below is keyed by the full path, so
-    * a basename-only dir would let two corpora with the same basename
-    * (e.g. two fixture roots both ending in `sf0.01`) overwrite each
-    * other's logs while stale memo entries still point at them (r11
-    * self-review finding). */
-  private[graft] def indexArtifactDir(kind: String, d: String)
-      : java.nio.file.Path = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    java.nio.file.Paths.get("target", kind,
-      new java.io.File(d).getName + "-" + tag).toAbsolutePath
-  }
-
-  private val deltaLogMemo = new graft.Memo.Bounded[
-    (String, String, String), String](cap = 4, onEvict = _ => ())
   private[graft] def indexDeltaLog(s: SparkSession, d: String): String =
     deltaLogMemo.getOrElseUpdate((s.sparkContext.applicationId, d,
       graft.FixtureStamp.stamp("v1", d, "documents"))) {
       val dir = streamDocsDir(s, d)
-      val outPath = indexArtifactDir("sink_index_deltas", d)
+      val outPath = graft.Fs.artifactDir("sink_index_deltas", d)
       graft.Fs.deleteRecursively(outPath) // fresh delta log per run
       val out = outPath.toString
       val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -1125,7 +1032,7 @@ object StreamingOps extends QueryPack {
       import s.implicits._
       val log = indexDeltaLog(s, d)
       // overwrite mode replaces the directory itself — no manual delete
-      val basePath = indexArtifactDir("sink_index_base", d)
+      val basePath = graft.Fs.artifactDir("sink_index_base", d)
       s.read.parquet(log)
         .groupBy($"tok", $"batch_id")
         .agg(max($"df_d").as("df_d"), max($"cf_d").as("cf_d"))
@@ -1153,35 +1060,17 @@ object StreamingOps extends QueryPack {
     * sentinel row per file-ordering rules (events first, sentinel last
     * by pinned mtime) so every real 5-minute window closes and emits in
     * append mode. Idempotent per sf. */
-  private def streamInputDir3(s: SparkSession, d: String): String = {
-    import s.implicits._
-    val dir = java.nio.file.Paths.get("target", "stream_in3",
-      new java.io.File(d).getName).toAbsolutePath
-    val marker = dir.resolve("_complete")
+  private def streamInputDir3(s: SparkSession, d: String): String =
     // v2: the sentinel's event_type gained a U+0001 prefix in r12; the
     // stamp must change with the content rules or a pre-existing fixture
     // keeps the old sentinel that the defensive filter no longer matches
-    val stamp = graft.FixtureStamp.stamp("v2", d, "events")
-    if (graft.FixtureStamp.upToDate(marker, stamp)) return dir.toString
-    val ev = Tables.events(s, d).select($"ts", $"event_type", $"value")
-    ev.coalesce(1).write.mode("overwrite").parquet(dir.toString)
-    def parts: Set[java.io.File] = new java.io.File(dir.toString)
-      .listFiles().filter(_.getName.startsWith("part-")).toSet
-    val eventParts = parts
-    val maxTs = ev.agg(max($"ts")).head().getTimestamp(0)
-    Seq((new java.sql.Timestamp(maxTs.getTime + 86400L * 1000L),
-        SentinelType, 0.0))
-      .toDF("ts", "event_type", "value")
-      .coalesce(1).write.mode("append").parquet(dir.toString)
-    // pin batch order: events before sentinel (the streamInputDir rule —
-    // a mtime tie could admit the sentinel first and drop every real
-    // event as late)
-    val t = System.currentTimeMillis()
-    touchOrFail(eventParts, t - 60000L)
-    touchOrFail(parts -- eventParts, t)
-    graft.FixtureStamp.complete(marker, stamp)
-    dir.toString
-  }
+    graft.Fs.landingZone("stream_in3", d,
+        graft.FixtureStamp.stamp("v2", d, "events")) {
+      import s.implicits._
+      val ev = Tables.events(s, d).select($"ts", $"event_type", $"value")
+      Seq(ev, Seq((farFuture(ev), SentinelType, 0.0))
+        .toDF("ts", "event_type", "value"))
+    }
 
   // The leading byte is U+0001 (invisible in most renderings - ADVICE
   // r11 misread this as a bare "sentinel"): a control character no
@@ -1215,7 +1104,7 @@ object StreamingOps extends QueryPack {
       // to self-join, the documented MemorySink analyzer limit). Both
       // dirs are wiped per run so re-invocations re-stream instead of
       // serving the previous run's files through the same checkpoint.
-      val outPath = indexArtifactDir("stream_anomaly_out", d)
+      val outPath = graft.Fs.artifactDir("stream_anomaly_out", d)
       graft.Fs.deleteRecursively(outPath)
       val ckPath = scratchCheckpointDir("stream_anomaly_ck", d)
       withStreamPartitions(s, graft.Fs.partitionsFor(dir)) { ss =>
@@ -1274,46 +1163,31 @@ object StreamingOps extends QueryPack {
 
   // ----------------------------- streaming bloom ingest gate (r11 task 3)
   /** Delta-docs landing zone: the `doc_id % HoldoutMod == 0` batch split
-    * into two files (= two micro-batches). No mtime pinning, unlike
-    * streamInputDir3: the bloom gate is stateless and per-doc, so batch
-    * admission ORDER cannot change any result — a stage that becomes
-    * order-sensitive (watermarks, windows) must add the pinning.
-    * Idempotent per sf (FixtureStamp). */
-  private def streamDeltaDocsDir(s: SparkSession, d: String): String = {
-    import s.implicits._
-    val dir = java.nio.file.Paths.get("target", "stream_delta_docs",
-      new java.io.File(d).getName).toAbsolutePath
-    val marker = dir.resolve("_complete")
-    val stamp = graft.FixtureStamp.stamp("v1", d, "documents")
-    if (graft.FixtureStamp.upToDate(marker, stamp)) return dir.toString
-    val delta = graft.Tables.documents(s, d)
-      .where($"doc_id" % graft.operators.BpeOps.HoldoutMod === 0)
-      .select($"doc_id", $"text")
-    delta.filter(expr("(doc_id div 10) % 2 = 0"))
-      .coalesce(1).write.mode("overwrite").parquet(dir.toString)
-    delta.filter(expr("(doc_id div 10) % 2 <> 0"))
-      .coalesce(1).write.mode("append").parquet(dir.toString)
-    graft.FixtureStamp.complete(marker, stamp)
-    dir.toString
-  }
+    * into two files (= two micro-batches). The bloom gate is stateless
+    * and per-doc, so batch admission ORDER cannot change any result.
+    * Idempotent per sf. */
+  private def streamDeltaDocsDir(s: SparkSession, d: String): String =
+    graft.Fs.landingZone("stream_delta_docs", d,
+        graft.FixtureStamp.stamp("v1", d, "documents")) {
+      val delta = graft.Tables.documents(s, d)
+        .where(col("doc_id") % graft.operators.BpeOps.HoldoutMod === 0)
+        .select(col("doc_id"), col("text"))
+      Seq(delta.filter(expr("(doc_id div 10) % 2 = 0")),
+        delta.filter(expr("(doc_id div 10) % 2 <> 0")))
+    }
 
   /** The persisted base-corpus hash index (distinct md5 of normalized
     * text) — the artifact a production ingest keeps BESIDE the Bloom
     * filter: the filter sheds volume, the index settles candidates.
-    * Rebuilt per corpus version (FixtureStamp), read per micro-batch. */
-  private def baseHashDir(s: SparkSession, d: String): String = {
-    import s.implicits._
-    val path = indexArtifactDir("base_hash_index", d)
-    val marker = path.resolve("_complete")
-    val stamp = graft.FixtureStamp.stamp("v1", d, "documents")
-    if (graft.FixtureStamp.upToDate(marker, stamp)) return path.toString
-    graft.Tables.documents(s, d)
-      .where($"doc_id" % graft.operators.BpeOps.HoldoutMod =!= 0)
-      .select(md5(graft.operators.DedupOps.normText).as("h")).distinct()
-      .coalesce(1).write.mode("overwrite").parquet(path.toString)
-    graft.FixtureStamp.complete(marker, stamp)
-    path.toString
-  }
+    * Rebuilt per corpus version, read per micro-batch. */
+  private def baseHashDir(s: SparkSession, d: String): String =
+    graft.Fs.staged("base_hash_index", d,
+        graft.FixtureStamp.stamp("v1", d, "documents")) { path =>
+      graft.Tables.documents(s, d)
+        .where(col("doc_id") % graft.operators.BpeOps.HoldoutMod =!= 0)
+        .select(md5(graft.operators.DedupOps.normText).as("h")).distinct()
+        .coalesce(1).write.mode("overwrite").parquet(path.toString)
+    }
 
   // The production shape the batch q_dedup_bloom implies (the
   // reference's O2 throttle at corpus scale): each arriving micro-batch
@@ -1337,7 +1211,7 @@ object StreamingOps extends QueryPack {
       val dir = streamDeltaDocsDir(s, d)
       val bloom = graft.operators.DedupOps.baseBloom(s, d)
       val baseIdx = baseHashDir(s, d)
-      val outPath = indexArtifactDir("stream_dedup_bloom_out", d)
+      val outPath = graft.Fs.artifactDir("stream_dedup_bloom_out", d)
       graft.Fs.deleteRecursively(outPath)
       val out = outPath.toString
       val schema = StructType(Seq(
@@ -1399,18 +1273,12 @@ object StreamingOps extends QueryPack {
     * the post-batch watermark never evicts anything and the checkpoint
     * state holds EVERY (event_type, window) aggregate — a deterministic,
     * batch-replayable state snapshot. Idempotent per sf. */
-  private def streamInputDirState(s: SparkSession, d: String): String = {
-    import s.implicits._
-    val dir = java.nio.file.Paths.get("target", "stream_in_state",
-      new java.io.File(d).getName).toAbsolutePath
-    val marker = dir.resolve("_complete")
-    val stamp = graft.FixtureStamp.stamp("v1", d, "events")
-    if (graft.FixtureStamp.upToDate(marker, stamp)) return dir.toString
-    Tables.events(s, d).select($"ts", $"event_type", $"value")
-      .coalesce(1).write.mode("overwrite").parquet(dir.toString)
-    graft.FixtureStamp.complete(marker, stamp)
-    dir.toString
-  }
+  private def streamInputDirState(s: SparkSession, d: String): String =
+    graft.Fs.landingZone("stream_in_state", d,
+        graft.FixtureStamp.stamp("v1", d, "events")) {
+      Seq(Tables.events(s, d).select(col("ts"), col("event_type"),
+        col("value")))
+    }
 
   // The production state-debugging op Spark 4 ships as the built-in
   // `statestore` data source: read a stateful query's CHECKPOINT —
@@ -1482,30 +1350,17 @@ object StreamingOps extends QueryPack {
     * advances the watermark to max(batch-0 ts) − delay, which EVICTS
     * every closed window — the production reality q_stream_state_inspect
     * deliberately avoids. Idempotent per sf. */
-  private def streamInputDirState2(s: SparkSession, d: String): String = {
-    import s.implicits._
-    val dir = java.nio.file.Paths.get("target", "stream_in_state2",
-      new java.io.File(d).getName).toAbsolutePath
-    val marker = dir.resolve("_complete")
-    val stamp = graft.FixtureStamp.stamp("v1", d, "events")
-    if (graft.FixtureStamp.upToDate(marker, stamp)) return dir.toString
-    val ev = Tables.events(s, d).select($"ts", $"event_type", $"value")
-    val sp = ev
-      .agg(unix_timestamp(min($"ts")).as("a"), unix_timestamp(max($"ts")).as("b"))
-      .select(expr("(a + b) div 2").as("sp")).head().getLong(0)
-    ev.filter($"ts" < timestamp_seconds(lit(sp)))
-      .coalesce(1).write.mode("overwrite").parquet(dir.toString)
-    def parts: Set[java.io.File] = new java.io.File(dir.toString)
-      .listFiles().filter(_.getName.startsWith("part-")).toSet
-    val earlyParts = parts
-    ev.filter($"ts" >= timestamp_seconds(lit(sp)))
-      .coalesce(1).write.mode("append").parquet(dir.toString)
-    val t = System.currentTimeMillis()
-    touchOrFail(earlyParts, t - 60000L)
-    touchOrFail(parts -- earlyParts, t)
-    graft.FixtureStamp.complete(marker, stamp)
-    dir.toString
-  }
+  private def streamInputDirState2(s: SparkSession, d: String): String =
+    graft.Fs.landingZone("stream_in_state2", d,
+        graft.FixtureStamp.stamp("v1", d, "events")) {
+      import s.implicits._
+      val ev = Tables.events(s, d).select($"ts", $"event_type", $"value")
+      val sp = ev
+        .agg(unix_timestamp(min($"ts")).as("a"), unix_timestamp(max($"ts")).as("b"))
+        .select(expr("(a + b) div 2").as("sp")).head().getLong(0)
+      Seq(ev.filter($"ts" < timestamp_seconds(lit(sp))),
+        ev.filter($"ts" >= timestamp_seconds(lit(sp))))
+    }
 
   // The scenario the r12 verdict asked for: q_stream_state_inspect's
   // single-batch snapshot shows the FULL aggregate set because its
@@ -1586,30 +1441,14 @@ object StreamingOps extends QueryPack {
     * pipeline batch-replayable in SQL: the dedup gate's first-wins rule
     * becomes "min doc_id per hash", and the shard log's generation
     * layout becomes a doc_id range split. Idempotent per sf. */
-  private[graft] def streamPipeDir(s: SparkSession, d: String): String = {
-    import s.implicits._
-    val dir = java.nio.file.Paths.get("target", "stream_pipe",
-      new java.io.File(d).getName).toAbsolutePath
-    val marker = dir.resolve("_complete")
-    val stamp = graft.FixtureStamp.stamp("v1", d, "documents")
-    if (graft.FixtureStamp.upToDate(marker, stamp)) return dir.toString
-    val docs = graft.Tables.documents(s, d).select($"doc_id", $"text")
-    val sp = docs.agg(((max($"doc_id") + 1L) / 2L).cast("long")).head().getLong(0)
-    docs.filter($"doc_id" < sp)
-      .coalesce(1).write.mode("overwrite").parquet(dir.toString)
-    def parts: Set[java.io.File] = new java.io.File(dir.toString)
-      .listFiles().filter(_.getName.startsWith("part-")).toSet
-    val lowParts = parts
-    docs.filter($"doc_id" >= sp)
-      .coalesce(1).write.mode("append").parquet(dir.toString)
-    // pin batch order: low doc_id range strictly first (the
-    // streamInputDir3 mtime rule)
-    val t = System.currentTimeMillis()
-    touchOrFail(lowParts, t - 60000L)
-    touchOrFail(parts -- lowParts, t)
-    graft.FixtureStamp.complete(marker, stamp)
-    dir.toString
-  }
+  private[graft] def streamPipeDir(s: SparkSession, d: String): String =
+    graft.Fs.landingZone("stream_pipe", d,
+        graft.FixtureStamp.stamp("v1", d, "documents")) {
+      import s.implicits._
+      val docs = graft.Tables.documents(s, d).select($"doc_id", $"text")
+      val sp = docs.agg(((max($"doc_id") + 1L) / 2L).cast("long")).head().getLong(0)
+      Seq(docs.filter($"doc_id" < sp), docs.filter($"doc_id" >= sp))
+    }
 
   private val pipeShardSchema = StructType(Seq(
     StructField("shard", LongType), StructField("seq_idx", LongType),
@@ -1619,34 +1458,29 @@ object StreamingOps extends QueryPack {
   private[graft] val pipeAcceptSchema = StructType(Seq(
     StructField("h", StringType), StructField("gen", LongType)))
 
-  /** Reset both pipeline logs to schema-bearing empty parquet dirs (so
-    * the first batch's reads plan against real schemas). */
   /** Land a schema-bearing EMPTY parquet dir at `dst` by file-copying a
     * stamped per-schema template instead of running a Spark write job
     * (r16: the empty-log resets cost two jobs per q_stream_pipeline
     * invocation — pure fixed overhead; the copied bytes are the one
     * deterministic empty file the old write produced). The template is
-    * built once per schema under target/ and keyed by the schema's
-    * catalog string, so a schema change rebuilds it. */
+    * a staged artifact keyed by the schema's catalog string, so a schema
+    * change rebuilds it. */
   private[graft] def emptySchemaDir(s: SparkSession, dst: String,
       schema: StructType): Unit = {
-    val key = Integer.toHexString(schema.catalogString.hashCode)
-    val tpl = java.nio.file.Paths.get("target", "empty_log_tpl", key)
-      .toAbsolutePath
-    val marker = tpl.resolve("_complete")
-    val stamp = "v1|" + schema.catalogString
-    if (!graft.FixtureStamp.upToDate(marker, stamp)) {
-      graft.Fs.deleteRecursively(tpl)
+    val tpl = graft.Fs.staged("empty_log_tpl",
+        Integer.toHexString(schema.catalogString.hashCode),
+        "v1|" + schema.catalogString) { dir =>
       s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
-        .coalesce(1).write.mode("overwrite").parquet(tpl.toString)
-      graft.FixtureStamp.complete(marker, stamp)
+        .coalesce(1).write.mode("overwrite").parquet(dir.toString)
     }
     val d = java.nio.file.Paths.get(dst)
     graft.Fs.deleteRecursively(d)
-    graft.Fs.copyRecursively(tpl, d)
+    graft.Fs.copyRecursively(java.nio.file.Paths.get(tpl), d)
     java.nio.file.Files.deleteIfExists(d.resolve("_complete"))
   }
 
+  /** Reset both pipeline logs to schema-bearing empty parquet dirs (so
+    * the first batch's reads plan against real schemas). */
   private[graft] def resetPipeLogs(s: SparkSession, shardLog: String,
       acceptLog: String): Unit = {
     emptySchemaDir(s, shardLog, pipeShardSchema)
@@ -1783,8 +1617,8 @@ object StreamingOps extends QueryPack {
     (s, d) => {
       import s.implicits._
       val dir = streamPipeDir(s, d)
-      val shardLog = indexArtifactDir("stream_pipe_shards", d).toString
-      val acceptLog = indexArtifactDir("stream_pipe_accept", d).toString
+      val shardLog = graft.Fs.artifactDir("stream_pipe_shards", d).toString
+      val acceptLog = graft.Fs.artifactDir("stream_pipe_accept", d).toString
       resetPipeLogs(s, shardLog, acceptLog)
       val schema = StructType(Seq(
         StructField("doc_id", LongType), StructField("text", StringType)))
@@ -1871,7 +1705,7 @@ object StreamingOps extends QueryPack {
     (s, d) => {
       import s.implicits._
       val dir = graft.operators.SourceOps.schemaEvo2StreamDir(s, d)
-      val outPath = indexArtifactDir("stream_schema_evo_out", d)
+      val outPath = graft.Fs.artifactDir("stream_schema_evo_out", d)
       graft.Fs.deleteRecursively(outPath)
       val out = outPath.toString
       withStreamPartitions(s, graft.Fs.partitionsFor(dir)) { ss =>
@@ -1964,8 +1798,8 @@ object StreamingOps extends QueryPack {
     pipeStoreMemo.getOrElseUpdate((s.sparkContext.applicationId, d,
       graft.FixtureStamp.stamp("v1", d, "documents"))) {
       val dir = streamPipeDir(s, d)
-      val storePath = indexArtifactDir("stream_pipe_store", d)
-      val acceptPath = indexArtifactDir("stream_pipe_store_accept", d)
+      val storePath = graft.Fs.artifactDir("stream_pipe_store", d)
+      val acceptPath = graft.Fs.artifactDir("stream_pipe_store_accept", d)
       graft.Fs.deleteRecursively(storePath)
       emptySchemaDir(s, acceptPath.toString, pipeAcceptSchema)
       val schema = StructType(Seq(
@@ -2273,7 +2107,7 @@ object StreamingOps extends QueryPack {
       kind: String, pred: org.apache.spark.sql.Column): DataFrame = {
     import s.implicits._
     val pristine = streamPipelineStore(s, d)
-    val dir = indexArtifactDir(kind, d)
+    val dir = graft.Fs.artifactDir(kind, d)
     graft.Fs.deleteRecursively(dir)
     graft.Fs.copyRecursively(java.nio.file.Paths.get(pristine), dir)
     forgetStreamStore(s, d, dir.toString, pred)
@@ -2625,7 +2459,7 @@ object StreamingOps extends QueryPack {
     (s, d) => {
       import s.implicits._
       val pristine = streamPipelineStore(s, d)
-      val dir = indexArtifactDir("stream_pipe_store_compact", d)
+      val dir = graft.Fs.artifactDir("stream_pipe_store_compact", d)
       graft.Fs.deleteRecursively(dir)
       graft.Fs.copyRecursively(java.nio.file.Paths.get(pristine), dir)
       compactStreamStore(s, dir.toString)
@@ -2677,7 +2511,7 @@ object StreamingOps extends QueryPack {
     (s, d) => {
       import s.implicits._
       val pristine = streamPipelineStore(s, d)
-      val dir = indexArtifactDir("stream_pipe_store_forget_compact", d)
+      val dir = graft.Fs.artifactDir("stream_pipe_store_forget_compact", d)
       graft.Fs.deleteRecursively(dir)
       graft.Fs.copyRecursively(java.nio.file.Paths.get(pristine), dir)
       compactStreamStore(s, dir.toString)
@@ -2945,9 +2779,9 @@ object StreamingOps extends QueryPack {
       : (String, String) = {
     import s.implicits._
     val dir = streamPipeDir(s, d)
-    val shardLog = indexArtifactDir("stream_pipe_nd_shards", d).toString
-    val acceptLog = indexArtifactDir("stream_pipe_nd_accept", d).toString
-    val bandLog = indexArtifactDir("stream_pipe_nd_bands", d).toString
+    val shardLog = graft.Fs.artifactDir("stream_pipe_nd_shards", d).toString
+    val acceptLog = graft.Fs.artifactDir("stream_pipe_nd_accept", d).toString
+    val bandLog = graft.Fs.artifactDir("stream_pipe_nd_bands", d).toString
     resetNdLogs(s, shardLog, acceptLog, bandLog)
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))

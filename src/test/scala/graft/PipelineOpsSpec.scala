@@ -424,8 +424,7 @@ class PipelineOpsSpec extends SparkTestBase {
       Tables.events(spark, sf).count())
     // the landing dir keeps each micro-batch's id — at least two batches
     // (events file + sentinel file at maxFilesPerTrigger=1)
-    val landing = java.nio.file.Paths.get("target", "sink_foreachbatch",
-      new java.io.File(sf).getName).toAbsolutePath.toString
+    val landing = Fs.artifactDir("sink_foreachbatch", sf).toString
     val batchIds = spark.read.parquet(landing)
       .select($"batch_id").distinct().count()
     assert(batchIds >= 2, s"expected >= 2 micro-batches, got $batchIds")

@@ -15,8 +15,7 @@ class SearchIndexForgetSpec extends SparkTestBase {
 
   test("a gen-1-only delete leaves every gen-0 file byte-identical and " +
       "rewrites gen 1 to exactly the survivor postings") {
-    val dir = graft.streaming.StreamingOps
-      .indexArtifactDir("posting_index_spec", sf).toString
+    val dir = graft.Fs.artifactDir("posting_index_spec", sf).toString
     SearchOps.writePostingBase(spark, sf, dir)
     SearchOps.appendPostingDelta(spark, sf, dir)
     val gen0 = java.nio.file.Paths.get(dir).resolve("gen=0")

@@ -18,8 +18,7 @@ class ShardAsOfSpec extends SparkTestBase {
       .as[(Long, Long, Long, Long)].collect().toSeq.sorted
 
   test("as-of manifest == real store manifest at events 0, 1, 2") {
-    val dir = graft.streaming.StreamingOps
-      .indexArtifactDir("shard_asof_spec", sf).toString
+    val dir = graft.Fs.artifactDir("shard_asof_spec", sf).toString
     val asof = q("q_shard_asof")
       .select($"asof_event", $"shard", $"gen", $"seq_idx", $"n_ids")
       .as[(Long, Long, Long, Long, Long)].collect()

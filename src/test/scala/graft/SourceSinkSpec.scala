@@ -260,8 +260,7 @@ class SourceSinkSpec extends SparkTestBase {
     }
     assert(rows.map(_.getAs[Long]("n")).sum === Tables.events(spark, sf).count())
     // the compacted layout holds the same rows as the original table
-    val sfName = new java.io.File(sf).getName
-    val compact = spark.read.parquet(s"target/sink_compacted/$sfName")
+    val compact = spark.read.parquet(Fs.artifactDir("sink_compacted", sf).toString)
     val orig = Tables.events(spark, sf)
       .select($"event_id", unix_timestamp($"ts").as("ts_s"))
     assert(compact.select($"event_id", $"ts_s").exceptAll(orig).count() === 0)

@@ -85,7 +85,7 @@ class StreamPipelineSpec extends SparkTestBase {
     val acceptLog = base.resolve("accept").toString
     StreamingOps.resetPipeLogs(spark, shardLog, acceptLog)
     // the fixture landing files, low doc_id range first (mtime order)
-    val srcDir = new java.io.File(s"target/stream_pipe/${new java.io.File(sf).getName}")
+    val srcDir = new java.io.File(StreamingOps.streamPipeDir(spark, sf))
     val srcFiles = srcDir.listFiles().filter(_.getName.startsWith("part-"))
       .sortBy(_.lastModified).toSeq
     assert(srcFiles.size === 2, "expected the two-file landing fixture")
@@ -183,7 +183,7 @@ class StreamPipelineSpec extends SparkTestBase {
     val acceptLog = base.resolve("accept").toString
     val bandLog = base.resolve("bands").toString
     StreamingOps.resetNdLogs(spark, shardLog, acceptLog, bandLog)
-    val srcDir = new java.io.File(s"target/stream_pipe/${new java.io.File(sf).getName}")
+    val srcDir = new java.io.File(StreamingOps.streamPipeDir(spark, sf))
     val srcFiles = srcDir.listFiles().filter(_.getName.startsWith("part-"))
       .sortBy(_.lastModified).toSeq
     assert(srcFiles.size === 2, "expected the two-file landing fixture")

@@ -73,10 +73,8 @@ class StreamQualitySpec extends SparkTestBase {
       new java.io.File(p).listFiles()
         .count(f => f.getName.endsWith(".parquet") ||
           f.getName.startsWith("part-"))
-    val deltaDir = graft.streaming.StreamingOps
-      .indexArtifactDir("sink_index_deltas", sf).toString
-    val baseDir = graft.streaming.StreamingOps
-      .indexArtifactDir("sink_index_base", sf).toString
+    val deltaDir = graft.Fs.artifactDir("sink_index_deltas", sf).toString
+    val baseDir = graft.Fs.artifactDir("sink_index_base", sf).toString
     val nDelta = parquetFiles(deltaDir)
     val nBase = parquetFiles(baseDir)
     assert(nBase < nDelta,
@@ -122,8 +120,7 @@ class StreamQualitySpec extends SparkTestBase {
         .sortBy(_._1).toSeq)
     // the per-batch log carries bloom_hit: same filter state as batch,
     // every batch probed, no false negative end-to-end, volume shed
-    val dir = graft.streaming.StreamingOps
-      .indexArtifactDir("stream_dedup_bloom_out", sf).toString
+    val dir = graft.Fs.artifactDir("stream_dedup_bloom_out", sf).toString
     val log = spark.read.parquet(dir).collect()
     val hitByDoc = log.map(r =>
       r.getAs[Long]("doc_id") -> r.getAs[Long]("bloom_hit")).toMap
@@ -149,8 +146,7 @@ class StreamQualitySpec extends SparkTestBase {
     // through the SAME RAM-backed-or-disk rule the query used (the r16
     // scratch-checkpoint move; a hard-coded disk path reads a stale or
     // absent checkpoint on any host with /dev/shm).
-    val ck = graft.streaming.StreamingOps
-      .scratchCheckpointPath("stream_state_ck", sf).toString
+    val ck = graft.Fs.scratchCheckpointPath("stream_state_ck", sf).toString
     // streams run on POOLED SCOPED sessions whose StreamingQueryManagers
     // the outer session can't see — spark.streams.active here is always
     // empty and proves nothing (r12 review); enumerate the pool instead

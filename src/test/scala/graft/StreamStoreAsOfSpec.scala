@@ -49,8 +49,7 @@ class StreamStoreAsOfSpec extends SparkTestBase {
       "event 0 (after micro-batch 0) diverges")
     assert(manifest(pristine, None) === asof(1L),
       "event 1 (full store) diverges")
-    val dir = StreamingOps
-      .indexArtifactDir("stream_pipe_store_asof_spec", sf)
+    val dir = graft.Fs.artifactDir("stream_pipe_store_asof_spec", sf)
     graft.Fs.deleteRecursively(dir)
     graft.Fs.copyRecursively(java.nio.file.Paths.get(pristine), dir)
     StreamingOps.forgetStreamStore(spark, sf, dir.toString,

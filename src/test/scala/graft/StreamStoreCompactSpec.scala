@@ -37,7 +37,7 @@ class StreamStoreCompactSpec extends SparkTestBase {
   private def freshCopy(name: String): java.nio.file.Path = {
     val pristine = java.nio.file.Paths
       .get(StreamingOps.streamPipelineStore(spark, sf))
-    val dir = StreamingOps.indexArtifactDir(name, sf)
+    val dir = graft.Fs.artifactDir(name, sf)
     graft.Fs.deleteRecursively(dir)
     graft.Fs.copyRecursively(pristine, dir)
     dir
@@ -133,8 +133,7 @@ class StreamStoreCompactSpec extends SparkTestBase {
       "every earlier merge BYTE-IDENTICAL (flat per-cycle cost) and " +
       "equals the admitted stream; a third cycle repeats the proof") {
     val dir = freshCopy("stream_pipe_store_compact_cycles")
-    val accept = StreamingOps
-      .indexArtifactDir("stream_pipe_store_compact_cycles_accept", sf)
+    val accept = graft.Fs.artifactDir("stream_pipe_store_compact_cycles_accept", sf)
     graft.Fs.deleteRecursively(accept)
     spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],

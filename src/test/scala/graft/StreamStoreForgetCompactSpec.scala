@@ -43,7 +43,7 @@ class StreamStoreForgetCompactSpec extends SparkTestBase {
   private def freshCompacted(name: String): java.nio.file.Path = {
     val pristine = java.nio.file.Paths
       .get(StreamingOps.streamPipelineStore(spark, sf))
-    val dir = StreamingOps.indexArtifactDir(name, sf)
+    val dir = graft.Fs.artifactDir(name, sf)
     graft.Fs.deleteRecursively(dir)
     graft.Fs.copyRecursively(pristine, dir)
     StreamingOps.compactStreamStore(spark, dir.toString)
@@ -57,7 +57,7 @@ class StreamStoreForgetCompactSpec extends SparkTestBase {
       pred: org.apache.spark.sql.Column): Seq[org.apache.spark.sql.Row] = {
     val pristine = java.nio.file.Paths
       .get(StreamingOps.streamPipelineStore(spark, sf))
-    val dir = StreamingOps.indexArtifactDir(name, sf)
+    val dir = graft.Fs.artifactDir(name, sf)
     graft.Fs.deleteRecursively(dir)
     graft.Fs.copyRecursively(pristine, dir)
     StreamingOps.forgetStreamStore(spark, sf, dir.toString, pred)
@@ -155,7 +155,7 @@ class StreamStoreForgetCompactSpec extends SparkTestBase {
     // batch 1 lands AFTER compaction -> the delete arrives
     val pristine = java.nio.file.Paths
       .get(StreamingOps.streamPipelineStore(spark, sf))
-    val dir = StreamingOps.indexArtifactDir("stream_forget_compacted_post", sf)
+    val dir = graft.Fs.artifactDir("stream_forget_compacted_post", sf)
     graft.Fs.deleteRecursively(dir)
     graft.Fs.copyRecursively(pristine, dir)
     TestFs.crcByFile(dir).keys.filter(_.contains("gen=1/"))

@@ -37,7 +37,7 @@ class StreamStoreForgetSpec extends SparkTestBase {
       s"fixture delete set hits generations ${byGen.keySet} only")
     StreamingOps.forgetStreamVariant(spark, sf,
       "stream_pipe_store_spec", pred).count()
-    val dir = StreamingOps.indexArtifactDir("stream_pipe_store_spec", sf)
+    val dir = graft.Fs.artifactDir("stream_pipe_store_spec", sf)
     val after = TestFs.crcByFile(dir)
     val expectTouched = Set("shard=4/gen=0", "shard=4/gen=1")
     // untouched partitions: identical relative file sets AND bytes
@@ -101,10 +101,8 @@ class StreamStoreForgetSpec extends SparkTestBase {
   test("the partitioned micro-batch append is idempotent under " +
       "at-least-once replay, and a later batch's offsets ignore the " +
       "replay duplicates") {
-    val dir = StreamingOps
-      .indexArtifactDir("stream_pipe_store_replay_spec", sf).toString
-    val accept = StreamingOps
-      .indexArtifactDir("stream_pipe_store_replay_accept", sf).toString
+    val dir = graft.Fs.artifactDir("stream_pipe_store_replay_spec", sf).toString
+    val accept = graft.Fs.artifactDir("stream_pipe_store_replay_accept", sf).toString
     graft.Fs.deleteRecursively(java.nio.file.Paths.get(dir))
     graft.Fs.deleteRecursively(java.nio.file.Paths.get(accept))
     spark.createDataFrame(
