@@ -160,37 +160,35 @@ object Fs {
     } finally walk.close()
   }
 
-  /** Scale-adaptive shuffle-partition count for a corpus or landing
-    * zone of `bytes` (guide §2: derive partitioning from input size,
-    * not from a constant tuned for one machine): one partition per
-    * ~16 MB, floor 4, cap 512. The batch queries (`SparkEntry.queries`)
-    * and the stateful streams size by this one rule. A stateful micro-
-    * batch pays per-PARTITION fixed costs (state-store open/commit and
-    * offset bookkeeping per partition per batch), so its count tracks
-    * the zone's data volume, the small-state analog of AQE's
-    * advisoryPartitionSizeInBytes. The floor of 4 is the measured knee
-    * on the fixture zones: 8 → 4 cut the stateful families' per-batch
-    * overhead ~19%, 4 → 2 was flat. Declared results are invariant to
-    * this value: every consumer's output is sorted, aggregated or
-    * replay-collapsed. */
+  /** Scale-adaptive shuffle-partition count for a stateful stream's
+    * landing zone of `bytes` (guide §2: derive partitioning from input
+    * size, not from a constant tuned for one machine): one partition per
+    * ~16 MB, floor 4, cap 512. A stateful micro-batch pays per-PARTITION
+    * fixed costs (state-store open/commit and offset bookkeeping per
+    * partition per batch), so its count tracks the zone's data volume,
+    * the small-state analog of AQE's advisoryPartitionSizeInBytes; the
+    * width is fixed in the checkpoint, so it is set on the stream's
+    * scoped session. The floor of 4 is the measured knee on the fixture
+    * zones: 8 → 4 cut the stateful families' per-batch overhead ~19%,
+    * 4 → 2 was flat. Declared results are invariant to this value:
+    * every consumer's output is sorted, aggregated or replay-collapsed. */
   private[graft] def partitionsForBytes(bytes: Long): Int =
     math.max(4L, math.min(512L, (bytes + (16L << 20) - 1) / (16L << 20)))
       .toInt
 
   /** Explicit shuffle width for a COMPUTE-bound stage: the machine's
-    * parallelism, or the session's shuffle partitions if wider. Such a
-    * stage's rows are small but its CPU per row is not — candidate-pair
-    * rows of two longs before an exact verify, a per-shard sort window,
-    * the pair kernel's ~cap²-pair bucket emission. AQE's byte-based
-    * coalescing would fold them into one or two tasks and serialize the
-    * work (one task once burned 10+ CPU-minutes), and the session default
-    * is corpus-BYTE-derived ([[partitionsFor]]), which is the wrong
-    * measure for them: on sf0.1 replicated 10× the shard builds ran
-    * 15–60% slower on 11 byte-derived partitions. So the caller pins this
-    * width with an explicit `repartition(n, keys)`. */
+    * parallelism. Such a stage's rows are small but its CPU per row is
+    * not — candidate-pair rows of two longs before an exact verify, a
+    * per-shard sort window, the pair kernel's ~cap²-pair bucket
+    * emission. AQE's byte-based coalescing would fold them into one or
+    * two tasks and serialize the work (one task once burned 10+
+    * CPU-minutes), so the caller pins this width with an explicit
+    * `repartition(n, keys)`. It reads no session setting: the caller's
+    * shuffle width (Spark's default is 200) would give a 1000-doc
+    * corpus's verify hundreds of near-empty tasks that AQE cannot
+    * coalesce. */
   private[graft] def computeWidth(s: org.apache.spark.sql.SparkSession): Int =
-    math.max(s.sparkContext.defaultParallelism,
-      s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+    s.sparkContext.defaultParallelism
 
   /** [[partitionsForBytes]] of the regular files under `dir` (0 bytes
     * when absent), walked on every call. */

@@ -32,21 +32,15 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     CoreOps.flagship(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. Each call
-    * applies the scale-adaptive shuffle-partition default for the
-    * query's corpus ([[Fs.partitionsFor]]) before building the plan. At
-    * sf0.1 (17.5 MB) this is 4 where the core count was the default:
-    * the sub-second tail paid pure per-task scheduling overhead. CPU-
-    * bound stage widths are NOT tied to it: the pair-verify kernels pin
-    * their width to [[Fs.computeWidth]].
+  /** One entry per implemented operator from SURVEY.md §2. A call
+    * builds the query's plan and nothing else: it writes no session
+    * setting and caches nothing it cannot release. Batch shuffle widths
+    * are the caller's, and AQE coalesces them by measured bytes;
+    * CPU-bound stages pin their own width ([[Fs.computeWidth]]).
     * Declared results are partition-count invariant (every query's
     * output is sorted/aggregated). */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map(q => q.name -> ((s: SparkSession, d: String) => {
-      s.conf.set("spark.sql.shuffle.partitions",
-        Fs.partitionsFor(d).toString)
-      q.fn(s, d)
-    })).toMap
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    all.map(q => q.name -> q.fn).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops (driver

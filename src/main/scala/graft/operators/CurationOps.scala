@@ -440,19 +440,13 @@ object CurationOps extends QueryPack {
       import s.implicits._
       // empty tokens removed so empty/whitespace-only docs behave
       // (split("", " +") yields [""] — same artifact in DuckDB)
-      // cached: the token arrays feed four plan branches (grams ×2,
-      // toks, the final n_toks select) and the positional-gram stream
-      // two — without the caches the scan+tokenize subtree re-executes
-      // per branch (the shingled(...).cache() precedent in DedupOps)
       val docs = Tables.documents(s, d)
         .select($"doc_id",
           array_remove(split(lower($"text"), " +"), "").as("w"))
-        .cache()
       val grams = docs
         .select($"doc_id", posexplode(
           graft.functions.WordNGrams.word_ngrams_seq($"w", SpanW)))
         .toDF("doc_id", "pos", "gram") // pos = 0-based start token
-        .cache()
       val dup = grams.groupBy($"gram")
         .agg(count(lit(1)).as("occ")).filter($"occ" >= 2).select($"gram")
       val covered = grams.join(dup, "gram")

@@ -242,7 +242,7 @@ object DedupOps extends QueryPack {
       prefixFilter: Boolean, bound: Option[Int] = None,
       presentation: Boolean = true): DataFrame = {
     import s.implicits._
-    val docs = shingled(s, d, bound).cache()
+    val docs = shingled(s, d, bound)
     val posting = docs.select($"doc_id", explode($"sh").as("shingle"))
     val jaccardOf = (inter: Column, n1: Column, n2: Column) =>
       round(inter.cast("decimal(18,2)") / (n1 + n2 - inter), 6)
@@ -508,7 +508,7 @@ object DedupOps extends QueryPack {
   private[graft] def minhashPairs(s: SparkSession, d: String,
       bound: Option[Int] = None): DataFrame = {
       import s.implicits._
-      val docs = shingled(s, d, bound).cache()
+      val docs = shingled(s, d, bound)
       val bands = bandKeys(docs)
       val cand = bands.as("a")
         .join(bands.as("b"),
@@ -605,7 +605,7 @@ object DedupOps extends QueryPack {
     (s, d) => {
       import s.implicits._
       val w = org.apache.spark.sql.expressions.Window
-      val docs = shingled(s, d).cache()
+      val docs = shingled(s, d)
       val isDelta = $"doc_id" % BpeOps.HoldoutMod === 0
       val base = docs.filter(!isDelta)
       val delta = docs.filter(isDelta)
@@ -721,7 +721,7 @@ object DedupOps extends QueryPack {
   private[graft] def bandedDeltaDups(s: SparkSession, d: String,
       useBloom: Boolean): DataFrame = {
     import s.implicits._
-    val docs = shingled(s, d).cache()
+    val docs = shingled(s, d)
     val isDelta = $"doc_id" % BpeOps.HoldoutMod === 0
     val base = docs.filter(!isDelta)
     val delta = docs.filter(isDelta)

@@ -197,12 +197,15 @@ object ScalarOps extends QueryPack {
   // ------------------------------------------------ SQL front door
   // The same engine through spark.sql text — views + correlated scalar
   // subqueries (decorrelated by Catalyst into outer joins + aggregates).
+  // The views live in a new session, so a caller's own v_customer or
+  // v_orders is never replaced.
   private val sqlSubquery = QueryDef(
     "q_sql_subquery",
     (s, d) => {
-      Tables.customer(s, d).createOrReplaceTempView("v_customer")
-      Tables.orders(s, d).createOrReplaceTempView("v_orders")
-      s.sql("""
+      val ss = s.newSession()
+      Tables.customer(ss, d).createOrReplaceTempView("v_customer")
+      Tables.orders(ss, d).createOrReplaceTempView("v_orders")
+      ss.sql("""
         SELECT c_custkey,
           (SELECT count(*) FROM v_orders o
             WHERE o.o_custkey = c.c_custkey) AS n_orders,

@@ -115,15 +115,14 @@ object SearchOps extends QueryPack {
     * q_search_term and q_search_hybrid_rrf rank with (the
     * sharedNgramPairs factoring convention: a scoring change must reach
     * every consumer or the hybrid silently fuses a different ranking).
-    * The tf relation is cached (it feeds the weight derivation and the
-    * scoring join — the span_dedup convention); weights are
+    * The tf relation feeds the weight derivation and the scoring join,
+    * which share its aggregation exchange; weights are
     * query-cardinality-sized and broadcast. Returns (doc_id, contrib). */
   private def lexContrib(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
     val tf = toks(s, d).filter($"tok".isin(SearchTerms: _*))
       .groupBy($"tok", $"doc_id").agg(count(lit(1)).as("tf"))
-      .cache()
     val n = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
     val weights = tf.groupBy($"tok").agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(n))

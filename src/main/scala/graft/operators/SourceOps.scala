@@ -61,11 +61,13 @@ object SourceOps extends QueryPack {
   /** Shared by the batch scan and its MicroBatchStream twin — identical
     * rows, so the identical oracle. Rendered lazily (Verify dumps oracles
     * AFTER running the queries) so the glob points at the dir this run
-    * actually wrote, whatever the checkout path or sf. */
+    * actually wrote, whatever the checkout path or sf. Before any payload
+    * query ran in this JVM there is no such dir, and rendering throws
+    * (`SparkEntry.oracleSql` then leaves the oracle out). */
   private def payloadOracle: String = {
-    val dir = lastPayloadDir.getOrElse(
-      // no payload query ran in this JVM — default to the driver's verify sf
-      graft.Fs.artifactDir("payloads", "sf0.01").toString)
+    val dir = lastPayloadDir.getOrElse(throw new IllegalStateException(
+      "payload oracle rendered before a payload query ran: no landing " +
+        "dir (run the query fn first; Verify does)"))
     s"""SELECT
       CASE WHEN price_data IS NOT NULL THEN 'price'
            WHEN hash_rate_data IS NOT NULL THEN 'hashrate'

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The one scale-adaptive partition rule (`Fs.partitionsFor`) that sizes
-  * both the batch queries' shuffle width and the stateful streams'. */
+  * the stateful streams' shuffle width. */
 class FsSpec extends AnyFunSuite {
 
   test("partition rule: one per 16 MB of directory bytes, floor 4, cap 512") {

@@ -19,6 +19,13 @@ class SourceSinkSpec extends SparkTestBase {
     assert(df.filter($"kind" === "price" && $"usd".isNull).count() === 0)
   }
 
+  test("the payload oracle reads the landing dir its query wrote") {
+    q("q_source_payload_json")
+    val dir = operators.SourceOps.materializePayloads(spark, sf)
+    val sql = SparkEntry.oracleSql("q_source_payload_json")
+    assert(sql.contains(s"read_json('$dir/*.json'"), sql)
+  }
+
   test("payload batch scan plans one contiguous split per core over the sorted listing") {
     import java.nio.file.{Files, Paths}
     import java.nio.charset.StandardCharsets

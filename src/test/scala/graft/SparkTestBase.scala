@@ -24,6 +24,23 @@ trait SparkTestBase extends AnyFunSuite {
 
   def q(name: String) = SparkEntry.queries(name)(spark, sf)
 
+  /** The curation queries perfbench times, in its order. */
+  val curationQueries: Seq[String] = Seq("q_pipeline_clean",
+    "q_dedup_minhash", "q_search_term", "q_simsearch_cosine")
+
+  /** A fresh copy of the fixture's documents and embeddings tables, at a
+    * path no earlier call has seen: no per-corpus memo or artifact serves
+    * it, as for perfbench's cold corpora. Delete it with
+    * `Fs.deleteRecursively`. */
+  def freshCorpus(): String = {
+    import java.nio.file.{Files, Paths}
+    val root = Files.createDirectories(Paths.get("target", "fresh-corpora"))
+    val dir = Files.createTempDirectory(root, "corpus")
+    for (t <- Seq("documents", "embeddings"))
+      Files.copy(Paths.get(sf, s"$t.parquet"), dir.resolve(s"$t.parquet"))
+    dir.toString
+  }
+
   /** Spark jobs launched while `body` runs. Job ids are globally
     * increasing per context, so the max-id delta bounds the jobs a call
     * launched (specs run serially). */
