@@ -129,6 +129,16 @@ object Fs {
     fs.foreach(f => require(f.setLastModified(ts),
       s"setLastModified failed for $f"))
 
+  /** The entries of `dir`, read in full and closed. A `Files.list`
+    * stream holds its directory descriptor open until it is closed; the
+    * garbage collector does not close it. This is the one directory
+    * listing in `src/main` (FsSpec). */
+  def list(dir: Path): Seq[Path] = {
+    import scala.jdk.CollectionConverters._
+    val l = Files.list(dir)
+    try l.iterator().asScala.toList finally l.close()
+  }
+
   /** Recursive delete, children before parents; no-op when absent.
     * Replaces the six inline `Files.walk ... reverse.foreach(delete)`
     * copies (r12 review) — and unlike them, closes the walk stream. */

@@ -1,8 +1,8 @@
 package graft.operators
 
-import graft.{QueryDef, QueryPack, Tables}
-import graft.functions.MediaCodec
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import graft.{FixtureStamp, Fs, QueryDef, QueryPack, Tables}
+import graft.functions.{AudioHash, MediaCodec, OrderedPairs, PerceptualHash}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** A media row as a training pipeline would model it: opaque binary
@@ -133,8 +133,8 @@ object MultimodalOps extends QueryPack {
     "Per-partition batch decode (STUBBED) → typed feature rows")
 
   // ------------------------------------------------ REAL header decode
-  // The decode stand-in retired (VERDICT r6 task 5): payloads are
-  // well-formed BMP/WAV container bytes (built deterministically from
+  // The decode stand-in retired: payloads are well-formed BMP/WAV
+  // container bytes (built deterministically from
   // (doc_id, text) by MediaCodec.encode — fixture plumbing, clearly not
   // the measured operator), and the engine recovers width/height/bpp/
   // channels/sample_rate/bits/data_bytes by REAL byte-offset parsing in
@@ -183,87 +183,580 @@ object MultimodalOps extends QueryPack {
     "REAL BMP/WAV header decode (codegen'd byte-offset parser) over " +
       "container payloads; oracle recomputes fields from generator formulas")
 
-  // ------------------------------------------- perceptual near-dup
-  // VERDICT r12 task 1: the multimodal family's own dedup. Perceptual
-  // difference-hash (dHash) over the REAL decoded BMP pixels —
-  // functions/PerceptualHash.scala grid-samples the pixel region the
-  // same BmpPixels verify reads — banded 4×16 bits exactly like
-  // q_dedup_simhash, candidates exact-byte-verified on the padding-free
-  // pixel stream. The planted corpus has byte-identical copies (found
-  // with exact_pixel=1) and uniformly-brightened variants (+64/byte:
-  // pixel bytes differ, dHash provably identical → found at hamming 0
-  // with exact_pixel=0 — the case a byte-hash dedup structurally
-  // misses). Because the fixture payloads are generator-formula BMPs
-  // (see q_multimodal_decode), DuckDB replays the ENTIRE path — pixels,
-  // grid grays, hash bits, band collisions, Hamming — so this near-dup
-  // query gets a full hash oracle, not just an audit.
+  // ---------------------------------- banded signature dedup and search
+  // Images (BMP, even ids) and audio (WAV, odd ids) run one pipeline over
+  // a 64-bit perceptual signature of the DECODED content: dHash over the
+  // BMP pixel grid (functions/PerceptualHash.scala) or the temporal
+  // fingerprint over the PCM samples (functions/AudioHash.scala, the
+  // dHash construction moved to the time axis). Each step below has one
+  // implementation; a [[Modality]] value carries what differs.
   //
-  // Scale posture: hash is a per-row codegen'd kernel over a bounded
-  // byte region; candidate generation is the banded groupBy (never
-  // all-pairs); the byte-verify joins back only candidate ids with
-  // shuffle-hash build discipline (the minhashPairs rule).
+  // Dedup: signatures banded 4×16 contiguous bits exactly like
+  // q_dedup_simhash, candidates at Hamming ≤ [[MaxHamming]], each pair
+  // exact-byte-verified on the container-stripped content stream. The
+  // planted corpus has byte-identical copies (found with exact = 1) and
+  // variants whose bytes differ but whose signature provably does not (a
+  // uniform brightness or DC shift preserves every adjacent comparison),
+  // found at Hamming 0 with exact = 0: the case a byte-hash dedup
+  // structurally misses.
+  //
+  // Search: top-k nearest by signature Hamming for a bounded probe set.
+  // A probe scores only the index entries that share at least one band,
+  // never the full index. Probes are graded variants of index entries,
+  // so probe→source distances spread by content: a real ranking, not a
+  // 0/∞ split. The persisted index, its stream-maintained log and its
+  // forget all feed the same search plan.
+  //
+  // The fixture payloads are generator-formula BMPs/WAVs (see
+  // q_multimodal_decode), so each oracle replays the ENTIRE path in
+  // DuckDB (content bytes, signature bits, band keys, band collisions,
+  // Hamming, rank) and every query here gets a full hash oracle. The
+  // audits measure the banded results against independent ground truth.
+  //
+  // Scale posture: the signature is a per-row codegen'd kernel over a
+  // bounded byte region; candidates come from band buckets (never
+  // all-pairs); the byte verify joins back only candidate ids. Shuffle-
+  // hash hints keep the media side (dedup) or the bounded probe side
+  // (search) the build side: the candidate stream's size is a Catalyst
+  // blind spot and it must never be picked to build. Ranking is per
+  // probe; only the audits brute-force.
 
   private[graft] val ExactOff = 1L << 40
   private[graft] val BrightOff = 1L << 41
   private[graft] val BrightShift = 64
   private[graft] val MaxHamming = 3
+  private[graft] val ProbeOff = 1L << 42
+  private[graft] val TopK = 5
 
-  /** The media-dedup corpus: every even doc_id is a base BMP; doc_id%10
-    * adds a byte-identical copy, doc_id%14 a uniformly-brightened
-    * variant (same dims — both encode with the BASE id). ASCII text
-    * bytes are ≤ 127, so +64 never wraps — the shift is a true
-    * brightness change, not a permutation. */
-  private[graft] def dedupMediaCorpus(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val docs = Tables.documents(s, d).filter($"doc_id" % 2 === 0)
-      .select($"doc_id", encode($"text", "UTF-8").as("tb"))
-      .as[(Long, Array[Byte])]
-    val base = docs.map { case (id, tb) => (id, MediaCodec.encodeBmp(id, tb)) }
-    val exact = docs.filter(_._1 % 10 == 0)
-      .map { case (id, tb) => (id + ExactOff, MediaCodec.encodeBmp(id, tb)) }
-    val bright = docs.filter(_._1 % 14 == 0)
-      .map { case (id, tb) => (id + BrightOff,
-        MediaCodec.encodeBmp(id, tb.map(b => (b + BrightShift).toByte))) }
-    base.union(exact).union(bright).toDF("media_id", "payload")
+  /** DC offset of the planted audio variants: it adds to every 16-bit
+    * sample's low byte, and ASCII sample low bytes are ≤ 127, so the add
+    * never carries (a true DC shift, not a bit permutation). */
+  private[graft] val DcShift = BrightShift
+
+  /** What the image and the audio pipelines do differently; every step
+    * below takes one and never branches on it. Predicates read the
+    * documents' `doc_id` and `text`; payload builders take (doc_id, UTF-8
+    * text bytes).
+    *
+    * @param kind      artifact-name prefix (`<kind>_band_index`)
+    * @param layout    id slice and base/delta generation rule
+    * @param encode    the base payload (container encoder)
+    * @param signature the 64-bit signature kernel over a payload
+    * @param content   the container-stripped content the exact verify compares
+    * @param exact     docs that get a byte-identical copy at +[[ExactOff]]
+    * @param planted   docs that get a planted variant at +[[BrightOff]]
+    * @param plant     the planted variant's payload (signature-preserving)
+    * @param probed    docs whose variant probes the search, at +[[ProbeOff]]
+    *                  (empty-text docs are always excluded)
+    * @param probe     the probe variant's payload (graded distance)
+    * @param searchBands the four 16-bit search band keys of a signature
+    * @param exactCol  the dedup result's exact-verify column
+    * @param variant   the dedup audit's planted-variant column infix */
+  private[graft] final case class Modality(
+      kind: String,
+      layout: GenerationLayout.Layout,
+      encode: (Long, Array[Byte]) => Array[Byte],
+      signature: Column => Column,
+      content: Column => Column,
+      exact: Column,
+      planted: Column,
+      plant: (Long, Array[Byte]) => Array[Byte],
+      probed: Column,
+      probe: (Long, Array[Byte]) => Array[Byte],
+      searchBands: Column => Column,
+      exactCol: String,
+      variant: String)
+
+  /** BMP images. The planted variant adds +[[BrightShift]] to every text
+    * byte before encoding: ASCII bytes are ≤ 127, so it never wraps and
+    * is a true brightness change. Probes are half-brightened
+    * ([[halfBright]]) and banded column-major ([[columnMajorBands]]). */
+  private[graft] val Image = Modality(
+    kind = "media",
+    layout = GenerationLayout.MediaIndex,
+    encode = MediaCodec.encodeBmp,
+    signature = PerceptualHash.dhash64,
+    content = PerceptualHash.bmp_pixels,
+    exact = col("doc_id") % 10 === 0,
+    planted = col("doc_id") % 14 === 0,
+    plant = (id, tb) =>
+      MediaCodec.encodeBmp(id, tb.map(b => (b + BrightShift).toByte)),
+    probed = col("doc_id") % 6 === 0,
+    probe = (id, tb) => halfBright(MediaCodec.encodeBmp(id, tb)),
+    searchBands = columnMajorBands,
+    exactCol = "exact_pixel",
+    variant = "bright")
+
+  /** PCM WAV audio. The planted variant is DC-shifted ([[dcShift]]) after
+    * encoding, on non-empty texts only: an empty text's generator bytes
+    * reach 255 and would wrap. Probes are volume-halved ([[halfVolume]])
+    * and use the contiguous dedup banding: halving only flips bits 1→0,
+    * so a probe at Hamming ≤ 3 from its source shares a band with it by
+    * pigeonhole, and the audit reports (does not pin) how the fixture
+    * lands. */
+  private[graft] val Audio = Modality(
+    kind = "audio",
+    layout = GenerationLayout.AudioIndex,
+    encode = MediaCodec.encodeWav,
+    signature = AudioHash.audiohash64,
+    content = AudioHash.wav_samples,
+    exact = col("doc_id") % 10 === 5,
+    planted = col("doc_id") % 14 === 7 && length(col("text")) > 0,
+    plant = (id, tb) => dcShift(MediaCodec.encodeWav(id, tb)),
+    probed = col("doc_id") % 6 === 3,
+    probe = (id, tb) => halfVolume(MediaCodec.encodeWav(id, tb)),
+    searchBands = contiguousBands,
+    exactCol = "exact_sample",
+    variant = "dc")
+
+  /** Left-half brightening: +[[BrightShift]] on every pixel byte in
+    * columns [0, w/2) — geometry-aware, padding untouched. It changes
+    * exactly the grid comparisons that straddle the half boundary (≤ 1
+    * bit per hash row), so probe→source distances spread over [0, 8].
+    * Callers must exclude empty-text payloads (their generator pixels
+    * reach 255 and would wrap; ASCII text bytes are ≤ 127 + 64 < 256). */
+  private[graft] def halfBright(b: Array[Byte]): Array[Byte] = {
+    val g = PerceptualHash.bmpGeometry(b)
+    require(g != null, "probe fixtures are well-formed BMPs")
+    val w = g(0); val h = g(1); val off = g(2); val rs = g(3)
+    val out = b.clone()
+    var r = 0
+    while (r < h) {
+      var i = off + r * rs
+      val end = i + (w / 2) * 3
+      while (i < end) { out(i) = (out(i) + BrightShift).toByte; i += 1 }
+      r += 1
+    }
+    out
   }
 
-  /** The perceptual near-dup pair set (also the audit's subject):
-    * banded dHash candidates, Hamming ≤ [[MaxHamming]], exact pixel
-    * byte-verify flag per surviving pair. */
-  private[graft] def mediaPairs(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val media = dedupMediaCorpus(s, d)
-    val sigs = media
-      .select($"media_id", graft.functions.PerceptualHash.dhash64($"payload").as("ph"))
+  /** +[[DcShift]] on every sample LOW byte (even data-chunk offsets).
+    * Callers must exclude empty-text payloads (their generator data
+    * bytes reach 255 and would wrap). */
+  private[graft] def dcShift(b: Array[Byte]): Array[Byte] = {
+    val g = AudioHash.wavData(b)
+    require(g != null, "DC-variant fixtures are well-formed WAVs")
+    val out = b.clone()
+    var i = g(0); val end = g(0) + g(1)
+    while (i < end) { out(i) = (out(i) + DcShift).toByte; i += 2 }
+    out
+  }
+
+  /** Volume halving, the "same recording, different gain" query: every
+    * 16-bit sample s → s/2 (floor). It preserves s_a > s_b except where
+    * the halves collide, so distances land small but non-zero. Fixture
+    * samples are non-negative (ASCII high bytes ≤ 127); callers must
+    * exclude empty-text payloads, whose generator samples go negative,
+    * where floor and truncating halving diverge. */
+  private[graft] def halfVolume(b: Array[Byte]): Array[Byte] = {
+    val g = AudioHash.wavData(b)
+    require(g != null, "volume-variant fixtures are well-formed WAVs")
+    val out = b.clone()
+    var i = g(0); val end = g(0) + g(1)
+    while (i + 1 < end) {
+      val s = ((out(i) & 0xff) | ((out(i + 1) & 0xff) << 8)).toShort / 2
+      out(i) = (s & 0xff).toByte
+      out(i + 1) = ((s >> 8) & 0xff).toByte
+      i += 2
+    }
+    out
+  }
+
+  /** The documents of `m`'s slice. */
+  private def sliceDocs(s: SparkSession, d: String, m: Modality): DataFrame =
+    Tables.documents(s, d).filter(m.layout.slice(col("doc_id")))
+
+  /** Each (doc_id, text) row of `docs` as (media_id = doc_id + `off`,
+    * payload = `payload`(doc_id, UTF-8 text bytes)). Callers pass the
+    * payload function itself, so the task closure holds that function
+    * and not the [[Modality]] with its Columns. */
+  private def encoded(docs: DataFrame, off: Long,
+      payload: (Long, Array[Byte]) => Array[Byte]): DataFrame = {
+    import docs.sparkSession.implicits._
+    docs.select($"doc_id", encode($"text", "UTF-8").as("tb"))
+      .as[(Long, Array[Byte])]
+      .map { case (id, tb) => (id + off, payload(id, tb)) }
+      .toDF("media_id", "payload")
+  }
+
+  /** The dedup corpus: every doc of the slice, plus a byte-identical copy
+    * of each `exact` doc and a planted variant of each `planted` doc,
+    * both encoded with the BASE id so the container parameters match. */
+  private def dedupCorpus(s: SparkSession, d: String, m: Modality)
+      : DataFrame = {
+    val docs = sliceDocs(s, d, m)
+    encoded(docs, 0L, m.encode)
+      .union(encoded(docs.filter(m.exact), ExactOff, m.encode))
+      .union(encoded(docs.filter(m.planted), BrightOff, m.plant))
+  }
+
+  /** (media_id, ph): the non-null signatures of a (media_id, payload)
+    * relation. */
+  private def signatures(media: DataFrame, m: Modality): DataFrame = {
+    import media.sparkSession.implicits._
+    media.select($"media_id", m.signature($"payload").as("ph"))
       .filter($"ph".isNotNull)
+  }
+
+  /** 4×16-bit contiguous bands: band b is bits [16b, 16b + 16). */
+  private def contiguousBands(ph: Column): Column =
+    array((0 to 3).map(b =>
+      shiftrightunsigned(ph, b * 16).bitwiseAND(lit(0xFFFFL))): _*)
+
+  /** 4×16-bit COLUMN-major bands of a dHash: band i collects bit
+    * (gy*8 + c) of each hash row gy for its two grid columns
+    * c ∈ {i, i+4}. A vertical-edge perturbation (the half-brightness
+    * probes, and real-world crops, watermarks and letterboxing) confines
+    * its flips to the columns it touches, so flips in one column hit
+    * exactly ONE band (its column index mod 4). The other 3 bands still
+    * match, and probe→source recall is STRUCTURAL (the image search
+    * audit pins it), not probabilistic. Two columns per band keep the
+    * key space at 2^16: single-column 8-bit keys have only 256 values,
+    * and their bucket joins degenerate toward all-pairs as the corpus
+    * grows. */
+  private def columnMajorBands(ph: Column): Column = {
+    def colKey(c: Int, at: Int) = (0 to 7).map(gy =>
+      shiftleft(shiftrightunsigned(ph, gy * 8 + c).bitwiseAND(lit(1L)),
+        gy + at))
+      .reduce(_ + _)
+    array((0 to 3).map(i => colKey(i, 0) + colKey(i + 4, 8)): _*)
+  }
+
+  /** The near-dup pair set (also the audit's subject): banded signature
+    * candidates, Hamming ≤ [[MaxHamming]], exact content byte-verify
+    * flag per surviving pair. */
+  private def dedupPairs(s: SparkSession, d: String, m: Modality)
+      : DataFrame = {
+    import s.implicits._
+    val media = dedupCorpus(s, d, m)
     // join-free candidate stream (the simhashPairs shape): band buckets →
-    // ordered pairs carrying both hashes, Hamming as a per-row map
-    val bands = sigs.select(struct($"media_id", $"ph").as("dn"),
-      posexplode(array((0 to 3).map(b =>
-        shiftrightunsigned($"ph", b * 16).bitwiseAND(lit(0xFFFFL))): _*)))
+    // ordered pairs carrying both signatures, Hamming as a per-row map
+    val cand = signatures(media, m)
+      .select(struct($"media_id", $"ph").as("dn"),
+        posexplode(contiguousBands($"ph")))
       .withColumnsRenamed(Map("pos" -> "band", "col" -> "bkey"))
-    val cand = bands.groupBy($"band", $"bkey")
+      .groupBy($"band", $"bkey")
       .agg(sort_array(collect_list($"dn")).as("docs"))
-      .select(graft.functions.OrderedPairs.ordered_pairs($"docs")
+      .select(OrderedPairs.ordered_pairs($"docs")
         .as(Seq("id1", "ph1", "id2", "ph2")))
       .select($"id1", $"id2",
         bit_count($"ph1".bitwiseXOR($"ph2")).cast("int").as("hamming"))
       .distinct()
       .filter($"hamming" <= MaxHamming)
-    // exact byte-verify join-back on the padding-free pixel stream;
-    // shuffle-hash hints keep the media side the build side (the
-    // candidate stream's size is a Catalyst blind spot — it must never
-    // be picked to build)
-    val pix = media.select($"media_id",
-      graft.functions.PerceptualHash.bmp_pixels($"payload").as("pix"))
+    val content = media.select($"media_id", m.content($"payload").as("c"))
     cand
-      .join(pix.toDF("id1", "pix1").hint("shuffle_hash"), "id1")
-      .join(pix.toDF("id2", "pix2").hint("shuffle_hash"), "id2")
+      .join(content.toDF("id1", "c1").hint("shuffle_hash"), "id1")
+      .join(content.toDF("id2", "c2").hint("shuffle_hash"), "id2")
       .select($"id1", $"id2", $"hamming",
-        ($"pix1" === $"pix2").cast("long").as("exact_pixel"))
+        ($"c1" === $"c2").cast("long").as(m.exactCol))
       .orderBy($"id1", $"id2")
   }
 
+  /** Dedup audit: exact content-duplicate ground truth must be fully
+    * recalled, and the planted variants must land at Hamming 0. */
+  private def dedupAudit(s: SparkSession, d: String, m: Modality)
+      : DataFrame = {
+    import s.implicits._
+    val media = dedupCorpus(s, d, m)
+    val content = media.select($"media_id", m.content($"payload").as("c"))
+    // ground truth discovered INDEPENDENTLY of the signature path:
+    // xxhash64 buckets over the content stream, full byte verify inside
+    val pk = content.select($"media_id", xxhash64($"c").as("pk"))
+    val gt = pk.select(struct($"media_id", $"pk").as("dn"), $"pk")
+      .groupBy($"pk").agg(sort_array(collect_list($"dn")).as("docs"))
+      .select(OrderedPairs.ordered_pairs($"docs")
+        .as(Seq("id1", "k1", "id2", "k2")))
+      .select($"id1", $"id2")
+      .join(content.toDF("id1", "c1").hint("shuffle_hash"), "id1")
+      .join(content.toDF("id2", "c2").hint("shuffle_hash"), "id2")
+      .filter($"c1" === $"c2")
+      .select($"id1", $"id2")
+    val planted = sliceDocs(s, d, m).filter(m.planted)
+      .select($"doc_id".as("id1"), ($"doc_id" + BrightOff).as("id2"))
+    val nPlanted = s"n_${m.variant}_planted"
+    val nPlantedFound = s"n_${m.variant}_found"
+    // ONE consumer of the pair set: ground-truth and planted pairs are
+    // joined onto it and counted in one aggregate, so the pairs are
+    // computed once with no cache (separate anti-join, semi-join and
+    // count consumers each prune it differently and recompute it)
+    val counts = dedupPairs(s, d, m).select($"id1", $"id2", $"hamming")
+      .join(gt.withColumn("in_gt", lit(true)), Seq("id1", "id2"),
+        "full_outer")
+      .join(planted.withColumn("is_planted", lit(true)), Seq("id1", "id2"),
+        "left_outer")
+      .agg(count($"hamming").as("n_found_pairs"),
+        count_if($"in_gt" && $"hamming".isNull).as("n_missed"),
+        count_if($"is_planted" && $"hamming" === 0).as(nPlantedFound))
+    media.agg(count(lit(1)).as("n_media"))
+      .crossJoin(broadcast(gt.agg(count(lit(1)).as("n_exact_pairs"))))
+      .crossJoin(broadcast(counts))
+      .crossJoin(broadcast(planted.agg(count(lit(1)).as(nPlanted))))
+      .select($"n_media", $"n_exact_pairs", $"n_found_pairs", $"n_missed",
+        ($"n_missed" === 0L).cast("long").as("recall_ok"),
+        col(nPlanted), col(nPlantedFound))
+  }
+
+  /** (index, probes) for search: index = every doc of the slice; probes
+    * = the `probe` variant of each non-empty `probed` doc. */
+  private def searchCorpus(s: SparkSession, d: String, m: Modality)
+      : (DataFrame, DataFrame) = {
+    val docs = sliceDocs(s, d, m)
+    (encoded(docs, 0L, m.encode),
+      encoded(docs.filter(m.probed && length(col("text")) > 0), ProbeOff,
+        m.probe))
+  }
+
+  /** (media_id, ph, band, bkey): each signature once per search band. */
+  private def sigBands(sigs: DataFrame, m: Modality): DataFrame = {
+    import sigs.sparkSession.implicits._
+    sigs.select($"media_id", $"ph", posexplode(m.searchBands($"ph")))
+      .withColumnsRenamed(Map("pos" -> "band", "col" -> "bkey"))
+  }
+
+  /** The persisted index rows of a (media_id, payload) relation. Rows
+    * carry the full signature next to each band key, so the probe join
+    * needs no second lookup to re-rank. */
+  private def bandRows(media: DataFrame, m: Modality): DataFrame =
+    sigBands(signatures(media, m), m)
+
+  /** Band-bucket candidates with exact Hamming: probe signatures `psig`
+    * against index rows `ibands` (neighbor_id, phi, band, bkey). Pre-
+    * rank, so the audit checks self-candidacy here, before top-k can
+    * push a source past rank K. The probe side is the shuffle-hash
+    * build (bounded). */
+  private def candidates(psig: DataFrame, ibands: DataFrame, m: Modality)
+      : DataFrame = {
+    import psig.sparkSession.implicits._
+    sigBands(psig, m).toDF("probe_id", "php", "band", "bkey")
+      .hint("shuffle_hash")
+      .join(ibands, Seq("band", "bkey"))
+      .select($"probe_id", $"neighbor_id",
+        bit_count($"php".bitwiseXOR($"phi")).cast("long").as("hamming"))
+      .distinct()
+  }
+
+  /** The per-run candidate stream: the whole index re-hashed inline. */
+  private[graft] def searchCand(s: SparkSession, d: String, m: Modality)
+      : DataFrame = {
+    val (idx, probes) = searchCorpus(s, d, m)
+    candidates(signatures(probes, m),
+      bandRows(idx, m).toDF("neighbor_id", "phi", "band", "bkey"), m)
+  }
+
+  /** Per-probe rank ≤ [[TopK]] over a candidate stream, by the bounded
+    * top_k_pairs heap: it keeps K per (probe, task) map-side and
+    * shuffles only those, where a rank window would sort every probe's
+    * full candidate list inside an exchange. top_k_pairs ranks (score
+    * DESC, id ASC), so negated Hamming gives (hamming ASC, neighbor_id
+    * ASC), the oracle's order. */
+  private def topKFrom(cand: DataFrame): DataFrame = {
+    import cand.sparkSession.implicits._
+    cand.groupBy($"probe_id")
+      .agg(graft.functions.TopKPairs
+        .top_k_pairs(-$"hamming", $"neighbor_id", TopK).as("tk"))
+      .select($"probe_id", posexplode($"tk"))
+      .select($"probe_id", ($"pos" + 1).cast("long").as("rnk"),
+        $"col.id".as("neighbor_id"), (-$"col.score").cast("long").as("hamming"))
+  }
+
+  /** Probe top-k over an arbitrary (neighbor_id, phi, band, bkey) index
+    * relation: the ONE search plan every persisted-index variant (batch
+    * LSM, stream log, compacted base, post-forget store) shares. */
+  private def probeTopK(s: SparkSession, d: String, m: Modality,
+      ibands: DataFrame): DataFrame =
+    topKFrom(candidates(signatures(searchCorpus(s, d, m)._2, m), ibands, m))
+
+  /** Search audit: banded top-k against brute-force ground truth, plus
+    * probe→source self-candidacy. The index side reads the stamped
+    * serving-index artifact (the same encode+hash chain, hash-audited by
+    * the `_index` query); the bounded probe encode stays inline. Shared
+    * frames are materialized EAGERLY (cache + count): with lazy caches
+    * the one-action broadcast fan-out raced the cache fills, and the
+    * heaviest shared subtrees computed twice concurrently. */
+  private def searchAudit(s: SparkSession, d: String, m: Modality)
+      : DataFrame = {
+    import s.implicits._
+    val (_, probes) = searchCorpus(s, d, m)
+    val psig = signatures(probes, m).cache(); psig.count()
+    val ibands = indexRead(s, indexDir(s, d, m)).cache(); ibands.count()
+    val isig = ibands.select($"neighbor_id".as("media_id"),
+      $"phi".as("ph")).distinct()
+    val cand = candidates(psig, ibands, m).cache(); cand.count()
+    val banded = topKFrom(cand).cache(); banded.count()
+    // brute-force ground truth: probe signatures broadcast against the
+    // index (the exact re-score shape, probe-bounded), exact top-K per
+    // probe from the same bounded heap as [[topKFrom]]
+    val brute = isig.toDF("neighbor_id", "phi")
+      .crossJoin(broadcast(psig.toDF("probe_id", "php")))
+      .select($"probe_id", $"neighbor_id",
+        bit_count($"php".bitwiseXOR($"phi")).cast("long").as("hamming"))
+      .groupBy($"probe_id")
+      .agg(graft.functions.TopKPairs
+        .top_k_pairs(-$"hamming", $"neighbor_id", TopK).as("tk"))
+      .select($"probe_id", explode($"tk").as("e"))
+      .select($"probe_id", $"e.id".as("neighbor_id"))
+      .cache()
+    brute.count()
+    val overlap = banded.select($"probe_id", $"neighbor_id")
+      .join(brute, Seq("probe_id", "neighbor_id"), "left_semi")
+    val selfCand = cand
+      .filter($"neighbor_id" === $"probe_id" - ProbeOff)
+    psig.agg(count(lit(1)).as("n_probes"))
+      .crossJoin(broadcast(isig.agg(count(lit(1)).as("n_index"))))
+      .crossJoin(broadcast(brute.agg(count(lit(1)).as("n_truth"))))
+      .crossJoin(broadcast(banded.agg(count(lit(1)).as("n_found"))))
+      .crossJoin(broadcast(overlap.agg(count(lit(1)).as("n_overlap"))))
+      .crossJoin(broadcast(selfCand.agg(count(lit(1)).as("n_self_cand"))))
+      .select($"n_probes", $"n_index", $"n_truth", $"n_found", $"n_overlap",
+        $"n_self_cand")
+  }
+
+  // ----------------------------------- persisted band-signature index
+  // The per-run search re-encodes and re-hashes the whole corpus on every
+  // call: right for a one-off, wrong for a serving path. The search
+  // family's LSM pattern (q_stream_index_maintain/_compact) applied to
+  // the signature index: a PERSISTED (media_id, ph, band, bkey) relation,
+  // hive-partitioned by generation. The base build hashes only the base
+  // slice; an incremental maintain pass hashes ONLY the delta slice (the
+  // layout's generation rule) and lands it as new gen=1 files with the
+  // base files byte-untouched (MediaSearchSpec, AudioSearchSpec). Search
+  // then hashes the BOUNDED probe set and joins it against the index
+  // read (union of generations): the corpus is never re-read or
+  // re-hashed. The declared output equals the per-run search's, so the
+  // same full replay oracle checks it.
+  //
+  // Scale posture: index rows are 4 longs + an id (~40 B/row × 4 per
+  // item); the maintain pass is delta-sized; at 100 TB the search reads
+  // an index many orders smaller than the corpus, and the (band, bkey)
+  // layout can bucket-partition for probe-side pruning.
+
+  /** One generation's slice, ENCODED ONLY FOR THAT SLICE (filter before
+    * the encode map): the incremental-maintain contract. */
+  private def indexSlice(s: SparkSession, d: String, m: Modality,
+      delta: Boolean): DataFrame =
+    encoded(sliceDocs(s, d, m).filter(m.layout.genSlice(col("doc_id"), delta)),
+      0L, m.encode)
+
+  /** Base build: band rows of the base slice, gen=0. */
+  private[graft] def writeIndexBase(s: SparkSession, d: String, m: Modality,
+      dir: String): Unit =
+    bandRows(indexSlice(s, d, m, delta = false), m)
+      .withColumn("gen", lit(0))
+      .write.mode("overwrite").partitionBy("gen").parquet(dir)
+
+  /** Incremental maintain: ONLY the delta slice is hashed; lands as new
+    * gen=1 files, base generation byte-untouched. */
+  private[graft] def appendIndexDelta(s: SparkSession, d: String,
+      m: Modality, dir: String): Unit =
+    bandRows(indexSlice(s, d, m, delta = true), m)
+      .withColumn("gen", lit(1))
+      .write.mode("append").partitionBy("gen").parquet(dir)
+
+  /** One-pass two-generation build for the forget query's SCRATCH store,
+    * rebuilt per invocation: gen derived from the id lands the same
+    * (gen=0, gen=1) layout as the phased base+delta helpers in ONE
+    * encode+hash pass and ONE write (OnePassBuildSpec). The phased
+    * helpers stay as the maintain-path contract and build the stamped
+    * artifact. */
+  private[graft] def buildIndexStore(s: SparkSession, d: String,
+      m: Modality, dir: String): Unit =
+    bandRows(encoded(sliceDocs(s, d, m), 0L, m.encode), m)
+      .withColumn("gen", m.layout.genOfInt(col("media_id")))
+      .write.mode("overwrite").partitionBy("gen").parquet(dir)
+
+  /** The persisted index artifact, stamped per corpus version. */
+  private def indexDir(s: SparkSession, d: String, m: Modality): String =
+    Fs.staged(s"${m.kind}_band_index", d,
+        FixtureStamp.stamp("v1", d, "documents")) { dir =>
+      writeIndexBase(s, d, m, dir.toString)
+      appendIndexDelta(s, d, m, dir.toString)
+    }
+
+  private def indexRead(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    s.read.parquet(dir)
+      .select($"media_id".as("neighbor_id"), $"ph".as("phi"),
+        $"band", $"bkey")
+  }
+
+  // RTBF propagation into the serving index. Forgetting a doc from the
+  // training shards (q_shard_forget) is not enough: its SIGNATURES still
+  // sit in the search index and keep surfacing it, and a delete must
+  // reach every derived artifact. Generation alignment bounds the blast
+  // radius as in the shard store: an id's index rows live in exactly ONE
+  // generation, derivable from the id alone (the layout rule), so only
+  // the generations the delete set touches rewrite. The rewrite is the
+  // shared filter-in-place engine ([[IndexForget]]): the artifact's
+  // current rows minus the delete set. Re-deriving from the source
+  // instead would resurrect earlier deletes on the second forget (the
+  // works-once class PeriodicLifecycleSpec pins).
+  private[graft] def forgetIndex(s: SparkSession, d: String, m: Modality,
+      dir: String, deletePred: Column): Unit = {
+    import s.implicits._
+    val media = sliceDocs(s, d, m)
+    // affected generations from the layout rule — no index scan
+    val affected = media.filter(deletePred)
+      .select(m.layout.genOfInt($"doc_id").as("gen"))
+      .distinct().as[Int].collect().toSeq.sorted
+    IndexForget.filterInPlace(s, dir, "media_id",
+      Seq("media_id", "ph", "band", "bkey"), affected,
+      media.filter(deletePred).select($"doc_id".as("media_id")))
+  }
+
+  /** Build a scratch store, forget the fixture delete set from it, and
+    * search what is left. */
+  private def forgetSearch(s: SparkSession, d: String, m: Modality)
+      : DataFrame = {
+    val dir = Fs.artifactDir(s"${m.kind}_band_index_forget", d).toString
+    buildIndexStore(s, d, m, dir)
+    forgetIndex(s, d, m, dir,
+      col("doc_id") % ShardOps.ForgetMod === ShardOps.ForgetRes)
+    probeTopK(s, d, m, indexRead(s, dir)).orderBy("probe_id", "rnk")
+  }
+
+  // STREAM-maintained image band index. A serving index is really
+  // maintained by the INGEST STREAM: each arriving micro-batch of
+  // documents derives its media payloads, hashes them, and appends its
+  // (media_id, ph, band, bkey, gen=batchId) signature DELTA to the index
+  // log (the q_stream_index_maintain posture with band rows instead of
+  // postings). No streaming-engine state; a replayed at-least-once batch
+  // re-appends byte-identical rows and the search read's distinct
+  // collapses them (each media id is admitted by exactly one batch).
+  private[graft] def streamMediaIndexBatch(batch: Dataset[Row],
+      batchId: Long, out: String): Unit =
+    bandRows(encoded(batch.filter(Image.layout.slice(col("doc_id"))), 0L,
+        Image.encode), Image)
+      .withColumn("gen", lit(batchId))
+      .write.mode("append").parquet(out)
+
+  private[graft] def streamMediaIndexLog(s: SparkSession, d: String)
+      : String =
+    Fs.staged("stream_media_band_index", d,
+        FixtureStamp.stamp("v1", d, "documents")) { outPath =>
+      val dir = graft.streaming.StreamingOps.streamPipeDir(s, d)
+      val out = outPath.toString
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("doc_id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("text",
+          org.apache.spark.sql.types.StringType)))
+      graft.streaming.StreamingOps.withStreamPartitions(s,
+        Fs.partitionsFor(dir)) { ss =>
+        val q = ss.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1")
+          .option("latestFirst", "false")
+          .parquet(dir)
+          .writeStream
+          .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+            streamMediaIndexBatch(batch, batchId, out)
+          }
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
+    }
+
+  // ------------------------------------------------ image queries
   /** Shared oracle CTE block: DuckDB replays payload pixels from the
     * generator formulas (cyclic text-byte fill over the BMP geometry,
     * padding excluded), then the 9×8 grid grays, the 64 hash bits, the
@@ -332,7 +825,7 @@ object MultimodalOps extends QueryPack {
 
   private val mediaDedup = QueryDef(
     "q_dedup_media",
-    (s, d) => mediaPairs(s, d),
+    (s, d) => dedupPairs(s, d, Image),
     Some(s"""WITH $mediaCtes
       SELECT id1, id2, hamming, exact_pixel FROM fp
       WHERE hamming <= $MaxHamming ORDER BY id1, id2"""),
@@ -342,42 +835,7 @@ object MultimodalOps extends QueryPack {
 
   private val mediaDedupAudit = QueryDef(
     "q_dedup_media_audit",
-    (s, d) => {
-      import s.implicits._
-      val media = dedupMediaCorpus(s, d)
-      val pix = media.select($"media_id",
-        graft.functions.PerceptualHash.bmp_pixels($"payload").as("pix"))
-      // ground truth discovered INDEPENDENTLY of the perceptual path:
-      // xxhash64 buckets over the pixel stream, full byte verify inside
-      val pk = pix.select($"media_id", xxhash64($"pix").as("pk"))
-      val gtCand = pk.select(struct($"media_id", $"pk").as("dn"), $"pk")
-        .groupBy($"pk").agg(sort_array(collect_list($"dn")).as("docs"))
-        .select(graft.functions.OrderedPairs.ordered_pairs($"docs")
-          .as(Seq("id1", "k1", "id2", "k2")))
-        .select($"id1", $"id2")
-      val gt = gtCand
-        .join(pix.toDF("id1", "pix1").hint("shuffle_hash"), "id1")
-        .join(pix.toDF("id2", "pix2").hint("shuffle_hash"), "id2")
-        .filter($"pix1" === $"pix2")
-        .select($"id1", $"id2")
-      val found = mediaPairs(s, d).cache()
-      val missed = gt.join(found.select($"id1", $"id2"),
-        Seq("id1", "id2"), "left_anti")
-      val bright = Tables.documents(s, d)
-        .filter($"doc_id" % 14 === 0) // multiples of 14 are even: all BMPs
-        .select($"doc_id".as("id1"), ($"doc_id" + BrightOff).as("id2"))
-      val brightFound = bright.join(found.filter($"hamming" === 0),
-        Seq("id1", "id2"), "left_semi")
-      media.agg(count(lit(1)).as("n_media"))
-        .crossJoin(broadcast(gt.agg(count(lit(1)).as("n_exact_pairs"))))
-        .crossJoin(broadcast(found.agg(count(lit(1)).as("n_found_pairs"))))
-        .crossJoin(broadcast(missed.agg(count(lit(1)).as("n_missed"))))
-        .crossJoin(broadcast(bright.agg(count(lit(1)).as("n_bright_planted"))))
-        .crossJoin(broadcast(brightFound.agg(count(lit(1)).as("n_bright_found"))))
-        .select($"n_media", $"n_exact_pairs", $"n_found_pairs", $"n_missed",
-          ($"n_missed" === 0L).cast("long").as("recall_ok"),
-          $"n_bright_planted", $"n_bright_found")
-    },
+    (s, d) => dedupAudit(s, d, Image),
     Some(s"""WITH $mediaCtes,
       gt AS (
         SELECT a.mid AS id1, b.mid AS id2
@@ -406,140 +864,6 @@ object MultimodalOps extends QueryPack {
       "hash buckets + byte verify, independent of the perceptual path) " +
       "must be fully recalled; planted brightness variants must land at " +
       "Hamming 0 — every scalar oracle-recomputed by full replay")
-
-  // ------------------------------------------- perceptual similarity search
-  // The multimodal family's SEARCH operator (q_dedup_media is its dedup):
-  // top-k nearest images by dHash Hamming distance for a bounded probe
-  // set, candidates generated by the same 4×16-bit band buckets (a probe
-  // only scores index images sharing ≥1 band — never the full index).
-  // Probes are the planted half-brightened variants below: +BrightShift
-  // on the LEFT half of every pixel row changes exactly the grid
-  // comparisons that straddle the half boundary (≤ 1 bit per hash row),
-  // so probe→source distances spread over [0, 8] by content — a real
-  // graded ranking, not a 0/∞ split. Banding is COLUMN-major (band i =
-  // the 16 bits of grid columns i and i+4) rather than q_dedup_media's
-  // contiguous row-wise bands: a vertical-edge perturbation — the
-  // half-brightness class, and real-world crops/watermarks/letterboxing —
-  // confines its flips to the columns it touches, so flips in one column
-  // hit exactly ONE band (its column index mod 4), the other 3 bands
-  // still match, and probe→source recall is STRUCTURAL (the audit pins
-  // it), not probabilistic. Two columns per band keeps the key space at
-  // 2^16 — single-column 8-bit keys have only 256 values, so their
-  // bucket joins degenerate toward all-pairs as the corpus grows (the
-  // first cut measured superlinear at the 10× stress). DuckDB replays pixels → grid
-  // → bits → band keys → band join → Hamming → row_number, so the BANDED
-  // semantics (including any probe whose true neighbor shares no band —
-  // the honest ANN trade) get a full hash oracle; the audit quantifies
-  // that trade against the brute-force ground truth.
-  //
-  // Scale posture: per-row codegen hash; candidate generation is an
-  // equi-join on (band, bkey) with the bounded probe side as the
-  // shuffle-hash build; ranking windows partition on probe_id (per-probe
-  // candidate lists are band-bucket-bounded). Only the audit brute-forces
-  // — probe hashes broadcast against the index, the exact re-score shape.
-
-  private[graft] val ProbeOff = 1L << 42
-  private[graft] val TopK = 5
-
-  /** Left-half brightening: +[[BrightShift]] on every pixel byte in
-    * columns [0, w/2) — geometry-aware, padding untouched. Callers must
-    * exclude empty-text payloads (their generator pixels reach 255 and
-    * would wrap; ASCII text bytes are ≤ 127 + 64 < 256). */
-  private[graft] def halfBright(b: Array[Byte]): Array[Byte] = {
-    val g = graft.functions.PerceptualHash.bmpGeometry(b)
-    require(g != null, "probe fixtures are well-formed BMPs")
-    val w = g(0); val h = g(1); val off = g(2); val rs = g(3)
-    val out = b.clone()
-    var r = 0
-    while (r < h) {
-      var i = off + r * rs
-      val end = i + (w / 2) * 3
-      while (i < end) { out(i) = (out(i) + BrightShift).toByte; i += 1 }
-      r += 1
-    }
-    out
-  }
-
-  /** (index, probes) for the search corpus: index = every base BMP;
-    * probes = half-brightened variants of doc_id % 6 == 0 (all even →
-    * BMPs), empty-text docs excluded (wrap guard). */
-  private[graft] def searchCorpus(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) = {
-    import s.implicits._
-    val docs = Tables.documents(s, d).filter($"doc_id" % 2 === 0)
-      .select($"doc_id", encode($"text", "UTF-8").as("tb"))
-      .as[(Long, Array[Byte])]
-    val idx = docs.map { case (id, tb) => (id, MediaCodec.encodeBmp(id, tb)) }
-      .toDF("media_id", "payload")
-    val probes = docs.filter(t => t._1 % 6 == 0 && t._2.nonEmpty)
-      .map { case (id, tb) =>
-        (id + ProbeOff, halfBright(MediaCodec.encodeBmp(id, tb))) }
-      .toDF("media_id", "payload")
-    (idx, probes)
-  }
-
-  /** 4×16-bit COLUMN-major band explode of a (media_id, ph) signature
-    * relation: band i collects bit (gy*8 + c) of each hash row gy for
-    * its two columns c ∈ {i, i+4} — the grid-column grouping the
-    * operator comment banks on, at a 2^16 key space. */
-  private def phBands(sigs: DataFrame): DataFrame = {
-    import sigs.sparkSession.implicits._
-    def colKey(c: Int, at: Int) = (0 to 7).map(gy =>
-      shiftleft(shiftrightunsigned($"ph", gy * 8 + c).bitwiseAND(lit(1L)),
-        gy + at))
-      .reduce(_ + _)
-    def bandKey(i: Int) = colKey(i, 0) + colKey(i + 4, 8)
-    sigs.select($"media_id", $"ph",
-      posexplode(array((0 to 3).map(bandKey): _*)))
-      .withColumnsRenamed(Map("pos" -> "band", "col" -> "bkey"))
-  }
-
-  private def phSig(media: DataFrame): DataFrame = {
-    import media.sparkSession.implicits._
-    media.select($"media_id",
-      graft.functions.PerceptualHash.dhash64($"payload").as("ph"))
-      .filter($"ph".isNotNull)
-  }
-
-  /** Band-bucket candidate stream with exact Hamming from prebuilt
-    * signatures — pre-rank (the audit checks self-candidacy here, before
-    * top-k can push a source past rank K). The probe side is the
-    * shuffle-hash build (bounded). */
-  private def candFrom(psig: DataFrame, isig: DataFrame): DataFrame = {
-    import psig.sparkSession.implicits._
-    phBands(psig).toDF("probe_id", "php", "band", "bkey")
-      .hint("shuffle_hash")
-      .join(phBands(isig).toDF("neighbor_id", "phi", "band", "bkey"),
-        Seq("band", "bkey"))
-      .select($"probe_id", $"neighbor_id",
-        bit_count($"php".bitwiseXOR($"phi")).cast("long").as("hamming"))
-      .distinct()
-  }
-
-  private[graft] def mediaCand(s: SparkSession, d: String): DataFrame = {
-    val (idx, probes) = searchCorpus(s, d)
-    candFrom(phSig(probes), phSig(idx))
-  }
-
-  /** Per-probe rank ≤ [[TopK]] over a candidate stream — the bounded
-    * top_k_pairs heap (r17, guide §2.3): the window form sorted every
-    * probe's full candidate list inside an exchange; the heap keeps K
-    * per (probe, task) map-side and shuffles only those. Order is
-    * identical: top_k_pairs ranks (score DESC, id ASC), so negated
-    * Hamming reproduces (hamming ASC, neighbor_id ASC) exactly. */
-  private def topKFrom(cand: DataFrame): DataFrame = {
-    import cand.sparkSession.implicits._
-    cand.groupBy($"probe_id")
-      .agg(graft.functions.TopKPairs
-        .top_k_pairs(-$"hamming", $"neighbor_id", TopK).as("tk"))
-      .select($"probe_id", posexplode($"tk"))
-      .select($"probe_id", ($"pos" + 1).cast("long").as("rnk"),
-        $"col.id".as("neighbor_id"), (-$"col.score").cast("long").as("hamming"))
-  }
-
-  /** Banded top-k: candidates → per-probe rank. */
-  private[graft] def mediaTopK(s: SparkSession, d: String): DataFrame =
-    topKFrom(mediaCand(s, d))
 
   /** Oracle CTE chain for the search corpus: generator pixels (+64 on
     * the left half for probes) → 9×8 grid → 64 bits → band keys, both
@@ -631,249 +955,30 @@ object MultimodalOps extends QueryPack {
 
   private val mediaSearch = QueryDef(
     "q_simsearch_media",
-    (s, d) => {
-      import s.implicits._
-      mediaTopK(s, d).orderBy($"probe_id", $"rnk")
-    },
+    (s, d) => topKFrom(searchCand(s, d, Image)).orderBy("probe_id", "rnk"),
     Some(searchOracleSql),
     "Perceptual top-k image search: banded dHash candidates, exact " +
       "Hamming re-rank per probe; DuckDB replays pixels->bits->bands->" +
       "rank from the generator formulas — full hash oracle")
 
-  // ------------- persisted band-signature index (r14, VERDICT r13 task 4)
-  // q_simsearch_media re-encodes and re-hashes the whole corpus on every
-  // search — right for a one-off, wrong for a serving path. The search
-  // family's LSM pattern (q_stream_index_maintain/_compact) applied to
-  // the signature index: a PERSISTED (media_id, ph, band, bkey) relation,
-  // hive-partitioned by generation — the base build hashes only the base
-  // slice, an incremental maintain pass hashes ONLY the delta slice
-  // (the family's HoldoutMod split) and lands it as new gen=1 files with
-  // the base files byte-untouched (MediaSearchSpec). Rows carry the full
-  // signature alongside each band key, so the probe join needs no
-  // second lookup to re-rank (the simhash pair-carry trick). Search is
-  // then: hash the BOUNDED probe set, one shuffle-hash equi-join on
-  // (band, bkey) against the index read (union of generations), exact
-  // Hamming, per-probe rank — the corpus is never re-read, never
-  // re-hashed. Same declared output as q_simsearch_media, so the SAME
-  // full pixel-replay hash oracle checks it; the spec additionally pins
-  // indexed == per-run-rebuilt row-for-row and that the search plan
-  // scans the index artifact, not the media corpus.
-  //
-  // Scale posture: index rows are 4 longs + an id (metadata-narrow,
-  // ~40 B/row × 4/image); the maintain pass is delta-sized; at 100 TB
-  // the search reads an index many orders smaller than the corpus and
-  // the (band, bkey) layout can bucket-partition for probe-side pruning.
-
-  /** One generation's media slice, ENCODED ONLY FOR THAT SLICE — the
-    * incremental-maintain contract (filter before the encode map).
-    * `keep` further restricts the slice (the forget rewrite passes the
-    * survivor predicate). */
-  private def indexSlice(s: SparkSession, d: String, delta: Boolean,
-      keep: org.apache.spark.sql.Column = lit(true)): DataFrame = {
-    import s.implicits._
-    val lay = GenerationLayout.MediaIndex
-    Tables.documents(s, d).filter(lay.slice($"doc_id"))
-      .filter(lay.genSlice($"doc_id", delta))
-      .filter(keep)
-      .select($"doc_id", encode($"text", "UTF-8").as("tb"))
-      .as[(Long, Array[Byte])]
-      .map { case (id, tb) => (id, MediaCodec.encodeBmp(id, tb)) }
-      .toDF("media_id", "payload")
-  }
-
-  private def bandRows(slice: DataFrame): DataFrame =
-    phBands(phSig(slice)).toDF("media_id", "ph", "band", "bkey")
-
-  /** Base build: signature+band rows of the base slice, gen=0. */
-  private[graft] def writeMediaIndexBase(s: SparkSession, d: String,
-      dir: String): Unit =
-    bandRows(indexSlice(s, d, delta = false))
-      .withColumn("gen", lit(0))
-      .write.mode("overwrite").partitionBy("gen").parquet(dir)
-
-  /** Incremental maintain: ONLY the delta slice is hashed; lands as new
-    * gen=1 files, base generation byte-untouched. */
-  private[graft] def appendMediaIndexDelta(s: SparkSession, d: String,
-      dir: String): Unit =
-    bandRows(indexSlice(s, d, delta = true))
-      .withColumn("gen", lit(1))
-      .write.mode("append").partitionBy("gen").parquet(dir)
-
-  /** One-pass two-generation build for the forget query's SCRATCH store
-    * (r16, guide §1.2): q_media_index_forget rebuilds per invocation and
-    * the phased base+delta helpers each re-ran the encode+hash map over
-    * their slice — gen derived from the id lands the identical
-    * (gen=0, gen=1) layout in ONE pass and ONE write. The phased
-    * helpers stay as the maintain-path contract (delta-only hashing)
-    * and the stamped artifact's builder. */
-  private[graft] def buildMediaIndexStore(s: SparkSession, d: String,
-      dir: String): Unit = {
-    import s.implicits._
-    val lay = GenerationLayout.MediaIndex
-    val slice = Tables.documents(s, d).filter(lay.slice($"doc_id"))
-      .select($"doc_id", encode($"text", "UTF-8").as("tb"))
-      .as[(Long, Array[Byte])]
-      .map { case (id, tb) => (id, MediaCodec.encodeBmp(id, tb)) }
-      .toDF("media_id", "payload")
-    bandRows(slice)
-      .withColumn("gen", lay.genOfInt($"media_id"))
-      .write.mode("overwrite").partitionBy("gen").parquet(dir)
-  }
-
-  /** The persisted index artifact, stamped per corpus version. */
-  private[graft] def mediaIndexDir(s: SparkSession, d: String): String =
-    graft.Fs.staged("media_band_index", d,
-        graft.FixtureStamp.stamp("v1", d, "documents")) { dir =>
-      writeMediaIndexBase(s, d, dir.toString)
-      appendMediaIndexDelta(s, d, dir.toString)
-    }
-
-  /** Probe top-k over an arbitrary (neighbor_id, phi, band, bkey) index
-    * relation — the ONE search plan every persisted-index variant
-    * (batch LSM, stream log, compacted base, post-forget store) shares:
-    * hash the bounded probe set, shuffle-hash equi-join on (band, bkey),
-    * exact Hamming, per-probe rank. */
-  private def probeTopK(s: SparkSession, d: String, ibands: DataFrame)
-      : DataFrame = {
-    import s.implicits._
-    val (_, probes) = searchCorpus(s, d)
-    val cand = phBands(phSig(probes))
-      .toDF("probe_id", "php", "band", "bkey")
-      .hint("shuffle_hash")
-      .join(ibands, Seq("band", "bkey"))
-      .select($"probe_id", $"neighbor_id",
-        bit_count($"php".bitwiseXOR($"phi")).cast("long").as("hamming"))
-      .distinct()
-    topKFrom(cand)
-  }
-
-  private def indexRead(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    s.read.parquet(dir)
-      .select($"media_id".as("neighbor_id"), $"ph".as("phi"),
-        $"band", $"bkey")
-  }
-
-  /** Search over the persisted index: probe hashes (bounded) against
-    * the index read — no corpus re-hash anywhere in the plan. */
-  private[graft] def mediaTopKIndexed(s: SparkSession, d: String)
-      : DataFrame =
-    probeTopK(s, d, indexRead(s, mediaIndexDir(s, d)))
-
-  // ---------- RTBF propagation into the serving index (r14; rewrite
-  // r16). Forgetting a doc from the training shards (q_shard_forget) is
-  // not enough: its SIGNATURES still sit in the search index and keep
-  // surfacing it — the compliance requirement is that a delete
-  // propagates to every derived artifact. Generation alignment gives
-  // the same bounded blast radius here as in the shard store: a media
-  // id's index rows live in exactly ONE generation, derivable from the
-  // id alone (the HoldoutMod layout rule), so only the generations the
-  // delete set touches rewrite. The rewrite itself is the shared
-  // filter-in-place engine ([[IndexForget]]): the artifact's current
-  // rows minus the delete set — NOT a re-derivation from the source,
-  // which until r16 silently resurrected earlier deletes on the second
-  // forget (the works-once class the periodic-lifecycle harness pins).
-  private[graft] def forgetMediaIndex(s: SparkSession, d: String,
-      dir: String, deletePred: org.apache.spark.sql.Column): Unit = {
-    import s.implicits._
-    val lay = GenerationLayout.MediaIndex
-    val media = Tables.documents(s, d).filter(lay.slice($"doc_id"))
-    // affected generations from the layout rule — no index scan
-    val affected = media.filter(deletePred)
-      .select(lay.genOfInt($"doc_id").as("gen"))
-      .distinct().as[Int].collect().toSeq.sorted
-    IndexForget.filterInPlace(s, dir, "media_id",
-      Seq("media_id", "ph", "band", "bkey"), affected,
-      media.filter(deletePred).select($"doc_id".as("media_id")))
-  }
-
-  private val mediaIndexForget = QueryDef(
-    "q_media_index_forget",
-    (s, d) => {
-      import s.implicits._
-      val dir = graft.Fs.artifactDir("media_band_index_forget", d).toString
-      buildMediaIndexStore(s, d, dir) // one encode+hash pass (r16)
-      forgetMediaIndex(s, d, dir,
-        col("doc_id") % ShardOps.ForgetMod === ShardOps.ForgetRes)
-      probeTopK(s, d, indexRead(s, dir)).orderBy($"probe_id", $"rnk")
-    },
-    Some(s"""WITH ${searchCtesWith(
-        s"AND NOT doc_id % ${ShardOps.ForgetMod} = ${ShardOps.ForgetRes}")}
-      SELECT CAST(probe_id AS BIGINT) AS probe_id,
-        CAST(row_number() OVER (PARTITION BY probe_id
-          ORDER BY hamming, neighbor_id) AS BIGINT) AS rnk,
-        CAST(neighbor_id AS BIGINT) AS neighbor_id, hamming
-      FROM shm QUALIFY rnk <= $TopK ORDER BY probe_id, rnk"""),
-    "RTBF propagation into the serving index: affected generations " +
-      "filtered IN PLACE (current artifact rows minus the delete set — " +
-      "survivors byte-carried, nothing re-hashed, repeated forgets " +
-      "compose) and swapped via dynamic partition overwrite; " +
-      "post-forget search hash-equal to the oracle's replay with " +
-      "deleted docs excluded from the searchable side")
-
-  // ---------- STREAM-maintained media band index (r14, the literal
-  // q_stream_media_index the r13 verdict named). The batch LSM build
-  // above covers the daily shape; a serving index is really maintained
-  // by the INGEST STREAM: each arriving micro-batch of documents
-  // derives its media payloads, hashes them, and appends its
-  // (media_id, ph, band, bkey, gen=batchId) signature DELTA to the
-  // index log — the q_stream_index_maintain posture with band rows
-  // instead of postings. No streaming-engine state; a replayed
-  // at-least-once batch re-appends byte-identical rows and the search
-  // read's distinct collapses them (each media id is admitted by
-  // exactly one batch). Search = the persisted-index plan over the
-  // stream-maintained log; the declared result is identical to
-  // q_simsearch_media, so the SAME full pixel-replay oracle checks the
-  // entire stream → hash → band → log → search chain.
-  private[graft] def streamMediaIndexBatch(batch: Dataset[Row],
-      batchId: Long, out: String): Unit = {
-    val s2 = batch.sparkSession
-    import s2.implicits._
-    val media = batch
-      .filter($"doc_id" % 2 === 0)
-      .select($"doc_id", encode($"text", "UTF-8").as("tb"))
-      .as[(Long, Array[Byte])]
-      .map { case (id, tb) => (id, MediaCodec.encodeBmp(id, tb)) }
-      .toDF("media_id", "payload")
-    bandRows(media).withColumn("gen", lit(batchId))
-      .write.mode("append").parquet(out)
-  }
-
-  private[graft] def streamMediaIndexLog(s: SparkSession, d: String)
-      : String =
-    graft.Fs.staged("stream_media_band_index", d,
-        graft.FixtureStamp.stamp("v1", d, "documents")) { outPath =>
-      val dir = graft.streaming.StreamingOps.streamPipeDir(s, d)
-      val out = outPath.toString
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType)))
-      graft.streaming.StreamingOps.withStreamPartitions(s,
-        graft.Fs.partitionsFor(dir)) { ss =>
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("latestFirst", "false")
-          .parquet(dir)
-          .writeStream
-          .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-            streamMediaIndexBatch(batch, batchId, out)
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
-      }
-    }
+  private val mediaSearchIndexed = QueryDef(
+    "q_simsearch_media_index",
+    (s, d) => probeTopK(s, d, Image, indexRead(s, indexDir(s, d, Image)))
+      .orderBy("probe_id", "rnk"),
+    Some(searchOracleSql),
+    "Perceptual top-k search over the PERSISTED band-signature index " +
+      "(LSM base + incremental delta generation, maintain pass hashes " +
+      "only the delta): probe hashes join the index read — the corpus " +
+      "is never re-hashed; same full pixel-replay hash oracle as " +
+      "q_simsearch_media")
 
   private val mediaSearchStreamIndexed = QueryDef(
     "q_stream_media_index",
     (s, d) => {
-      import s.implicits._
       val log = streamMediaIndexLog(s, d)
       // replay-duplicate collapse: identical re-appended rows fold away
-      probeTopK(s, d, indexRead(s, log).distinct())
-        .orderBy($"probe_id", $"rnk")
+      probeTopK(s, d, Image, indexRead(s, log).distinct())
+        .orderBy("probe_id", "rnk")
     },
     Some(searchOracleSql),
     "Perceptual top-k search over the STREAM-maintained band index: " +
@@ -893,16 +998,15 @@ object MultimodalOps extends QueryPack {
   private val mediaSearchStreamCompacted = QueryDef(
     "q_stream_media_index_compact",
     (s, d) => {
-      import s.implicits._
       val log = streamMediaIndexLog(s, d)
-      val basePath = graft.Fs.artifactDir("stream_media_band_base", d)
+      val basePath = Fs.artifactDir("stream_media_band_base", d)
       s.read.parquet(log)
-        .select($"media_id", $"ph", $"band", $"bkey")
+        .select("media_id", "ph", "band", "bkey")
         .distinct()
         .coalesce(1)
         .write.mode("overwrite").parquet(basePath.toString)
-      probeTopK(s, d, indexRead(s, basePath.toString))
-        .orderBy($"probe_id", $"rnk")
+      probeTopK(s, d, Image, indexRead(s, basePath.toString))
+        .orderBy("probe_id", "rnk")
     },
     Some(searchOracleSql),
     "Stream-index compaction: the multi-generation signature log folded " +
@@ -910,83 +1014,30 @@ object MultimodalOps extends QueryPack {
       "q_sink_compaction layout rule); search over the compacted base " +
       "under the same full pixel-replay hash oracle")
 
-  private val mediaSearchIndexed = QueryDef(
-    "q_simsearch_media_index",
-    (s, d) => {
-      import s.implicits._
-      mediaTopKIndexed(s, d).orderBy($"probe_id", $"rnk")
-    },
-    Some(searchOracleSql),
-    "Perceptual top-k search over the PERSISTED band-signature index " +
-      "(LSM base + incremental delta generation, maintain pass hashes " +
-      "only the delta): probe hashes join the index read — the corpus " +
-      "is never re-hashed; same full pixel-replay hash oracle as " +
-      "q_simsearch_media")
+  private val mediaIndexForget = QueryDef(
+    "q_media_index_forget",
+    (s, d) => forgetSearch(s, d, Image),
+    Some(s"""WITH ${searchCtesWith(
+        s"AND NOT doc_id % ${ShardOps.ForgetMod} = ${ShardOps.ForgetRes}")}
+      SELECT CAST(probe_id AS BIGINT) AS probe_id,
+        CAST(row_number() OVER (PARTITION BY probe_id
+          ORDER BY hamming, neighbor_id) AS BIGINT) AS rnk,
+        CAST(neighbor_id AS BIGINT) AS neighbor_id, hamming
+      FROM shm QUALIFY rnk <= $TopK ORDER BY probe_id, rnk"""),
+    "RTBF propagation into the serving index: affected generations " +
+      "filtered IN PLACE (current artifact rows minus the delete set — " +
+      "survivors byte-carried, nothing re-hashed, repeated forgets " +
+      "compose) and swapped via dynamic partition overwrite; " +
+      "post-forget search hash-equal to the oracle's replay with " +
+      "deleted docs excluded from the searchable side")
 
+  // The image audit also pins the structural recall: the half-bright
+  // flips live in ONE grid column, hence in ONE column-major band, so a
+  // probe's source shares the other 3 bands and MUST be a candidate.
   private val mediaSearchAudit = QueryDef(
     "q_simsearch_media_audit",
-    (s, d) => {
-      import s.implicits._
-      // Shared frames are built ONCE and — r17 — materialized EAGERLY
-      // (cache + count): the r16 one-action broadcast fan-out raced the
-      // LAZY cache fills, so the heaviest shared subtrees computed
-      // twice concurrently (a per-job profile showed two ~2 s duplicate
-      // jobs per invocation). The INDEX side now reads the stamped serving-index
-      // artifact (VERDICT r16 task 2: share the encode subtree with the
-      // serving index) — the same deterministic encode+hash chain,
-      // hash-audited end-to-end by q_simsearch_media_index; the probe
-      // encode (bounded set) stays inline, and q_simsearch_media keeps
-      // the full inline corpus encode on the declared surface.
-      val (_, probes) = searchCorpus(s, d)
-      val psig = phSig(probes).cache(); psig.count()
-      val ibands = indexRead(s, mediaIndexDir(s, d)).cache(); ibands.count()
-      val isig = ibands.select($"neighbor_id".as("media_id"),
-        $"phi".as("ph")).distinct()
-      val cand = phBands(psig).toDF("probe_id", "php", "band", "bkey")
-        .hint("shuffle_hash")
-        .join(ibands, Seq("band", "bkey"))
-        .select($"probe_id", $"neighbor_id",
-          bit_count($"php".bitwiseXOR($"phi")).cast("long").as("hamming"))
-        .distinct()
-        .cache()
-      cand.count()
-      val banded = topKFrom(cand).cache(); banded.count()
-      // brute-force ground truth: probe hashes broadcast against the
-      // index (exact re-score shape — audit-only, probe-bounded); the
-      // exact top-K per probe comes from the bounded top_k_pairs heap
-      // (order identical to the rank window it replaces — hamming ASC,
-      // neighbor ASC via negated score; guide §2.3: no full-pair sort),
-      // materialized eagerly because TWO consumers (n_truth, overlap)
-      // would otherwise re-run the cross product concurrently
-      val brute = isig.toDF("neighbor_id", "phi")
-        .crossJoin(broadcast(psig.toDF("probe_id", "php")))
-        .select($"probe_id", $"neighbor_id",
-          bit_count($"php".bitwiseXOR($"phi")).cast("long").as("hamming"))
-        .groupBy($"probe_id")
-        .agg(graft.functions.TopKPairs
-          .top_k_pairs(-$"hamming", $"neighbor_id", TopK).as("tk"))
-        .select($"probe_id", explode($"tk").as("e"))
-        .select($"probe_id", $"e.id".as("neighbor_id"))
-        .cache()
-      brute.count()
-      val overlap = banded.select($"probe_id", $"neighbor_id")
-        .join(brute, Seq("probe_id", "neighbor_id"), "left_semi")
-      // structural recall: the half-bright flips live in ONE column (the
-      // boundary column), hence in ONE band (column mod 4), so a probe's
-      // source shares the other 3 bands and MUST be a candidate —
-      // pinned, not probabilistic (see candFrom)
-      val selfCand = cand
-        .filter($"neighbor_id" === $"probe_id" - ProbeOff)
-      psig.agg(count(lit(1)).as("n_probes"))
-        .crossJoin(broadcast(isig.agg(count(lit(1)).as("n_index"))))
-        .crossJoin(broadcast(brute.agg(count(lit(1)).as("n_truth"))))
-        .crossJoin(broadcast(banded.agg(count(lit(1)).as("n_found"))))
-        .crossJoin(broadcast(overlap.agg(count(lit(1)).as("n_overlap"))))
-        .crossJoin(broadcast(selfCand.agg(count(lit(1)).as("n_self_cand"))))
-        .select($"n_probes", $"n_index", $"n_truth", $"n_found", $"n_overlap",
-          $"n_self_cand",
-          ($"n_self_cand" === $"n_probes").cast("long").as("self_recall_ok"))
-    },
+    (s, d) => searchAudit(s, d, Image).withColumn("self_recall_ok",
+      (col("n_self_cand") === col("n_probes")).cast("long")),
     Some(s"""WITH $searchCtes,
       stk AS (SELECT probe_id, neighbor_id FROM (
           SELECT probe_id, neighbor_id, row_number() OVER (
@@ -1023,94 +1074,7 @@ object MultimodalOps extends QueryPack {
       "(column-band flips confined to the boundary band) all " +
       "oracle-recomputed by full replay")
 
-  // ------------------------------------------------ audio near-dup
-  // The WAV half of the multimodal dedup family (q_dedup_media covers
-  // BMP): temporal fingerprint (functions/AudioHash.scala — 65 probe
-  // points over the decoded PCM stream, one bit per adjacent-sample
-  // comparison, the dHash construction moved to the time axis), banded
-  // 4×16 bits, candidates exact-verified on the container-stripped
-  // sample stream. The planted corpus has byte-identical copies (found
-  // with exact_sample=1) and DC-offset variants (+64 per sample: sample
-  // bytes differ, every adjacent comparison — and so the fingerprint —
-  // provably preserved → found at hamming 0 with exact_sample=0, the
-  // case a byte-hash dedup structurally misses). Generator-formula WAVs
-  // mean DuckDB replays the ENTIRE path — samples, probe points, hash
-  // bits, band collisions, Hamming, stream equality — so this near-dup
-  // query gets a full hash oracle too.
-  //
-  // Scale posture: hash is a per-row codegen'd kernel over a bounded
-  // byte region; candidates come from the banded groupBy (never
-  // all-pairs); the sample-verify joins back only candidate ids with
-  // shuffle-hash build discipline (the mediaPairs rule).
-
-  /** DC offset applied to the planted audio variants (adds to every
-    * 16-bit sample's low byte; ASCII sample low bytes are ≤ 127, so the
-    * add never carries — a true DC shift, not a bit permutation). */
-  private[graft] val DcShift = BrightShift
-
-  /** +[[DcShift]] on every sample LOW byte (even data-chunk offsets).
-    * Callers must exclude empty-text payloads (their generator data
-    * bytes reach 255 and would wrap). */
-  private[graft] def dcShift(b: Array[Byte]): Array[Byte] = {
-    val g = graft.functions.AudioHash.wavData(b)
-    require(g != null, "DC-variant fixtures are well-formed WAVs")
-    val out = b.clone()
-    var i = g(0); val end = g(0) + g(1)
-    while (i < end) { out(i) = (out(i) + DcShift).toByte; i += 2 }
-    out
-  }
-
-  /** The audio-dedup corpus: every odd doc_id is a base WAV; doc_id%10
-    * == 5 adds a byte-identical copy, doc_id%14 == 7 a DC-offset
-    * variant (both odd, both encoded with the BASE id so the container
-    * params match). */
-  private[graft] def dedupAudioCorpus(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val docs = Tables.documents(s, d).filter($"doc_id" % 2 === 1)
-      .select($"doc_id", encode($"text", "UTF-8").as("tb"))
-      .as[(Long, Array[Byte])]
-    val base = docs.map { case (id, tb) => (id, MediaCodec.encodeWav(id, tb)) }
-    val exact = docs.filter(_._1 % 10 == 5)
-      .map { case (id, tb) => (id + ExactOff, MediaCodec.encodeWav(id, tb)) }
-    val dc = docs.filter(t => t._1 % 14 == 7 && t._2.nonEmpty)
-      .map { case (id, tb) =>
-        (id + BrightOff, dcShift(MediaCodec.encodeWav(id, tb))) }
-    base.union(exact).union(dc).toDF("media_id", "payload")
-  }
-
-  /** The audio near-dup pair set (also the audit's subject): banded
-    * fingerprint candidates, Hamming ≤ [[MaxHamming]], exact sample
-    * byte-verify flag per surviving pair — the mediaPairs plan with the
-    * audio kernels. */
-  private[graft] def audioPairs(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val media = dedupAudioCorpus(s, d)
-    val sigs = media
-      .select($"media_id",
-        graft.functions.AudioHash.audiohash64($"payload").as("ph"))
-      .filter($"ph".isNotNull)
-    val bands = sigs.select(struct($"media_id", $"ph").as("dn"),
-      posexplode(array((0 to 3).map(b =>
-        shiftrightunsigned($"ph", b * 16).bitwiseAND(lit(0xFFFFL))): _*)))
-      .withColumnsRenamed(Map("pos" -> "band", "col" -> "bkey"))
-    val cand = bands.groupBy($"band", $"bkey")
-      .agg(sort_array(collect_list($"dn")).as("docs"))
-      .select(graft.functions.OrderedPairs.ordered_pairs($"docs")
-        .as(Seq("id1", "ph1", "id2", "ph2")))
-      .select($"id1", $"id2",
-        bit_count($"ph1".bitwiseXOR($"ph2")).cast("int").as("hamming"))
-      .distinct()
-      .filter($"hamming" <= MaxHamming)
-    val smp = media.select($"media_id",
-      graft.functions.AudioHash.wav_samples($"payload").as("smp"))
-    cand
-      .join(smp.toDF("id1", "smp1").hint("shuffle_hash"), "id1")
-      .join(smp.toDF("id2", "smp2").hint("shuffle_hash"), "id2")
-      .select($"id1", $"id2", $"hamming",
-        ($"smp1" === $"smp2").cast("long").as("exact_sample"))
-      .orderBy($"id1", $"id2")
-  }
-
+  // ------------------------------------------------ audio queries
   /** Shared oracle CTE block: DuckDB replays the PCM data bytes from
     * the generator formulas (cyclic text fill; +DcShift on low bytes
     * for the DC rows), the 65 probe samples (signed LE 16-bit at
@@ -1183,7 +1147,7 @@ object MultimodalOps extends QueryPack {
 
   private val audioDedup = QueryDef(
     "q_dedup_audio",
-    (s, d) => audioPairs(s, d),
+    (s, d) => dedupPairs(s, d, Audio),
     Some(s"""WITH $audioCtes
       SELECT id1, id2, hamming, exact_sample FROM afp
       WHERE hamming <= $MaxHamming ORDER BY id1, id2"""),
@@ -1193,42 +1157,7 @@ object MultimodalOps extends QueryPack {
 
   private val audioDedupAudit = QueryDef(
     "q_dedup_audio_audit",
-    (s, d) => {
-      import s.implicits._
-      val media = dedupAudioCorpus(s, d)
-      val smp = media.select($"media_id",
-        graft.functions.AudioHash.wav_samples($"payload").as("smp"))
-      // ground truth discovered INDEPENDENTLY of the fingerprint path:
-      // xxhash64 buckets over the sample stream, full byte verify inside
-      val pk = smp.select($"media_id", xxhash64($"smp").as("pk"))
-      val gtCand = pk.select(struct($"media_id", $"pk").as("dn"), $"pk")
-        .groupBy($"pk").agg(sort_array(collect_list($"dn")).as("docs"))
-        .select(graft.functions.OrderedPairs.ordered_pairs($"docs")
-          .as(Seq("id1", "k1", "id2", "k2")))
-        .select($"id1", $"id2")
-      val gt = gtCand
-        .join(smp.toDF("id1", "smp1").hint("shuffle_hash"), "id1")
-        .join(smp.toDF("id2", "smp2").hint("shuffle_hash"), "id2")
-        .filter($"smp1" === $"smp2")
-        .select($"id1", $"id2")
-      val found = audioPairs(s, d).cache()
-      val missed = gt.join(found.select($"id1", $"id2"),
-        Seq("id1", "id2"), "left_anti")
-      val dc = Tables.documents(s, d)
-        .filter($"doc_id" % 14 === 7 && length($"text") > 0)
-        .select($"doc_id".as("id1"), ($"doc_id" + BrightOff).as("id2"))
-      val dcFound = dc.join(found.filter($"hamming" === 0),
-        Seq("id1", "id2"), "left_semi")
-      media.agg(count(lit(1)).as("n_media"))
-        .crossJoin(broadcast(gt.agg(count(lit(1)).as("n_exact_pairs"))))
-        .crossJoin(broadcast(found.agg(count(lit(1)).as("n_found_pairs"))))
-        .crossJoin(broadcast(missed.agg(count(lit(1)).as("n_missed"))))
-        .crossJoin(broadcast(dc.agg(count(lit(1)).as("n_dc_planted"))))
-        .crossJoin(broadcast(dcFound.agg(count(lit(1)).as("n_dc_found"))))
-        .select($"n_media", $"n_exact_pairs", $"n_found_pairs", $"n_missed",
-          ($"n_missed" === 0L).cast("long").as("recall_ok"),
-          $"n_dc_planted", $"n_dc_found")
-    },
+    (s, d) => dedupAudit(s, d, Audio),
     Some(s"""WITH $audioCtes,
       agt AS (
         SELECT a.mid AS id1, b.mid AS id2
@@ -1258,94 +1187,6 @@ object MultimodalOps extends QueryPack {
       "must be fully recalled (identical streams => identical bands — " +
       "structural); planted DC variants must land at Hamming 0 — every " +
       "scalar oracle-recomputed by full replay")
-
-  // ------------------------------------------- audio similarity search
-  // Completes the modality matrix (image/audio × dedup/search): top-k
-  // nearest WAVs by fingerprint Hamming for a bounded probe set. Probes
-  // are VOLUME-HALVED variants (every sample s → s/2, floor): halving
-  // preserves s_a > s_b except where the halves collide (|s_a − s_b| = 1
-  // boundaries), so probe→source distances land small-but-nonzero and
-  // graded by content — the realistic "same recording, different gain"
-  // query. Bits only flip 1→0 under halving (a > b ⇒ a/2 ≥ b/2), so
-  // hamming ≤ popcount(source hash); with 4×16 contiguous bands a probe
-  // at hamming ≤ 3 finds its source by pigeonhole — the audit reports
-  // (not pins) how the fixture lands. Full DuckDB replay as everywhere
-  // in this family: the sample transform is integer floor-halving of
-  // the generator formula's nonneg samples.
-  //
-  // Scale posture: identical to q_simsearch_media — codegen hash,
-  // (band, bkey) equi-join with the bounded probe side as shuffle-hash
-  // build, per-probe ranking window; brute force only in the audit.
-
-  /** Volume halving: every 16-bit sample s → s/2 (floor; fixture
-    * samples are non-negative — ASCII high bytes ≤ 127). */
-  private[graft] def halfVolume(b: Array[Byte]): Array[Byte] = {
-    val g = graft.functions.AudioHash.wavData(b)
-    require(g != null, "volume-variant fixtures are well-formed WAVs")
-    val out = b.clone()
-    var i = g(0); val end = g(0) + g(1)
-    while (i + 1 < end) {
-      val s = ((out(i) & 0xff) | ((out(i + 1) & 0xff) << 8)).toShort / 2
-      out(i) = (s & 0xff).toByte
-      out(i + 1) = ((s >> 8) & 0xff).toByte
-      i += 2
-    }
-    out
-  }
-
-  /** (index, probes) for the audio search corpus: index = every base
-    * WAV; probes = volume-halved variants of doc_id % 6 == 3 (all odd →
-    * WAVs), empty-text docs excluded (their generator samples go
-    * negative, where floor-vs-truncate halving diverges). */
-  private[graft] def audioSearchCorpus(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) = {
-    import s.implicits._
-    val docs = Tables.documents(s, d).filter($"doc_id" % 2 === 1)
-      .select($"doc_id", encode($"text", "UTF-8").as("tb"))
-      .as[(Long, Array[Byte])]
-    val idx = docs.map { case (id, tb) => (id, MediaCodec.encodeWav(id, tb)) }
-      .toDF("media_id", "payload")
-    val probes = docs.filter(t => t._1 % 6 == 3 && t._2.nonEmpty)
-      .map { case (id, tb) =>
-        (id + ProbeOff, halfVolume(MediaCodec.encodeWav(id, tb))) }
-      .toDF("media_id", "payload")
-    (idx, probes)
-  }
-
-  private def ahSig(media: DataFrame): DataFrame = {
-    import media.sparkSession.implicits._
-    media.select($"media_id",
-      graft.functions.AudioHash.audiohash64($"payload").as("ph"))
-      .filter($"ph".isNotNull)
-  }
-
-  /** 4×16-bit contiguous band explode (the audio-dedup banding). */
-  private def ahBands(sigs: DataFrame): DataFrame = {
-    import sigs.sparkSession.implicits._
-    sigs.select($"media_id", $"ph",
-      posexplode(array((0 to 3).map(b =>
-        shiftrightunsigned($"ph", b * 16).bitwiseAND(lit(0xFFFFL))): _*)))
-      .withColumnsRenamed(Map("pos" -> "band", "col" -> "bkey"))
-  }
-
-  private def audioCandFrom(psig: DataFrame, isig: DataFrame): DataFrame = {
-    import psig.sparkSession.implicits._
-    ahBands(psig).toDF("probe_id", "php", "band", "bkey")
-      .hint("shuffle_hash")
-      .join(ahBands(isig).toDF("neighbor_id", "phi", "band", "bkey"),
-        Seq("band", "bkey"))
-      .select($"probe_id", $"neighbor_id",
-        bit_count($"php".bitwiseXOR($"phi")).cast("long").as("hamming"))
-      .distinct()
-  }
-
-  private[graft] def audioCand(s: SparkSession, d: String): DataFrame = {
-    val (idx, probes) = audioSearchCorpus(s, d)
-    audioCandFrom(ahSig(probes), ahSig(idx))
-  }
-
-  private[graft] def audioTopK(s: SparkSession, d: String): DataFrame =
-    topKFrom(audioCand(s, d))
 
   /** Oracle CTE chain: generator samples (floor-halved for probes) →
     * 65 probes → bits → contiguous 16-bit bands (unpivoted + pivoted) →
@@ -1419,8 +1260,8 @@ object MultimodalOps extends QueryPack {
       FROM vcand c JOIN vbp x ON c.probe_id = x.mid
         JOIN vbp y ON c.neighbor_id = y.mid)"""
 
-  /** Shared by the per-run audio search and its persisted-index twin
-    * (same declared result). */
+  /** The banded-top-k oracle of the per-run and the persisted-index
+    * audio search (same declared result). */
   private def audioSearchOracleSql: String = s"""WITH $audioSearchCtes
       SELECT CAST(probe_id AS BIGINT) AS probe_id,
         CAST(row_number() OVER (PARTITION BY probe_id
@@ -1430,128 +1271,26 @@ object MultimodalOps extends QueryPack {
 
   private val audioSearch = QueryDef(
     "q_simsearch_audio",
-    (s, d) => {
-      import s.implicits._
-      audioTopK(s, d).orderBy($"probe_id", $"rnk")
-    },
+    (s, d) => topKFrom(searchCand(s, d, Audio)).orderBy("probe_id", "rnk"),
     Some(audioSearchOracleSql),
     "Audio top-k search: banded fingerprint candidates, exact Hamming " +
       "re-rank per probe; probes are volume-halved variants; DuckDB " +
       "replays samples->bits->bands->rank — full hash oracle")
 
-  // ------ persisted audio band index (r14 — the q_simsearch_media_index
-  // pattern on the WAV kernels; see that operator's comment for the
-  // design: LSM base + delta-only maintain, signatures carried next to
-  // band keys, probe-only hashing at search time).
-  /** The audio family's base/delta split — the property-tested
-    * [[GenerationLayout.AudioIndex]] rule (see its comment for why the
-    * plain HoldoutMod rule is vacuous on the odd-id slice: ea3ed50). */
-  private[graft] def audioDeltaSel: org.apache.spark.sql.Column =
-    GenerationLayout.AudioIndex.isDelta(col("doc_id"))
-
-  private def audioIndexSlice(s: SparkSession, d: String, delta: Boolean,
-      keep: org.apache.spark.sql.Column = lit(true)): DataFrame = {
-    import s.implicits._
-    val lay = GenerationLayout.AudioIndex
-    Tables.documents(s, d).filter(lay.slice($"doc_id"))
-      .filter(lay.genSlice($"doc_id", delta))
-      .filter(keep)
-      .select($"doc_id", encode($"text", "UTF-8").as("tb"))
-      .as[(Long, Array[Byte])]
-      .map { case (id, tb) => (id, MediaCodec.encodeWav(id, tb)) }
-      .toDF("media_id", "payload")
-  }
-
-  private def audioBandRows(slice: DataFrame): DataFrame =
-    ahBands(ahSig(slice)).toDF("media_id", "ph", "band", "bkey")
-
-  private[graft] def writeAudioIndexBase(s: SparkSession, d: String,
-      dir: String): Unit =
-    audioBandRows(audioIndexSlice(s, d, delta = false))
-      .withColumn("gen", lit(0))
-      .write.mode("overwrite").partitionBy("gen").parquet(dir)
-
-  private[graft] def appendAudioIndexDelta(s: SparkSession, d: String,
-      dir: String): Unit =
-    audioBandRows(audioIndexSlice(s, d, delta = true))
-      .withColumn("gen", lit(1))
-      .write.mode("append").partitionBy("gen").parquet(dir)
-
-  /** One-pass two-generation build for the forget query's SCRATCH store
-    * — the audio twin of [[buildMediaIndexStore]] (r16, guide §1.2). */
-  private[graft] def buildAudioIndexStore(s: SparkSession, d: String,
-      dir: String): Unit = {
-    import s.implicits._
-    val lay = GenerationLayout.AudioIndex
-    val slice = Tables.documents(s, d).filter(lay.slice($"doc_id"))
-      .select($"doc_id", encode($"text", "UTF-8").as("tb"))
-      .as[(Long, Array[Byte])]
-      .map { case (id, tb) => (id, MediaCodec.encodeWav(id, tb)) }
-      .toDF("media_id", "payload")
-    audioBandRows(slice)
-      .withColumn("gen", lay.genOfInt($"media_id"))
-      .write.mode("overwrite").partitionBy("gen").parquet(dir)
-  }
-
-  private[graft] def audioIndexDir(s: SparkSession, d: String): String =
-    graft.Fs.staged("audio_band_index", d,
-        graft.FixtureStamp.stamp("v1", d, "documents")) { dir =>
-      writeAudioIndexBase(s, d, dir.toString)
-      appendAudioIndexDelta(s, d, dir.toString)
-    }
-
-  /** Search over the persisted audio index — composed from the ONE
-    * audio search plan ([[audioProbeTopK]]) and the shared index read,
-    * mirroring [[mediaTopKIndexed]], so the declared search and the
-    * forget-path search can never drift (ADVICE r14). */
-  private[graft] def audioTopKIndexed(s: SparkSession, d: String)
-      : DataFrame =
-    audioProbeTopK(s, d, indexRead(s, audioIndexDir(s, d)))
-
-  /** Probe top-k over an arbitrary audio index relation — the audio
-    * twin of [[probeTopK]]. */
-  private def audioProbeTopK(s: SparkSession, d: String, ibands: DataFrame)
-      : DataFrame = {
-    import s.implicits._
-    val (_, probes) = audioSearchCorpus(s, d)
-    val cand = ahBands(ahSig(probes))
-      .toDF("probe_id", "php", "band", "bkey")
-      .hint("shuffle_hash")
-      .join(ibands, Seq("band", "bkey"))
-      .select($"probe_id", $"neighbor_id",
-        bit_count($"php".bitwiseXOR($"phi")).cast("long").as("hamming"))
-      .distinct()
-    topKFrom(cand)
-  }
-
-  // RTBF propagation into the audio index — a delete must reach EVERY
-  // derived artifact, and the WAV fingerprints are one (see
-  // q_media_index_forget: blast radius from the layout rule, rewrite =
-  // the shared filter-in-place engine — the artifact's current rows
-  // minus the delete set, so repeated forgets compose; r16).
-  private[graft] def forgetAudioIndex(s: SparkSession, d: String,
-      dir: String, deletePred: org.apache.spark.sql.Column): Unit = {
-    import s.implicits._
-    val lay = GenerationLayout.AudioIndex
-    val media = Tables.documents(s, d).filter(lay.slice($"doc_id"))
-    val affected = media.filter(deletePred)
-      .select(lay.genOfInt($"doc_id").as("gen"))
-      .distinct().as[Int].collect().toSeq.sorted
-    IndexForget.filterInPlace(s, dir, "media_id",
-      Seq("media_id", "ph", "band", "bkey"), affected,
-      media.filter(deletePred).select($"doc_id".as("media_id")))
-  }
+  private val audioSearchIndexed = QueryDef(
+    "q_simsearch_audio_index",
+    (s, d) => probeTopK(s, d, Audio, indexRead(s, indexDir(s, d, Audio)))
+      .orderBy("probe_id", "rnk"),
+    Some(audioSearchOracleSql),
+    "Audio top-k search over the PERSISTED fingerprint band index (LSM " +
+      "base + incremental delta, maintain hashes only the delta slice): " +
+      "probe hashes join the index read — the corpus is never re-hashed " +
+      "at search time; same full sample-replay hash oracle as " +
+      "q_simsearch_audio")
 
   private val audioIndexForget = QueryDef(
     "q_audio_index_forget",
-    (s, d) => {
-      import s.implicits._
-      val dir = graft.Fs.artifactDir("audio_band_index_forget", d).toString
-      buildAudioIndexStore(s, d, dir) // one encode+fingerprint pass (r16)
-      forgetAudioIndex(s, d, dir,
-        col("doc_id") % ShardOps.ForgetMod === ShardOps.ForgetRes)
-      audioProbeTopK(s, d, indexRead(s, dir)).orderBy($"probe_id", $"rnk")
-    },
+    (s, d) => forgetSearch(s, d, Audio),
     Some(s"""WITH ${audioSearchCtesWith(
         s"AND NOT doc_id % ${ShardOps.ForgetMod} = ${ShardOps.ForgetRes}")}
       SELECT CAST(probe_id AS BIGINT) AS probe_id,
@@ -1565,70 +1304,9 @@ object MultimodalOps extends QueryPack {
       "partition overwrite; post-forget search hash-equal to the " +
       "replay with deleted docs excluded from the searchable side")
 
-  private val audioSearchIndexed = QueryDef(
-    "q_simsearch_audio_index",
-    (s, d) => {
-      import s.implicits._
-      audioTopKIndexed(s, d).orderBy($"probe_id", $"rnk")
-    },
-    Some(audioSearchOracleSql),
-    "Audio top-k search over the PERSISTED fingerprint band index (LSM " +
-      "base + incremental delta, maintain hashes only the delta slice): " +
-      "probe hashes join the index read — the corpus is never re-hashed " +
-      "at search time; same full sample-replay hash oracle as " +
-      "q_simsearch_audio")
-
   private val audioSearchAudit = QueryDef(
     "q_simsearch_audio_audit",
-    (s, d) => {
-      import s.implicits._
-      // Same r17 rework as the media audit: eager shared frames (the
-      // lazy caches raced under the one-action broadcast fan-out and
-      // the fingerprint pass ran twice concurrently), index side from
-      // the stamped serving artifact (hash-audited by
-      // q_simsearch_audio_index; q_simsearch_audio keeps the inline
-      // corpus fingerprint on the declared surface), brute-force exact
-      // top-K via the bounded heap instead of a full-pair rank window.
-      val (_, probes) = audioSearchCorpus(s, d)
-      val psig = ahSig(probes).cache(); psig.count()
-      val ibands = indexRead(s, audioIndexDir(s, d)).cache(); ibands.count()
-      val isig = ibands.select($"neighbor_id".as("media_id"),
-        $"phi".as("ph")).distinct()
-      val cand = ahBands(psig).toDF("probe_id", "php", "band", "bkey")
-        .hint("shuffle_hash")
-        .join(ibands, Seq("band", "bkey"))
-        .select($"probe_id", $"neighbor_id",
-          bit_count($"php".bitwiseXOR($"phi")).cast("long").as("hamming"))
-        .distinct()
-        .cache()
-      cand.count()
-      val banded = topKFrom(cand).cache(); banded.count()
-      val brute = isig.toDF("neighbor_id", "phi")
-        .crossJoin(broadcast(psig.toDF("probe_id", "php")))
-        .select($"probe_id", $"neighbor_id",
-          bit_count($"php".bitwiseXOR($"phi")).cast("long").as("hamming"))
-        .groupBy($"probe_id")
-        .agg(graft.functions.TopKPairs
-          .top_k_pairs(-$"hamming", $"neighbor_id", TopK).as("tk"))
-        .select($"probe_id", explode($"tk").as("e"))
-        .select($"probe_id", $"e.id".as("neighbor_id"))
-        .cache()
-      brute.count()
-      val overlap = banded.select($"probe_id", $"neighbor_id")
-        .join(brute, Seq("probe_id", "neighbor_id"), "left_semi")
-      // how the pigeonhole landed on THIS corpus (reported, not pinned:
-      // halving's flip count is content-dependent)
-      val selfCand = cand
-        .filter($"neighbor_id" === $"probe_id" - ProbeOff)
-      psig.agg(count(lit(1)).as("n_probes"))
-        .crossJoin(broadcast(isig.agg(count(lit(1)).as("n_index"))))
-        .crossJoin(broadcast(brute.agg(count(lit(1)).as("n_truth"))))
-        .crossJoin(broadcast(banded.agg(count(lit(1)).as("n_found"))))
-        .crossJoin(broadcast(overlap.agg(count(lit(1)).as("n_overlap"))))
-        .crossJoin(broadcast(selfCand.agg(count(lit(1)).as("n_self_cand"))))
-        .select($"n_probes", $"n_index", $"n_truth", $"n_found",
-          $"n_overlap", $"n_self_cand")
-    },
+    (s, d) => searchAudit(s, d, Audio),
     Some(s"""WITH $audioSearchCtes,
       vtk AS (SELECT probe_id, neighbor_id FROM (
           SELECT probe_id, neighbor_id, row_number() OVER (

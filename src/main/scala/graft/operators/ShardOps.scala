@@ -329,13 +329,9 @@ object ShardOps extends QueryPack {
   private def hasGen1(dir: String): Boolean = {
     val root = java.nio.file.Paths.get(dir)
     if (!java.nio.file.Files.isDirectory(root)) return false
-    val shards = java.nio.file.Files.list(root)
-    try {
-      import scala.jdk.CollectionConverters._
-      shards.iterator().asScala
-        .filter(_.getFileName.toString.startsWith("shard="))
-        .exists(p => java.nio.file.Files.isDirectory(p.resolve("gen=1")))
-    } finally shards.close()
+    graft.Fs.list(root)
+      .filter(_.getFileName.toString.startsWith("shard="))
+      .exists(p => java.nio.file.Files.isDirectory(p.resolve("gen=1")))
   }
 
   /** Step 1 of [[compactShards]]: land the merged generation. */
@@ -376,16 +372,10 @@ object ShardOps extends QueryPack {
   /** Step 2 of [[compactShards]]: the compacted rows are durable — drop
     * the superseded delta directories (file-level delete; gen-0 files
     * are never touched). */
-  private[graft] def vacuumDelta(dir: String): Unit = {
-    val root = java.nio.file.Paths.get(dir)
-    val shards = java.nio.file.Files.list(root)
-    try {
-      import scala.jdk.CollectionConverters._
-      shards.iterator().asScala
-        .filter(_.getFileName.toString.startsWith("shard="))
-        .foreach(p => graft.Fs.deleteRecursively(p.resolve("gen=1")))
-    } finally shards.close()
-  }
+  private[graft] def vacuumDelta(dir: String): Unit =
+    graft.Fs.list(java.nio.file.Paths.get(dir))
+      .filter(_.getFileName.toString.startsWith("shard="))
+      .foreach(p => graft.Fs.deleteRecursively(p.resolve("gen=1")))
 
   /** The compacted logical view: untouched full base rows ∪ the
     * re-packed generation; the stale base tail is shadowed by the

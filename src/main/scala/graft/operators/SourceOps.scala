@@ -3,7 +3,6 @@ package graft.operators
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
 
 import graft.{QueryDef, QueryPack, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -353,7 +352,7 @@ object SourceOps extends QueryPack {
       s.read.parquet(small).coalesce(4)
         .write.mode("overwrite").parquet(compact)
       def nFiles(p: String): Long =
-        Files.list(Paths.get(p)).iterator().asScala
+        graft.Fs.list(Paths.get(p))
           .count(f => f.toString.endsWith(".parquet")).toLong
       val agg = s.read.parquet(compact)
         .groupBy($"event_type")

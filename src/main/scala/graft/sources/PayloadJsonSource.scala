@@ -3,7 +3,6 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 import java.util.{Map => JMap}
-import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.SparkSession
@@ -100,9 +99,8 @@ object PayloadJsonSource {
   private[sources] def listFiles(path: String): Array[String] = {
     val dir = Paths.get(path)
     if (!Files.isDirectory(dir)) Array.empty[String]
-    else Files.list(dir).iterator().asScala
-      .filter(p => p.toString.endsWith(".json"))
-      .map(_.toString).toArray.sorted
+    else graft.Fs.list(dir).map(_.toString).filter(_.endsWith(".json"))
+      .toArray.sorted
   }
 
   private[sources] def readerFactory: PartitionReaderFactory =

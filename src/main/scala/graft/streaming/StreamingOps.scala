@@ -1576,14 +1576,8 @@ object StreamingOps extends QueryPack {
       batchId: Long): Option[DataFrame] = {
     import s.implicits._
     val root = java.nio.file.Paths.get(dir)
-    val hasParts = java.nio.file.Files.isDirectory(root) && {
-      val l = java.nio.file.Files.list(root)
-      try {
-        import scala.jdk.CollectionConverters._
-        l.iterator().asScala
-          .exists(_.getFileName.toString.startsWith("shard="))
-      } finally l.close()
-    }
+    val hasParts = java.nio.file.Files.isDirectory(root) &&
+      graft.Fs.list(root).exists(_.getFileName.toString.startsWith("shard="))
     if (!hasParts) None
     else Some(s.read.schema(pipeShardSchema).parquet(dir)
       // partition-pruned: earlier batches AND any merged generation —
@@ -2267,22 +2261,16 @@ object StreamingOps extends QueryPack {
   private[graft] def storeShardGens(dir: String): Seq[(Long, Long)] = {
     val root = java.nio.file.Paths.get(dir)
     if (!java.nio.file.Files.isDirectory(root)) return Nil
-    val shards = java.nio.file.Files.list(root)
-    try {
-      import scala.jdk.CollectionConverters._
-      shards.iterator().asScala
-        .filter(_.getFileName.toString.startsWith("shard="))
-        .flatMap { p =>
-          val sh = p.getFileName.toString.stripPrefix("shard=").toLong
-          val l = java.nio.file.Files.list(p)
-          try l.iterator().asScala.flatMap { g =>
-            g.getFileName.toString.stripPrefix("gen=").toLongOption
-              .filter(_ => g.getFileName.toString.startsWith("gen="))
-              .map((sh, _))
-          }.toList
-          finally l.close()
-        }.toList
-    } finally shards.close()
+    graft.Fs.list(root)
+      .filter(_.getFileName.toString.startsWith("shard="))
+      .flatMap { p =>
+        val sh = p.getFileName.toString.stripPrefix("shard=").toLong
+        graft.Fs.list(p).flatMap { g =>
+          g.getFileName.toString.stripPrefix("gen=").toLongOption
+            .filter(_ => g.getFileName.toString.startsWith("gen="))
+            .map((sh, _))
+        }
+      }
   }
 
   /** Merge generations split into marker-committed vs crash debris
@@ -2322,15 +2310,10 @@ object StreamingOps extends QueryPack {
     * batch gens strictly before superseded merges. */
   private def vacuumGens(dir: String, dead: Seq[Long]): Unit = {
     if (dead.isEmpty) return
-    val root = java.nio.file.Paths.get(dir)
-    val shards = java.nio.file.Files.list(root)
-    try {
-      import scala.jdk.CollectionConverters._
-      val dirs = shards.iterator().asScala
-        .filter(_.getFileName.toString.startsWith("shard=")).toSeq
-      dead.sorted.foreach(g =>
-        dirs.foreach(p => graft.Fs.deleteRecursively(p.resolve(s"gen=$g"))))
-    } finally shards.close()
+    val dirs = graft.Fs.list(java.nio.file.Paths.get(dir))
+      .filter(_.getFileName.toString.startsWith("shard="))
+    dead.sorted.foreach(g =>
+      dirs.foreach(p => graft.Fs.deleteRecursively(p.resolve(s"gen=$g"))))
     dead.filter(_ >= CompactedGenBase)
       .foreach(g => java.nio.file.Files.deleteIfExists(mergeMarker(dir, g)))
   }

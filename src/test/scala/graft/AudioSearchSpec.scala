@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.{AudioHash, MediaCodec}
-import graft.operators.MultimodalOps
+import graft.operators.{GenerationLayout, MultimodalOps}
 
 /** q_simsearch_audio contract: volume halving only clears fingerprint
   * bits (never sets them), the banded plan never degenerates to
@@ -66,7 +66,7 @@ class AudioSearchSpec extends SparkTestBase {
       .collect()
     // the candidate stream is the right place to assert recall — top-k
     // may legitimately displace a source behind 5 closer neighbors
-    val cand = MultimodalOps.audioCand(spark, sf)
+    val cand = MultimodalOps.searchCand(spark, sf, MultimodalOps.Audio)
       .select($"probe_id", $"neighbor_id")
       .as[(Long, Long)].collect().toSet
     var checked = 0
@@ -99,10 +99,11 @@ class AudioSearchSpec extends SparkTestBase {
           .map("%02x".format(_)).mkString
       }.toMap
     }
-    MultimodalOps.writeAudioIndexBase(spark, sf, base.toString)
+    MultimodalOps.writeIndexBase(spark, sf, MultimodalOps.Audio, base.toString)
     val gen0 = md5s()
     assert(gen0.nonEmpty && gen0.keySet.forall(_.contains("gen=0")))
-    MultimodalOps.appendAudioIndexDelta(spark, sf, base.toString)
+    MultimodalOps.appendIndexDelta(spark, sf, MultimodalOps.Audio,
+      base.toString)
     val after = md5s()
     gen0.foreach { case (p, sig) =>
       assert(after.get(p) === Some(sig), s"base index file rewritten: $p")
@@ -143,16 +144,18 @@ class AudioSearchSpec extends SparkTestBase {
           .map("%02x".format(_)).mkString
       }.toMap
     }
-    MultimodalOps.writeAudioIndexBase(spark, sf, base.toString)
-    MultimodalOps.appendAudioIndexDelta(spark, sf, base.toString)
+    MultimodalOps.writeIndexBase(spark, sf, MultimodalOps.Audio, base.toString)
+    MultimodalOps.appendIndexDelta(spark, sf, MultimodalOps.Audio,
+      base.toString)
     val before = md5s()
     // confined to generation 1 (the audio delta slice), a strict subset
-    val pred = MultimodalOps.audioDeltaSel && $"doc_id" % 3 === 0
+    val pred = GenerationLayout.AudioIndex.isDelta($"doc_id") && $"doc_id" % 3 === 0
     val deleted = Tables.documents(spark, sf)
       .filter($"doc_id" % 2 === 1).filter(pred)
       .select($"doc_id").collect().map(_.getLong(0)).toSet
     assert(deleted.nonEmpty, "fixture delete set is empty — vacuous")
-    MultimodalOps.forgetAudioIndex(spark, sf, base.toString, pred)
+    MultimodalOps.forgetIndex(spark, sf, MultimodalOps.Audio,
+      base.toString, pred)
     val after = md5s()
     before.filter(_._1.contains("gen=0")).foreach { case (p, sig) =>
       assert(after.get(p) === Some(sig),

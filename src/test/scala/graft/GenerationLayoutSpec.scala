@@ -94,17 +94,11 @@ class GenerationLayoutSpec extends SparkTestBase {
   }
 
   test("the in-engine rules are the layout rules: ShardStore matches " +
-      "the family HoldoutMod split; AudioIndex matches the shipped " +
-      "audioDeltaSel on its slice") {
+      "the family HoldoutMod split") {
     val in = ids(0L, 1000L)
     val shardDiff = in.filter(
       GenerationLayout.ShardStore.isDelta($"doc_id") =!=
         ($"doc_id" % BpeOps.HoldoutMod === 0)).count()
     assert(shardDiff === 0)
-    val audioDiff = in
-      .filter(GenerationLayout.AudioIndex.slice($"doc_id"))
-      .filter(GenerationLayout.AudioIndex.isDelta($"doc_id") =!=
-        graft.operators.MultimodalOps.audioDeltaSel).count()
-    assert(audioDiff === 0)
   }
 }

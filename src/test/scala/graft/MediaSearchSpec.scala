@@ -71,7 +71,7 @@ class MediaSearchSpec extends SparkTestBase {
       assert(byRank.length <= MultimodalOps.TopK)
     }
     // the structural guarantee, end to end on the fixture corpus
-    val cand = MultimodalOps.mediaCand(spark, sf)
+    val cand = MultimodalOps.searchCand(spark, sf, MultimodalOps.Image)
       .filter($"neighbor_id" === $"probe_id" - MultimodalOps.ProbeOff)
       .count()
     val nProbes = Tables.documents(spark, sf)
@@ -97,10 +97,11 @@ class MediaSearchSpec extends SparkTestBase {
           .map("%02x".format(_)).mkString
       }.toMap
     }
-    MultimodalOps.writeMediaIndexBase(spark, sf, base.toString)
+    MultimodalOps.writeIndexBase(spark, sf, MultimodalOps.Image, base.toString)
     val gen0 = md5s()
     assert(gen0.nonEmpty && gen0.keySet.forall(_.contains("gen=0")))
-    MultimodalOps.appendMediaIndexDelta(spark, sf, base.toString)
+    MultimodalOps.appendIndexDelta(spark, sf, MultimodalOps.Image,
+      base.toString)
     val after = md5s()
     gen0.foreach { case (p, sig) =>
       assert(after.get(p) === Some(sig), s"base index file rewritten: $p")
@@ -176,8 +177,9 @@ class MediaSearchSpec extends SparkTestBase {
           .map("%02x".format(_)).mkString
       }.toMap
     }
-    MultimodalOps.writeMediaIndexBase(spark, sf, base.toString)
-    MultimodalOps.appendMediaIndexDelta(spark, sf, base.toString)
+    MultimodalOps.writeIndexBase(spark, sf, MultimodalOps.Image, base.toString)
+    MultimodalOps.appendIndexDelta(spark, sf, MultimodalOps.Image,
+      base.toString)
     val before = md5s()
     // delete set confined to generation 1 (the HoldoutMod slice): the
     // layout rule says ONLY gen=1 may rewrite
@@ -187,7 +189,8 @@ class MediaSearchSpec extends SparkTestBase {
       .filter($"doc_id" % 2 === 0).filter(pred)
       .select($"doc_id").collect().map(_.getLong(0)).toSet
     assert(deleted.nonEmpty, "fixture delete set is empty — vacuous")
-    MultimodalOps.forgetMediaIndex(spark, sf, base.toString, pred)
+    MultimodalOps.forgetIndex(spark, sf, MultimodalOps.Image,
+      base.toString, pred)
     val after = md5s()
     before.filter(_._1.contains("gen=0")).foreach { case (p, sig) =>
       assert(after.get(p) === Some(sig),

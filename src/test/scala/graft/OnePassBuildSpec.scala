@@ -5,11 +5,12 @@ import org.apache.spark.sql.DataFrame
 
 /** r16 optimization pins: the one-pass two-generation store builds
   * (`buildAppendStoreTo`, `buildPostingStore`,
-  * `build{Media,Audio,Embed}IndexStore`) must produce EXACTLY the rows
-  * the phased base-then-delta builds produced — same content, same
-  * (gen=0, gen=1) partition layout. The phased helpers remain the
-  * maintain-path contract; these tests pin that the forget queries'
-  * single-pass fixture builds did not change what lands in the store. */
+  * `MultimodalOps.buildIndexStore`, `buildEmbedIndexStore`) must
+  * produce EXACTLY the rows the phased base-then-delta builds produced
+  * — same content, same (gen=0, gen=1) partition layout. The phased
+  * helpers remain the maintain-path contract; these tests pin that the
+  * forget queries' single-pass fixture builds did not change what lands
+  * in the store. */
 class OnePassBuildSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -57,20 +58,20 @@ class OnePassBuildSpec extends SparkTestBase {
 
   test("media band index: one-pass build == phased build") {
     val phased = scratch("media_phased")
-    MultimodalOps.writeMediaIndexBase(spark, sf, phased)
-    MultimodalOps.appendMediaIndexDelta(spark, sf, phased)
+    MultimodalOps.writeIndexBase(spark, sf, MultimodalOps.Image, phased)
+    MultimodalOps.appendIndexDelta(spark, sf, MultimodalOps.Image, phased)
     val onepass = scratch("media_onepass")
-    MultimodalOps.buildMediaIndexStore(spark, sf, onepass)
+    MultimodalOps.buildIndexStore(spark, sf, MultimodalOps.Image, onepass)
     assert(rows(onepass) === rows(phased))
     assert(genDirs(onepass) === Set("gen=0", "gen=1"))
   }
 
   test("audio band index: one-pass build == phased build") {
     val phased = scratch("audio_phased")
-    MultimodalOps.writeAudioIndexBase(spark, sf, phased)
-    MultimodalOps.appendAudioIndexDelta(spark, sf, phased)
+    MultimodalOps.writeIndexBase(spark, sf, MultimodalOps.Audio, phased)
+    MultimodalOps.appendIndexDelta(spark, sf, MultimodalOps.Audio, phased)
     val onepass = scratch("audio_onepass")
-    MultimodalOps.buildAudioIndexStore(spark, sf, onepass)
+    MultimodalOps.buildIndexStore(spark, sf, MultimodalOps.Audio, onepass)
     assert(rows(onepass) === rows(phased))
     assert(genDirs(onepass) === Set("gen=0", "gen=1"))
   }

@@ -101,9 +101,11 @@ class PeriodicLifecycleSpec extends SparkTestBase {
     val docs = Tables.documents(spark, sf).filter($"doc_id" % 2 === 0)
       .select($"doc_id").as[Long].collect().toSet
     repeatedForgetByIds("media_index", scratch("plc-media"),
-      d => { MultimodalOps.writeMediaIndexBase(spark, sf, d)
-             MultimodalOps.appendMediaIndexDelta(spark, sf, d) },
-      (d, p) => MultimodalOps.forgetMediaIndex(spark, sf, d, p),
+      d => { MultimodalOps.writeIndexBase(spark, sf, MultimodalOps.Image, d)
+             MultimodalOps.appendIndexDelta(spark, sf,
+               MultimodalOps.Image, d) },
+      (d, p) =>
+        MultimodalOps.forgetIndex(spark, sf, MultimodalOps.Image, d, p),
       idxIds("media_id"), docs)
   }
 
@@ -111,9 +113,11 @@ class PeriodicLifecycleSpec extends SparkTestBase {
     val docs = Tables.documents(spark, sf).filter($"doc_id" % 2 === 1)
       .select($"doc_id").as[Long].collect().toSet
     repeatedForgetByIds("audio_index", scratch("plc-audio"),
-      d => { MultimodalOps.writeAudioIndexBase(spark, sf, d)
-             MultimodalOps.appendAudioIndexDelta(spark, sf, d) },
-      (d, p) => MultimodalOps.forgetAudioIndex(spark, sf, d, p),
+      d => { MultimodalOps.writeIndexBase(spark, sf, MultimodalOps.Audio, d)
+             MultimodalOps.appendIndexDelta(spark, sf,
+               MultimodalOps.Audio, d) },
+      (d, p) =>
+        MultimodalOps.forgetIndex(spark, sf, MultimodalOps.Audio, d, p),
       idxIds("media_id"), docs)
   }
 

@@ -393,10 +393,10 @@ class ScaleTechniquesSpec extends SparkTestBase {
       // gen-1 offset snapshot (≤ NShards rows; a DELIBERATE driver
       // snapshot — cache() was not one, ADVICE r13)
       "operators/ShardOps.scala" -> 3,
-      // media/audio index forget: each collects the affected-generation
-      // set (≤ generation count by the layout rule — the forgetDocs
-      // class)
-      "operators/MultimodalOps.scala" -> 2,
+      // band-index forget (images and audio share it): the affected-
+      // generation set (≤ generation count by the layout rule — the
+      // forgetDocs class)
+      "operators/MultimodalOps.scala" -> 1,
       // posting-index forget: the affected-generation set (≤ 2 rows by
       // the layout rule — the forgetDocs class)
       "operators/SearchOps.scala" -> 1,

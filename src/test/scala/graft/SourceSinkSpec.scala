@@ -63,6 +63,25 @@ class SourceSinkSpec extends SparkTestBase {
     }
   }
 
+  test("planning a payload scan closes its directory listing") {
+    import java.nio.file.{Files, Paths}
+    val fds = Paths.get("/proc/self/fd")
+    assume(Files.isDirectory(fds), "needs /proc/self/fd to count descriptors")
+    val zone = Paths.get("target", "test-fd-zone").toAbsolutePath
+    graft.Fs.deleteRecursively(zone); Files.createDirectories(zone)
+    (0 until 3).foreach(i => Files.write(zone.resolve(s"p_$i.json"),
+      s"""{"spider_ts": $i, "price_data": {"USD": 1, "time": $i}}"""
+        .getBytes("UTF-8")))
+    // each call loads a fresh table, so each plan lists the zone; no job runs
+    def plan(): Int =
+      api.BitcoinEtl.ingest(spark, zone.toString).price.rdd.getNumPartitions
+    plan()
+    val before = fds.toFile.list().length
+    (0 until 100).foreach(_ => plan())
+    val grown = fds.toFile.list().length - before
+    assert(grown < 20, s"$grown more open descriptors after 100 planned scans")
+  }
+
   test("payload MicroBatchStream equals the batch scan and rate-limits per trigger") {
     val stream = q("q_stream_source_payload")
       .select($"kind", $"spider_ts", $"usd", $"server_ts", $"hashrate", $"difficulty")

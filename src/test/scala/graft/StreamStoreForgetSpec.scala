@@ -28,7 +28,8 @@ class StreamStoreForgetSpec extends SparkTestBase {
     // whole-shard directory drop (%8==4 would delete the entire shard)
     val pred = col("doc_id") % (2L * ShardOps.NShards) === 4
     // the delete set must be non-vacuous in BOTH generations or the
-    // frozen-offset path is silently untested (the audioDeltaSel class)
+    // frozen-offset path is silently untested (the vacuous-delta class
+    // GenerationLayout records: ea3ed50)
     val kept = StreamingOps.pipelineKeptDocs(spark, sf)
     val byGen = kept.filter(pred)
       .groupBy(GenerationLayout.streamGenOf($"doc_id", sp).as("gen"))
